@@ -43,37 +43,39 @@ def cmd_process(args) -> int:
     from pyspark.sql import functions as F
 
     docs = read_xml_corpus(spark, args.corpus)
-    # Two diffs with different scopes (matching the reference's retry +
-    # cleanup semantics):
+    # Two scopes (matching the reference's retry + cleanup semantics):
     #  * statuses for on-disk docs diff against the PROCESSED state only,
     #    so a previously-FAILED doc shows added/modified and is retried
     #    every run (reference state.is_processed consults only the
     #    processed map, state.py:77-81);
-    #  * the removed set diffs against the FULL state, so deleting a
-    #    failed doc's file still cleans up its state row.
-    def as_manifest(df):
-        return (
-            df.select("doc_id", F.col("hash").alias("source_hash"))
-            .withColumn("dataset_name", F.lit(None).cast("string"))
-            .withColumn("relative_path", F.lit(None).cast("string"))
-        )
-
-    alive_diff = manifest_diff(docs, as_manifest(state.processed()))
+    #  * the removed set is the FULL state minus the on-disk doc ids, so
+    #    deleting a failed doc's file still cleans up its state row. An
+    #    anti-join on doc_id alone lets the binaryFile scan of that branch
+    #    skip reading and hashing the file contents.
+    alive_diff = manifest_diff(
+        docs,
+        state.processed().select(
+            "doc_id",
+            F.col("hash").alias("source_hash"),
+            F.lit(None).cast("string").alias("dataset_name"),
+            F.lit(None).cast("string").alias("relative_path"),
+        ),
+    )
     docs_with_status = docs.drop("status").join(
         alive_diff.filter(F.col("status") != "removed").select("doc_id", "status"),
         "doc_id",
         "left",
     )
     removed = (
-        manifest_diff(docs, as_manifest(state.read()))
-        .filter(F.col("status") == "removed")
+        state.read()
+        .join(docs.select("doc_id"), "doc_id", "left_anti")
         .select(
             "doc_id",
-            "dataset_name",
-            "relative_path",
+            F.lit(None).cast("string").alias("dataset_name"),
+            F.lit(None).cast("string").alias("relative_path"),
             F.lit(None).cast("string").alias("xml"),
-            "source_hash",
-            "status",
+            F.col("hash").alias("source_hash"),
+            F.lit("removed").alias("status"),
         )
     )
     docs_with_status = docs_with_status.select(removed.columns).unionByName(removed)

@@ -2,17 +2,31 @@
 
 The reference's fixed 4-stage DAG — sync → identify → process
 (chunk→embed→index) → cleanup (reference:
-orchestration/pipeline_orchestrator.py:116-173) — re-expressed as one
-declarative Spark job per stage:
+orchestration/pipeline_orchestrator.py:116-173) — commits state after
+every document (state.py:43-102, pipeline_orchestrator.py:316-331).
+Here a pass commits once, the way a Structured Streaming trigger
+commits one micro-batch, in three driver actions:
 
-  identify   anti-join manifest vs state           (ops 3-8)
-  process    chunk UDF → embed UDF → store upsert  (ops 9-24)
-  cleanup    store DELETE + state remove           (ops 26, 34)
+  decide   ONE aggregate over a cached per-document decision table —
+           (doc_id, hash, chunk count, error, removed?) for every changed
+           or removed document, from identify (ops 3-8) and the cached
+           chunk UDF output. The driver gets the counts and the id lists
+           of the failed, zero-chunk and removed documents; the processed
+           rows stay distributed, since on a first load or a `force` run
+           they are the whole corpus.
+  store    ONE bucket rewrite: upsert of the embedded chunks plus delete
+           of the zero-chunk, failed and removed documents (ops 9-26).
+  state    ONE snapshot: the processed, failed and removed sets merged
+           into the state table (op 34).
+
+A crash between the store rewrite and the state commit leaves the old
+state, so the next pass selects the same documents and converges: the
+rewrite replaces what it wrote and the deletes find nothing.
 
 Failure semantics match the reference's per-document contract
 (file_processing_service.py:48-131): a poison document surfaces as an
 error row from the chunk UDF, lands in the failed side of the state
-table, contributes no chunks, and is retried on the next hash change.
+table, keeps no chunks, and is retried on the next hash change.
 A document yielding zero chunks is a *success* with no chunks
 ("obsolete law", file_processing_service.py:79-89).
 """
@@ -32,6 +46,7 @@ from lovdata_pipeline_spark.operators.incremental import (
     identify_changed,
     identify_removed,
 )
+from lovdata_pipeline_spark.session import driver_rows
 from lovdata_pipeline_spark.sources.chunk_store import ChunkStore
 from lovdata_pipeline_spark.sources.state_store import StateStore
 
@@ -72,6 +87,7 @@ def run_pipeline(
     """
     config = config or PipelineConfig()
     at = now or datetime.now(timezone.utc).isoformat()
+    spark = documents.sparkSession
 
     manifest = filter_datasets(
         documents.select("doc_id", "dataset_name", "relative_path", "source_hash", "status"),
@@ -86,95 +102,87 @@ def run_pipeline(
 
     docs = documents.join(to_process.select("doc_id"), "doc_id", "left_semi")
 
-    # --- process: chunk → split poison docs → embed → upsert ---------------
+    # --- decide: chunk, then ONE job for the per-document outcome ----------
     chunked = chunk_documents_df(docs, config.chunk).cache()
+    decisions = None
     try:
-        failed_docs = (
-            chunked.filter(F.col("error").isNotNull())
-            .select("document_id", "error")
-            .distinct()
+        per_doc = chunked.groupBy(F.col("document_id").alias("doc_id")).agg(
+            F.count(F.when(F.col("error").isNull(), 1)).alias("n_chunks"),
+            F.min("error").alias("error"),
         )
-        good_chunks = chunked.filter(F.col("error").isNull())
-
-        enriched = embed_chunks_df(
-            good_chunks,
-            provider=provider or mock_hash_provider(config.embedding_dims),
-            model_name=config.embedding_model,
-            embedded_at=at,
-            batch_size=config.embed_batch_size,
-            dims=config.embedding_dims,
-        )
-        store.upsert_chunks(enriched)
-
-        # A reprocessed doc that now yields ZERO chunks (valid "obsolete
-        # law", file_processing_service.py:79-89) contributes no rows to
-        # the upsert, so its old chunks must be deleted explicitly or
-        # they'd be served forever under the new processed hash.
-        zero_chunk_docs = (
-            to_process.select(F.col("doc_id").alias("document_id"))
-            .join(
-                chunked.select("document_id").distinct(), "document_id", "left_anti"
-            )
-        )
-        # unconditional: delete_documents already no-ops on empty input
-        # (touched-buckets probe comes back empty) — a count() guard here
-        # evaluated the same anti-join twice per run (r10 review)
-        store.delete_documents(zero_chunk_docs)
-
-        # --- state MERGE (the commit log, op 34) ---------------------------
-        failed_keyed = (
-            to_process.select(F.col("doc_id"), F.col("source_hash").alias("hash"))
-            .join(failed_docs.withColumnRenamed("document_id", "doc_id"), "doc_id")
-        )
-        ok_docs = to_process.select(
-            "doc_id", F.col("source_hash").alias("hash")
-        ).join(failed_keyed.select("doc_id"), "doc_id", "left_anti")
-
-        # ONE job for both tallies (r13, guide §1.2 "don't compute things
-        # twice"): n_failed must equal failed_keyed.count() (inner-join
-        # row count = Σ per-doc distinct-error rows) and n_ok must equal
-        # ok_docs.count() (docs with no error row) — both fall out of one
-        # left join + aggregate over the cached chunked frame, where the
-        # two separate counts each re-ran the to_process join lineage.
-        err_counts = failed_docs.groupBy("document_id").agg(
-            F.count(F.lit(1)).alias("_nerr")
-        )
-        tallies = (
-            to_process.select("doc_id")
-            .join(
-                err_counts.withColumnRenamed("document_id", "doc_id"),
+        decisions = (
+            to_process.select("doc_id", F.col("source_hash").alias("hash"))
+            .join(per_doc, "doc_id", "left")
+            .select(
                 "doc_id",
-                "left",
+                "hash",
+                F.coalesce("n_chunks", F.lit(0).cast("long")).alias("n_chunks"),
+                "error",
+                F.lit(False).alias("removed"),
             )
-            .agg(
-                F.sum(F.coalesce("_nerr", F.lit(0))).alias("nf"),
-                F.count(F.when(F.col("_nerr").isNull(), 1)).alias("nk"),
+            .unionByName(
+                removed.select(
+                    "doc_id",
+                    F.col("source_hash").alias("hash"),
+                    F.lit(0).cast("long").alias("n_chunks"),
+                    F.lit(None).cast("string").alias("error"),
+                    F.lit(True).alias("removed"),
+                )
             )
-            .first()
+            .cache()
         )
-        n_failed = int(tallies["nf"] or 0)
-        n_ok = int(tallies["nk"] or 0)
-        if n_ok:
-            state.mark_processed(ok_docs, at)
-        if n_failed:
-            # Mirror the reference's per-doc failure cleanup
-            # (file_processing_service.py cleanup branch): a previously
-            # processed doc whose NEW version fails to parse must not keep
-            # serving its stale old-version chunks — delete them before
-            # marking failed, or `validate` (state vs store) reports the
-            # store inconsistent.
-            store.delete_documents(
-                failed_keyed.select(F.col("doc_id").alias("document_id"))
+        is_ok = ~F.col("removed") & F.col("error").isNull()
+        # One row per processed document stays distributed (on a first
+        # load or a `force` run that is the whole corpus); only the counts
+        # and the exceptions — failed, zero-chunk and removed documents —
+        # come to the driver.
+        summary = decisions.agg(
+            F.count(F.when(is_ok, 1)).alias("n_ok"),
+            F.count(F.when(F.col("n_chunks") > 0, 1)).alias("n_chunked"),
+            F.collect_list(
+                F.when(
+                    (F.col("n_chunks") == 0) | F.col("error").isNotNull(),
+                    F.struct("doc_id", "hash", "error", "removed"),
+                )
+            ).alias("rest"),
+        ).first()
+        n_ok = summary.n_ok
+        failed = [(r.doc_id, r.hash, r.error) for r in summary.rest if r.error is not None]
+        gone = [r.doc_id for r in summary.rest if r.removed]
+        failed_ids = [d for d, _, _ in failed]
+        # A reprocessed doc that now yields ZERO chunks contributes no
+        # upsert rows, and a previously processed doc whose NEW version
+        # fails must not keep serving its old chunks (the reference's
+        # cleanup branch): both are deleted with the removed docs in the
+        # same rewrite, or `validate` reports the store stale.
+        delete = [r.doc_id for r in summary.rest]
+
+        # --- store: embed → ONE bucket rewrite ------------------------------
+        if summary.n_chunked or delete:
+            good = chunked.filter(F.col("error").isNull())
+            if failed_ids:
+                good = good.filter(~F.col("document_id").isin(failed_ids))
+            enriched = embed_chunks_df(
+                good,
+                provider=provider or mock_hash_provider(config.embedding_dims),
+                model_name=config.embedding_model,
+                embedded_at=at,
+                batch_size=config.embed_batch_size,
+                dims=config.embedding_dims,
             )
-            state.mark_failed(failed_keyed, at)
+            store.upsert_chunks(enriched, delete=delete)
+
+        # --- state: ONE snapshot (the commit log, op 34) --------------------
+        if n_ok or failed or gone:
+            state.mark_processed(
+                decisions.filter(is_ok).select("doc_id", "hash"),
+                at,
+                failed=driver_rows(spark, failed, "doc_id string, hash string, error string"),
+                removed=driver_rows(spark, [(d,) for d in gone], "doc_id string"),
+            )
     finally:
         chunked.unpersist()
+        if decisions is not None:
+            decisions.unpersist()
 
-    # --- cleanup removed (op 26) -------------------------------------------
-    removed_ids = removed.select(F.col("doc_id").alias("document_id"))
-    n_removed = removed_ids.count()
-    if n_removed:
-        store.delete_documents(removed_ids)
-        state.remove(removed.select("doc_id"))
-
-    return PipelineResult(processed=n_ok, failed=n_failed, removed=n_removed)
+    return PipelineResult(processed=n_ok, failed=len(failed), removed=len(gone))

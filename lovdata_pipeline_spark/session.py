@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -49,3 +49,12 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def driver_rows(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """A DataFrame over a few rows held on the driver, in one partition
+    (none when ``rows`` is empty). ``createDataFrame(list)`` slices even
+    an empty list into ``defaultParallelism`` Python tasks: ~2 s per
+    action at 32 slices on a 4-core host, against ~0.1-0.3 s here."""
+    sc = spark.sparkContext
+    return spark.createDataFrame(sc.parallelize(rows, 1) if rows else sc.emptyRDD(), schema)

@@ -23,12 +23,14 @@ positional per document.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from lovdata_pipeline_spark.schemas import ENRICHED_CHUNKS_SCHEMA
+from lovdata_pipeline_spark.session import driver_rows
 
 _BUCKET = "bucket"
 # NOTE: built as a fresh StructType — StructType.add mutates in place and
@@ -174,7 +176,7 @@ class ChunkStore:
         return F.pmod(F.xxhash64("document_id"), F.lit(self.n_buckets)).cast("int")
 
     def _empty(self) -> DataFrame:
-        df = self.spark.createDataFrame([], ENRICHED_CHUNKS_SCHEMA)
+        df = driver_rows(self.spark, [], ENRICHED_CHUNKS_SCHEMA)
         return df.withColumn(_BUCKET, F.lit(0).cast("int")).limit(0)
 
     def read(self) -> DataFrame:
@@ -182,15 +184,15 @@ class ChunkStore:
             return self._empty()
         return self.spark.read.schema(_STORED_SCHEMA).parquet(self.root)
 
-    def _write_buckets(self, df: DataFrame, materialized: bool = False) -> None:
-        # The rewrite plan reads the same files it replaces, so cut lineage
-        # first (localCheckpoint materializes the survivors); with Delta this
-        # whole method is a single MERGE and the checkpoint disappears.
-        # ``materialized=True`` skips it when the caller already holds a
-        # checkpoint of ``df`` (delete_documents — checkpointing twice
-        # doubled every delete's materialization I/O, r10 review).
-        if not materialized:
-            df = df.localCheckpoint(eager=True)
+    def _buckets_of(self, doc_ids: list[str]) -> list[int]:
+        """The buckets ``doc_ids`` hash into: one single-task job over the
+        ids, without touching the store."""
+        if not doc_ids:
+            return []
+        ids = driver_rows(self.spark, [(d,) for d in doc_ids], "document_id string")
+        return sorted({r[0] for r in ids.select(self._bucket_col()).collect()})
+
+    def _write_buckets(self, df: DataFrame) -> None:
         # Dynamic overwrite: only partitions present in `df` are replaced.
         (
             df.repartition(_BUCKET)
@@ -212,95 +214,107 @@ class ChunkStore:
 
             meta.write_text(_json.dumps({"n_buckets": self.n_buckets}))
 
+    def _rewrite(self, incoming: DataFrame | None, drop: list[str]) -> int:
+        """The one mutation path: every bucket that ``incoming`` writes to
+        or that stores a ``drop`` document is read once, loses the stored
+        rows of the incoming and dropped documents, gains ``incoming``, and
+        is written back in one dynamic overwrite. Untouched buckets are
+        neither read nor written. Returns the stored rows dropped for
+        ``drop`` ids."""
+        if not any(Path(self.root).glob(f"{_BUCKET}=*")):
+            # First load into an EMPTY store (r13): nothing to drop or merge,
+            # and the write reads no store files, so the probe, the incoming
+            # cache and the lineage cut are pure overhead — the chunk→embed
+            # output is evaluated exactly ONCE, by the write itself (an empty
+            # incoming writes no partitions).
+            if incoming is not None:
+                self._write_buckets(incoming.select(*[f.name for f in _STORED_SCHEMA.fields]))
+            return 0
+        # Cache the incoming side: the probe AND the rewrite each read it,
+        # and upstream is typically the whole chunk→embed Python path —
+        # with a paid embedding provider a second evaluation is double the
+        # API calls, not just double compute.
+        if incoming is not None:
+            incoming = incoming.cache()
+        try:
+            # ONE probe job: the buckets incoming writes to, plus the stored
+            # hits of the drop ids. The layout invariant (every document
+            # lives in bucket pmod(xxhash64(document_id), n_buckets)) prunes
+            # the hit scan to the drop ids' own buckets.
+            probes = []
+            if incoming is not None:
+                probes.append(incoming.select(_BUCKET, F.lit(0).alias("_hit")))
+            if drop:
+                probes.append(
+                    self.read()
+                    .filter(
+                        F.col(_BUCKET).isin(self._buckets_of(drop))
+                        & F.col("document_id").isin(drop)
+                    )
+                    .select(_BUCKET, F.lit(1).alias("_hit"))
+                )
+            if not probes:
+                return 0
+            probe = probes[0] if len(probes) == 1 else probes[0].unionByName(probes[1])
+            rows = probe.groupBy(_BUCKET).agg(F.sum("_hit").alias("_n")).collect()
+            touched = sorted(r[_BUCKET] for r in rows)
+            if not touched:
+                return 0
+            dropped = sum(r["_n"] for r in rows)
+
+            keep = self.read().filter(F.col(_BUCKET).isin(touched))
+            if drop:
+                keep = keep.filter(~F.col("document_id").isin(drop))
+            if incoming is not None:
+                keep = keep.join(
+                    incoming.select("document_id").distinct(), "document_id", "left_anti"
+                ).unionByName(incoming.select(*keep.columns))
+            # The rewrite plan reads the same files it replaces, so cut
+            # lineage first (localCheckpoint materializes the result); with
+            # Delta this whole method is a single MERGE and the checkpoint
+            # disappears.
+            keep = keep.localCheckpoint(eager=True)
+            before = {b: self._bucket_files(b) for b in touched}
+            self._write_buckets(keep)
+            # Dynamic overwrite never writes a partition that ended up empty,
+            # so a fully-emptied bucket keeps its old files — it is exactly
+            # a touched bucket whose files the write did not replace. Drop
+            # it (the analog of the reference unlinking emptied JSONL files,
+            # jsonl_vector_store.py:104-117).
+            import shutil
+
+            emptied = [b for b in touched if before[b] and self._bucket_files(b) == before[b]]
+            for b in emptied:
+                shutil.rmtree(Path(self.root) / f"{_BUCKET}={b}", ignore_errors=True)
+            if emptied:
+                self.spark.catalog.refreshByPath(self.root)
+            return dropped
+        finally:
+            if incoming is not None:
+                incoming.unpersist()
+
+    def _bucket_files(self, bucket: int) -> set[str]:
+        return {p.name for p in (Path(self.root) / f"{_BUCKET}={bucket}").glob("*.parquet")}
+
     # -- mutations (op 24 upsert / op 26 delete) ------------------------------
 
-    def upsert_chunks(self, chunks: DataFrame) -> None:
-        """Replace all chunks of the incoming documents, insert the rest.
+    def upsert_chunks(self, chunks: DataFrame, delete: Iterable[str] = ()) -> None:
+        """Replace all chunks of the incoming documents, insert the rest,
+        and delete every chunk of the ``delete`` documents — one bucket
+        rewrite for the lot.
 
         Touched buckets are recomputed as (survivors ∪ incoming) and
         atomically swapped; untouched buckets are not read or written.
         """
-        # Cache the incoming side: the touched-bucket probe AND the write
-        # below each materialize it, and upstream is typically the whole
-        # chunk→embed Python path — without the cache that pipeline runs
-        # twice per upsert. With a real (paid, rate-limited) embedding
-        # provider that is double the API calls, not just double compute.
-        incoming = chunks.withColumn(_BUCKET, self._bucket_col())
-        if not any(Path(self.root).glob(f"{_BUCKET}=*")):
-            # First load into an EMPTY store (r13, guide §5/§1.2): there
-            # are no survivors to merge and the write plan reads no store
-            # files, so the touched-bucket probe, the incoming cache AND
-            # the lineage-cut checkpoint (which guards read-what-you-
-            # overwrite) are all pure overhead — the chunk→embed output
-            # is evaluated exactly ONCE, by the write itself (an empty
-            # incoming writes no partitions, the same no-op as before).
-            self._write_buckets(
-                incoming.select(*[f.name for f in _STORED_SCHEMA.fields]),
-                materialized=True,
-            )
-            return
-        incoming = incoming.cache()
-        try:
-            touched = [r[_BUCKET] for r in incoming.select(_BUCKET).distinct().collect()]
-            if not touched:
-                return
-            existing = self.read().filter(F.col(_BUCKET).isin(touched))
-            survivors = existing.join(
-                incoming.select("document_id").distinct(), "document_id", "left_anti"
-            )
-            self._write_buckets(survivors.unionByName(incoming.select(*survivors.columns)))
-        finally:
-            incoming.unpersist()
+        self._rewrite(chunks.withColumn(_BUCKET, self._bucket_col()), list(delete))
 
     def delete_documents(self, doc_ids: DataFrame) -> int:
         """DELETE WHERE document_id IN (...); returns deleted count
         (contract: vector_store.py:29-41)."""
-        # Materialize the id set ONCE (r14 ADVICE): pipeline callers pass
-        # join-heavy frames (failed_keyed, zero_chunk_docs), and the four
-        # downstream consumers — the bucket probe, the semi-join, the hit
-        # count, and the keep rewrite — would each re-run that join work
-        # otherwise. localCheckpoint is the single evaluation; everything
-        # below reads the materialized blocks.
-        ids = doc_ids.select("document_id").distinct().localCheckpoint(eager=True)
-        # Bucket-prune the probe FROM THE IDS (r13, guide §6 / the class's
-        # own point-lookup doctrine): the layout invariant — every stored
-        # document lives in bucket pmod(xxhash64(document_id), n_buckets),
-        # enforced on write and data-confirmed on legacy opens — means the
-        # candidate buckets are computable without touching the store. An
-        # empty delete set (the common per-run pipeline case) now costs
-        # one tiny job over the ids instead of a full store scan, and a
-        # real delete scans only its candidate buckets.
-        cand = [
-            r["_b"]
-            for r in ids.select(self._bucket_col().alias("_b")).distinct().collect()
-        ]
-        if not cand:
-            return 0
-        store = self.read().filter(F.col(_BUCKET).isin(cand))
-        hit = store.join(ids, "document_id", "left_semi")
-        touched = [r[_BUCKET] for r in hit.select(_BUCKET).distinct().collect()]
-        if not touched:
-            return 0
-        n = hit.count()
-        # Materialize BEFORE the overwrite — the lazy plan references the
-        # very files the write replaces.
-        keep = (
-            store.filter(F.col(_BUCKET).isin(touched))
-            .join(ids, "document_id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        self._write_buckets(keep, materialized=True)
-        # Dynamic overwrite never writes a partition that ended up empty, so
-        # a fully-emptied bucket would keep its old files — drop it explicitly
-        # (the analog of the reference unlinking emptied JSONL files,
-        # jsonl_vector_store.py:104-117).
-        import shutil
-
-        remaining = {r[_BUCKET] for r in keep.select(_BUCKET).distinct().collect()}
-        for b in set(touched) - remaining:
-            shutil.rmtree(Path(self.root) / f"{_BUCKET}={b}", ignore_errors=True)
-        self.spark.catalog.refreshByPath(self.root)
-        return n
+        # a delete set is small by contract: collected once to the driver,
+        # it prunes the probe to its buckets and filters the rewrite
+        ids = [r[0] for r in doc_ids.select("document_id").distinct().collect()]
+        return self._rewrite(None, ids)
 
     # NOTE on file counts: no compaction op is needed in this layout.
     # Every mutation rewrites its touched buckets *wholesale* (dynamic

@@ -6,8 +6,10 @@ pipeline_orchestrator.py:316-331). At 100 TB scale that is a Delta/
 Iceberg table; without Delta in this container we emulate the part that
 matters — atomic snapshot replacement with readers never seeing a
 partial write — via versioned snapshot directories and a monotonically
-increasing version number. Each mutation (mark_processed / mark_failed /
-remove) is a MERGE expressed as DataFrame ops + one new snapshot.
+increasing version number. Each mutation is a MERGE expressed as
+DataFrame ops + one new snapshot; ``mark_processed`` takes a whole
+pass's processed, failed and removed sets so a pass commits once, the
+way a Structured Streaming trigger commits one micro-batch.
 
 State stays small (one row per document), so snapshots are cheap; on a
 cluster this class would be swapped for `MERGE INTO` on a Delta table
@@ -17,11 +19,13 @@ with identical call sites.
 from __future__ import annotations
 
 import shutil
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from lovdata_pipeline_spark.schemas import STATE_SCHEMA
+from lovdata_pipeline_spark.session import driver_rows
 
 _PREFIX = "v_"
 
@@ -52,7 +56,7 @@ class StateStore:
     def read(self) -> DataFrame:
         versions = self._versions()
         if not versions:
-            return self.spark.createDataFrame([], STATE_SCHEMA)
+            return driver_rows(self.spark, [], STATE_SCHEMA)
         return self.spark.read.schema(STATE_SCHEMA).parquet(
             str(self.root / f"{_PREFIX}{versions[-1]}")
         )
@@ -74,41 +78,52 @@ class StateStore:
 
     # -- MERGE-style mutations ----------------------------------------------
 
-    def _merge(self, updates: DataFrame) -> None:
-        """Upsert by doc_id: incoming rows win (last-writer-wins MERGE)."""
-        current = self.read()
-        merged = current.join(updates.select("doc_id"), "doc_id", "left_anti").unionByName(
-            updates
-        )
-        self._commit(merged)
-
-    def mark_processed(self, docs: DataFrame, at: str) -> None:
-        """docs: (doc_id, hash). Clears any prior failed row (state.py:83-92)."""
-        self._merge(
-            docs.select(
-                "doc_id",
-                "hash",
-                F.lit("processed").alias("status"),
-                F.lit(None).cast("string").alias("error"),
-                F.lit(at).alias("at"),
+    def mark_processed(
+        self,
+        docs: DataFrame | None,
+        at: str | None,
+        failed: DataFrame | None = None,
+        removed: DataFrame | None = None,
+    ) -> None:
+        """A whole pass's state change as one MERGE and one snapshot.
+        docs: (doc_id, hash), marked processed — clearing any prior failed
+        row (state.py:83-92); failed: (doc_id, hash, error), marked failed;
+        removed: (doc_id), dropped (state.py:99-102). Incoming rows replace
+        the current row of their doc_id (last-writer-wins)."""
+        updates = []
+        if docs is not None:
+            updates.append(
+                docs.select(
+                    "doc_id",
+                    "hash",
+                    F.lit("processed").alias("status"),
+                    F.lit(None).cast("string").alias("error"),
+                    F.lit(at).alias("at"),
+                )
             )
-        )
+        if failed is not None:
+            updates.append(
+                failed.select(
+                    "doc_id", "hash", F.lit("failed").alias("status"), "error", F.lit(at).alias("at")
+                )
+            )
+        keys = [u.select("doc_id") for u in updates]
+        if removed is not None:
+            keys.append(removed.select("doc_id"))
+        if not keys:
+            return
+        merged = self.read().join(reduce(DataFrame.unionByName, keys), "doc_id", "left_anti")
+        for u in updates:
+            merged = merged.unionByName(u)
+        self._commit(merged)
 
     def mark_failed(self, docs: DataFrame, at: str) -> None:
         """docs: (doc_id, hash, error)."""
-        self._merge(
-            docs.select(
-                "doc_id",
-                "hash",
-                F.lit("failed").alias("status"),
-                "error",
-                F.lit(at).alias("at"),
-            )
-        )
+        self.mark_processed(None, at, failed=docs)
 
     def remove(self, doc_ids: DataFrame) -> None:
         """doc_ids: (doc_id). DELETE FROM state WHERE doc_id IN (...)."""
-        self._commit(self.read().join(doc_ids.select("doc_id"), "doc_id", "left_anti"))
+        self.mark_processed(None, None, removed=doc_ids)
 
     # -- queries --------------------------------------------------------------
 

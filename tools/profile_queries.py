@@ -1,14 +1,14 @@
-"""r14 optimization-round profiler: time individual registry queries
-with the bench's exact methodology (noop sink, median of reps, cache
-clearing between reps) and dump their ``explain("formatted")`` plans.
+"""Optimization-round profiler: time individual registry queries with
+the bench's exact methodology (noop sink, median of reps, cache clearing
+between reps) and dump their ``explain("formatted")`` plans.
 
 Usage:
-    python tools/profile_r14.py [--reps N] [--tag before|after] [--plans]
-        [--sf-dir DIR] query [query ...]
+    python tools/profile_queries.py --round rNN [--reps N] [--tag before|after]
+        [--plans] [--sf-dir DIR] query [query ...]
 
 Prints one JSON line: {"queries": {name: median_sec}, "spread": {...},
 "reps": N, "sf_dir": ...}. With --plans, writes
-plans/r14/<query>_<tag>.txt for each query.
+plans/<round>/<query>_<tag>.txt for each query.
 
 This is a measurement tool only — the graded bench contract lives in
 bench.py and is unchanged.
@@ -22,7 +22,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from lovdata_pipeline_spark.queries import QUERIES
 from lovdata_pipeline_spark.session import get_spark
@@ -31,6 +32,7 @@ from lovdata_pipeline_spark.session import get_spark
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
+    ap.add_argument("--round", required=True, help="round tag, e.g. r15: plans go to plans/<round>/")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--tag", default="before")
     ap.add_argument("--plans", action="store_true")
@@ -39,10 +41,8 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r14"
-    )
-    spark = get_spark("profile_r14")
+    plans_dir = os.path.join(ROOT, "plans", args.round)
+    spark = get_spark(f"profile_{args.round}")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
 
     from lovdata_pipeline_spark.operators.packing import release_offsets_caches
