@@ -18,8 +18,11 @@ near-duplicate mass rather than n².
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
+from lovdata_pipeline_spark.operators.skew import max_broadcast_rows
 from lovdata_pipeline_spark.operators.textstats import _clean_split
+from lovdata_pipeline_spark.session import driver_rows
 
 # --------------------------------------------------------------------------
 # exact
@@ -383,9 +386,10 @@ def minhash_lsh_pairs(
     disables.
 
     Shingles are xxhash64-compressed to longs first (8-byte shuffle keys;
-    Jaccard is collision-immune in practice — see ngram_jaccard_pairs),
-    and the shingle cache is released before returning via an eager
-    checkpoint of the (small) result.
+    Jaccard is collision-immune in practice — see ngram_jaccard_pairs).
+    The (small) result is ``cache()``d and materialized by one
+    ``count()``, after which the shingle cache is released; the cached
+    result keeps its lineage, so a lost block is recomputed.
     """
     rows_per_band = num_hashes // bands
     sh = hashed_word_shingles(docs, text_col, id_col, n).cache()
@@ -736,6 +740,35 @@ def simhash_near_duplicates(
 # --------------------------------------------------------------------------
 
 
+def _union_find_components(edges) -> list[tuple]:
+    """(node, component minimum, is_survivor) for every node of an edge
+    list, by union-find: each union links the larger root under the
+    smaller, so a root is its component's minimum id. ``find`` is
+    iterative (no recursion limit on long chains): it walks to the
+    root, then points every node on the walked path straight at it."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    rows = []
+    for v in sorted(parent):
+        root = find(v)
+        rows.append((v, root, v == root))
+    return rows
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "doc_a",
@@ -746,26 +779,43 @@ def connected_components(
 
     Pair emitters (minhash/simhash/jaccard/cosine) find EDGES; production
     dedup needs the transitive closure — if A≈B and B≈C, exactly one of
-    {A,B,C} survives even though (A,C) was never emitted. component_id is
-    the minimum doc id reachable from each node (deterministic), and the
-    survivor is the node equal to its component id.
+    {A,B,C} survives even though (A,C) was never emitted. One row per
+    node that appears in any pair; component_id is the minimum doc id
+    reachable from it (deterministic), and the survivor is the node
+    equal to its component id. Ids are typed like the input id columns.
 
-    Algorithm (r4, replacing plain O(diameter) label propagation —
-    r3 VERDICT #3): min-label propagation WITH per-round pointer jumping
-    (path halving). Each round computes label'(v) = min over v and its
-    neighbors of their labels, then shortcuts label''(v) =
-    label'(label'(v)) — the pointer-doubling step that collapses label
-    chains geometrically, so a path component of n nodes (the
-    pathological templated-boilerplate chain) converges in O(log n)
-    rounds instead of n (pinned: a 5000-node path converges within 15
-    rounds by test_connected_components_path_graph_log_rounds).
+    Two regimes, chosen by the edge count alone, against the driver-side
+    row bound every small-by-contract side uses
+    (``skew.max_broadcast_rows()``, ``SPARK_GRAFT_MAX_BROADCAST_ROWS``,
+    default 1e6):
 
-    Correctness invariants: labels only decrease, label(v) ≤ v, and
-    label(v) is always the id of a node in v's component (propagation
-    reads neighbors; jumping reads the label's own label — both stay in
-    the component). At fixpoint labels are edge-constant and the
-    component minimum labels itself, so the contract — component_id =
-    min reachable id — is unchanged, as is the recursive-CTE oracle.
+    - **Small graph (≤ bound edges) — driver finish.** The first action
+      is ``limit(bound + 1).collect()`` of the edge list; the collected
+      size IS the bound check, so no separate count runs. Union-find on
+      the driver links each root toward the smaller one (the root is
+      the component minimum) and compresses paths iteratively; the rows
+      come back through ``session.driver_rows``. Near-duplicate pair
+      graphs are this size in practice (a few edges per duplicate
+      cluster), and this path runs one Spark job instead of two per
+      label-propagation round. It needs no checkpoint: the result's
+      lineage starts at rows the driver holds, so a partition lost with
+      an executor is rebuilt from them.
+    - **Large graph (> bound edges) — distributed.** Min-label
+      propagation WITH per-round pointer jumping (path halving). Each
+      round computes label'(v) = min over v and its neighbors of their
+      labels, then shortcuts label''(v) = label'(label'(v)) — the
+      pointer-doubling step that collapses label chains geometrically,
+      so a path component of n nodes (the pathological
+      templated-boilerplate chain) converges in O(log n) rounds instead
+      of n (pinned: a 5000-node path converges within 15 rounds by
+      test_connected_components_path_graph_log_rounds).
+
+    Correctness invariants of the distributed loop: labels only
+    decrease, label(v) ≤ v, and label(v) is always the id of a node in
+    v's component (propagation reads neighbors; jumping reads the
+    label's own label — both stay in the component). At fixpoint labels
+    are edge-constant and the component minimum labels itself, so both
+    regimes meet the same contract, as does the recursive-CTE oracle.
 
     Each round is one equi-join + aggregate (propagation) and one
     self-join on the label table (the jump). One driver action per round
@@ -788,6 +838,18 @@ def connected_components(
     sym = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     ).unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+    bound = max_broadcast_rows()
+    edges = pairs.select(id_a, id_b).limit(bound + 1).collect()
+    if len(edges) <= bound:
+        id_type = sym.schema["src"].dataType
+        schema = StructType(
+            [
+                StructField("doc_id", id_type),
+                StructField("component_id", id_type),
+                StructField("is_survivor", BooleanType()),
+            ]
+        )
+        return driver_rows(pairs.sparkSession, _union_find_components(edges), schema)
     labels = (
         sym.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
     ).localCheckpoint(eager=False)  # r13: round 1's convergence count is

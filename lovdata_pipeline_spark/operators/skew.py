@@ -13,6 +13,8 @@ plain join, shuffle skew reduced by ~buckets×.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -117,6 +119,13 @@ def _first_node(plan: str, names: tuple[str, ...]) -> int | None:
     return None
 
 
+def max_broadcast_rows() -> int:
+    """The driver-side row bound for a side that is small by contract
+    (``SPARK_GRAFT_MAX_BROADCAST_ROWS``, default 1e6 rows): the most
+    rows a caller may broadcast or collect to the driver."""
+    return int(os.environ.get("SPARK_GRAFT_MAX_BROADCAST_ROWS", "1000000"))
+
+
 def bounded_broadcast(df: DataFrame, max_rows: int | None = None):
     """Materialize a "rare by contract" frame once, verify the contract,
     and return (frame, broadcastable: bool) — r14 VERDICT Next #7.
@@ -135,15 +144,14 @@ def bounded_broadcast(df: DataFrame, max_rows: int | None = None):
     contract-respecting corpus the only added cost is the capped count
     over cached blocks, and join strategies are unchanged.
 
-    ``SPARK_GRAFT_MAX_BROADCAST_ROWS`` sizes the bound (default 1e6
-    rows — at the ~100-byte span/needle row shapes here that is
-    ~100 MB, inside the session's 64 MB auto threshold × safety 2).
+    ``max_broadcast_rows()`` sizes the bound (default 1e6 rows — at
+    the ~100-byte span/needle row shapes here that is ~100 MB, inside
+    the session's 64 MB auto threshold × safety 2).
     """
-    import os
     import warnings
 
     if max_rows is None:
-        max_rows = int(os.environ.get("SPARK_GRAFT_MAX_BROADCAST_ROWS", "1000000"))
+        max_rows = max_broadcast_rows()
     cp = df.localCheckpoint(eager=True)
     n = cp.limit(max_rows + 1).count()
     if n > max_rows:

@@ -847,7 +847,9 @@ def dedup_simhash(spark, sf_dir):
 
 def dedup_components(spark, sf_dir):
     """Survivor selection: MinHash near-dup pairs → connected components
-    (label propagation to fixpoint) → one survivor (min id) per cluster.
+    (union-find on the driver when the pair graph fits the broadcast
+    bound, else label propagation to fixpoint) → one survivor (min id)
+    per cluster.
     The step production dedup needs beyond pair emission: if A≈B and
     B≈C, exactly one of {A,B,C} survives although (A,C) was never
     emitted. Oracle: recursive-CTE transitive closure over the same

@@ -358,13 +358,16 @@ def test_connected_components_transitive_closure(spark):
     assert sum(r["is_survivor"] for r in rows.values()) == 2
 
 
-def test_connected_components_diameter_guard(spark):
+def test_connected_components_diameter_guard(spark, monkeypatch):
     """Non-convergence within max_iterations must raise, not silently
-    under-merge (partial labels would drop duplicates)."""
+    under-merge (partial labels would drop duplicates). A bound of 0
+    forces the distributed label-propagation loop — the driver finish
+    never iterates."""
     import pytest as _pytest
 
     from lovdata_pipeline_spark.operators.dedup import connected_components
 
+    monkeypatch.setenv("SPARK_GRAFT_MAX_BROADCAST_ROWS", "0")
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], "doc_a long, doc_b long"
     )
@@ -374,13 +377,106 @@ def test_connected_components_diameter_guard(spark):
     assert {r["component_id"] for r in rows} == {0}
 
 
+def test_connected_components_chain_driver_finish(spark):
+    """The same chain under the default bound takes the driver finish
+    and converges to one component rooted at the minimum id."""
+    from lovdata_pipeline_spark.operators.dedup import connected_components
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)], "doc_a long, doc_b long"
+    )
+    rows = connected_components(chain, max_iterations=1).collect()
+    assert len(rows) == 7
+    assert {r["component_id"] for r in rows} == {0}
+    assert [r["doc_id"] for r in rows if r["is_survivor"]] == [0]
+
+
+def _random_pair_graph(seed: int) -> list[tuple[int, int]]:
+    """Edge list mixing the shapes dedup pair graphs take: a chain, a
+    star, duplicate and reversed edges, and disjoint pairs, with ids
+    drawn at random from [1000 * seed, 1000 * seed + 1000) and the edge
+    order shuffled."""
+    import random
+
+    rng = random.Random(seed)
+    ids = rng.sample(range(1000 * seed, 1000 * seed + 1000), 60)
+    chain, star, dups, lone = ids[:15], ids[15:27], ids[27:36], ids[36:]
+    edges = [(chain[i], chain[i + 1]) for i in range(len(chain) - 1)]
+    edges += [(star[0], leaf) for leaf in star[1:]]
+    dup_edges = [(dups[i], dups[i + 1]) for i in range(len(dups) - 1)]
+    edges += dup_edges + [(b, a) for a, b in dup_edges] + dup_edges[:3]
+    edges += [(lone[i], lone[i + 1]) for i in range(0, len(lone) - 1, 2)]
+    rng.shuffle(edges)
+    return edges
+
+
+def _reference_components(edges) -> set[tuple[int, int, bool]]:
+    """Plain-Python contract: every node maps to the minimum id it can
+    reach; the survivor is the node equal to that minimum."""
+    adj: dict[int, set[int]] = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out = set()
+    for v in adj:
+        seen, todo = {v}, [v]
+        while todo:
+            for w in adj[todo.pop()] - seen:
+                seen.add(w)
+                todo.append(w)
+        out.add((v, min(seen), v == min(seen)))
+    return out
+
+
+def test_connected_components_driver_and_distributed_parity(spark, monkeypatch):
+    """The driver finish, the forced-distributed loop and a plain-Python
+    reference return identical rows on random pair graphs (three seeds
+    over disjoint id ranges, one graph, so the loop runs once)."""
+    from lovdata_pipeline_spark.operators.dedup import connected_components
+
+    edges = [e for seed in range(3) for e in _random_pair_graph(seed)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    want = _reference_components(edges)
+    driver = set(map(tuple, connected_components(pairs).collect()))
+    monkeypatch.setenv("SPARK_GRAFT_MAX_BROADCAST_ROWS", "0")
+    loop = set(map(tuple, connected_components(pairs).collect()))
+    assert driver == want
+    assert loop == want
+
+
+def test_connected_components_path_choice_at_the_bound(spark, monkeypatch):
+    """Exactly ``bound`` edges take the driver finish; ``bound + 1``
+    edges take the distributed loop. Same rows either way."""
+    from lovdata_pipeline_spark.operators import dedup
+
+    calls = []
+    union_find = dedup._union_find_components
+    monkeypatch.setattr(
+        dedup, "_union_find_components", lambda e: calls.append(len(e)) or union_find(e)
+    )
+    edges = [(1, 2), (2, 3), (7, 8)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    want = _reference_components(edges)
+
+    monkeypatch.setenv("SPARK_GRAFT_MAX_BROADCAST_ROWS", "3")
+    assert set(map(tuple, dedup.connected_components(pairs).collect())) == want
+    assert calls == [3]
+
+    monkeypatch.setenv("SPARK_GRAFT_MAX_BROADCAST_ROWS", "2")
+    assert set(map(tuple, dedup.connected_components(pairs).collect())) == want
+    assert calls == [3]
+
+
 @pytest.mark.slow_ladder
-def test_connected_components_path_graph_log_rounds(spark):
+def test_connected_components_path_graph_log_rounds(spark, monkeypatch):
     """r3 VERDICT #3: the pathological case for label propagation is a
     long path (templated boilerplate chains), O(diameter) rounds. With
     pointer jumping a 5000-node path must converge within 15 rounds
-    (≈ log2 n + confirm) — under plain propagation this needs ~5000."""
+    (≈ log2 n + confirm) — under plain propagation this needs ~5000.
+    A bound of 0 forces the distributed loop."""
     from lovdata_pipeline_spark.operators.dedup import connected_components
+
+    monkeypatch.setenv("SPARK_GRAFT_MAX_BROADCAST_ROWS", "0")
 
     n = 5000
     path = spark.createDataFrame(
