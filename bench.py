@@ -29,6 +29,7 @@ Set SPARK_GRAFT_BENCH_E2E_ONLY=1 for a solo e2e control run.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
@@ -205,9 +206,10 @@ _TAIL_PRIORITY = [
 ]
 
 
-def _measure(run_once, reps: int) -> tuple[float, float]:
-    """(median, trimmed spread) — see module docstring for the policy."""
-    samples = [run_once() for _ in range(reps)]
+def _measure(rep, reps: int) -> tuple[float, float]:
+    """(median, trimmed spread) of ``rep()`` timings — see module
+    docstring for the policy."""
+    samples = [rep() for _ in range(reps)]
     while True:
         s = sorted(samples)
         med = s[len(s) // 2]
@@ -215,7 +217,30 @@ def _measure(run_once, reps: int) -> tuple[float, float]:
         spread = trimmed[-1] - trimmed[0]
         if spread <= med or len(samples) >= reps + 4:
             return round(med, 3), round(spread, 3)
-        samples.append(run_once())
+        samples.append(rep())
+
+
+def release_caches(spark) -> None:
+    """Drop the caches a query fn created (shingle sets etc.) so reps
+    don't accumulate executor memory pressure; the module release calls
+    also empty the retained-frame lists, which clearCache alone leaves
+    growing (r6 review)."""
+    from lovdata_pipeline_spark.operators.packing import release_offsets_caches
+    from lovdata_pipeline_spark.operators.textstats import release_textstats_caches
+
+    release_offsets_caches()
+    release_textstats_caches()
+    spark.catalog.clearCache()
+
+
+def run_once(spark, fn, sf_dir: str) -> float:
+    """One timed rep of a registry query: plan + execution into the
+    ``noop`` sink, then its caches released outside the timed region."""
+    t0 = time.time()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    elapsed = time.time() - t0
+    release_caches(spark)
+    return elapsed
 
 
 def main() -> None:
@@ -317,29 +342,9 @@ def main() -> None:
         return
 
     for name in HEADLINE:
-        fn = QUERIES[name]
-
-        def run_once(fn=fn):
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            elapsed = time.time() - t0
-            # drop caches created inside query fns (shingle sets etc.) so
-            # reps don't accumulate executor memory pressure; the module
-            # release calls also empty the retained-frame lists, which
-            # clearCache alone leaves growing (r6 review)
-            from lovdata_pipeline_spark.operators.packing import (
-                release_offsets_caches,
-            )
-            from lovdata_pipeline_spark.operators.textstats import (
-                release_textstats_caches,
-            )
-
-            release_offsets_caches()
-            release_textstats_caches()
-            spark.catalog.clearCache()
-            return elapsed
-
-        timings[name], spreads[name] = _measure(run_once, reps)
+        timings[name], spreads[name] = _measure(
+            functools.partial(run_once, spark, QUERIES[name], sf_dir), reps
+        )
 
     total = round(sum(timings.values()), 3)
     # stamp the tree this record describes (r10 VERDICT Next #3: the

@@ -34,7 +34,7 @@ def cmd_process(args) -> int:
     from lovdata_pipeline_spark.pipeline import run_pipeline
     from lovdata_pipeline_spark.sources.chunk_store import ChunkStore
     from lovdata_pipeline_spark.sources.state_store import StateStore
-    from lovdata_pipeline_spark.sources.xml_corpus import manifest_diff, read_xml_corpus
+    from lovdata_pipeline_spark.sources.xml_corpus import read_xml_corpus
 
     spark = _spark("lg-process")
     store = ChunkStore(spark, args.store)
@@ -44,28 +44,15 @@ def cmd_process(args) -> int:
 
     docs = read_xml_corpus(spark, args.corpus)
     # Two scopes (matching the reference's retry + cleanup semantics):
-    #  * statuses for on-disk docs diff against the PROCESSED state only,
-    #    so a previously-FAILED doc shows added/modified and is retried
+    #  * every on-disk doc arrives as 'added', and run_pipeline's
+    #    anti-join on (doc_id, hash) against the PROCESSED state alone
+    #    drops the unchanged ones, so a previously-FAILED doc is retried
     #    every run (reference state.is_processed consults only the
     #    processed map, state.py:77-81);
     #  * the removed set is the FULL state minus the on-disk doc ids, so
     #    deleting a failed doc's file still cleans up its state row. An
     #    anti-join on doc_id alone lets the binaryFile scan of that branch
     #    skip reading and hashing the file contents.
-    alive_diff = manifest_diff(
-        docs,
-        state.processed().select(
-            "doc_id",
-            F.col("hash").alias("source_hash"),
-            F.lit(None).cast("string").alias("dataset_name"),
-            F.lit(None).cast("string").alias("relative_path"),
-        ),
-    )
-    docs_with_status = docs.drop("status").join(
-        alive_diff.filter(F.col("status") != "removed").select("doc_id", "status"),
-        "doc_id",
-        "left",
-    )
     removed = (
         state.read()
         .join(docs.select("doc_id"), "doc_id", "left_anti")
@@ -78,7 +65,7 @@ def cmd_process(args) -> int:
             F.lit("removed").alias("status"),
         )
     )
-    docs_with_status = docs_with_status.select(removed.columns).unionByName(removed)
+    docs_with_status = docs.select(removed.columns).unionByName(removed)
 
     cfg = PipelineConfig(
         dataset_pattern=args.datasets,

@@ -4,8 +4,11 @@ The reference's fixed 4-stage DAG — sync → identify → process
 (chunk→embed→index) → cleanup (reference:
 orchestration/pipeline_orchestrator.py:116-173) — commits state after
 every document (state.py:43-102, pipeline_orchestrator.py:316-331).
-Here a pass commits once, the way a Structured Streaming trigger
-commits one micro-batch, in three driver actions:
+Here a pass picks its input once and commits once, the way a Structured
+Streaming trigger does for one micro-batch. Identify is one anti-join
+of the documents frame itself (xml included) against the processed
+state on (doc_id, hash), so the changed rows feed the chunker directly;
+then come three driver actions:
 
   decide   ONE aggregate over a cached per-document decision table —
            (doc_id, hash, chunk count, error, removed?) for every changed
@@ -26,7 +29,8 @@ rewrite replaces what it wrote and the deletes find nothing.
 Failure semantics match the reference's per-document contract
 (file_processing_service.py:48-131): a poison document surfaces as an
 error row from the chunk UDF, lands in the failed side of the state
-table, keeps no chunks, and is retried on the next hash change.
+table, keeps no chunks, and is retried every pass until it succeeds
+(identify consults only the processed state).
 A document yielding zero chunks is a *success* with no chunks
 ("obsolete law", file_processing_service.py:79-89).
 """
@@ -89,21 +93,15 @@ def run_pipeline(
     at = now or datetime.now(timezone.utc).isoformat()
     spark = documents.sparkSession
 
-    manifest = filter_datasets(
-        documents.select("doc_id", "dataset_name", "relative_path", "source_hash", "status"),
-        config.dataset_pattern,
-    )
-
     # --- identify (runs BEFORE the expensive chunk/embed stages) ----------
+    documents = filter_datasets(documents, config.dataset_pattern)
     to_process = identify_changed(
-        manifest, state.processed().select("doc_id", "hash"), config.force, config.limit
+        documents, state.processed().select("doc_id", "hash"), config.force, config.limit
     )
-    removed = identify_removed(manifest)
-
-    docs = documents.join(to_process.select("doc_id"), "doc_id", "left_semi")
+    removed = identify_removed(documents)
 
     # --- decide: chunk, then ONE job for the per-document outcome ----------
-    chunked = chunk_documents_df(docs, config.chunk).cache()
+    chunked = chunk_documents_df(to_process, config.chunk).cache()
     decisions = None
     try:
         per_doc = chunked.groupBy(F.col("document_id").alias("doc_id")).agg(

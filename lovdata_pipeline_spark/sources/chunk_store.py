@@ -172,8 +172,11 @@ class ChunkStore:
                     if exc.errno not in (errno.EROFS, errno.EACCES, errno.EPERM):
                         raise
 
-    def _bucket_col(self):
-        return F.pmod(F.xxhash64("document_id"), F.lit(self.n_buckets)).cast("int")
+    def _bucket_col(self, doc_id: str | None = None):
+        """The bucket of the row's ``document_id`` or, given ``doc_id``, of
+        that literal id — a constant Spark folds into a partition filter."""
+        key = F.col("document_id") if doc_id is None else F.lit(doc_id)
+        return F.pmod(F.xxhash64(key), F.lit(self.n_buckets)).cast("int")
 
     def _empty(self) -> DataFrame:
         df = driver_rows(self.spark, [], ENRICHED_CHUNKS_SCHEMA)
@@ -183,14 +186,6 @@ class ChunkStore:
         if not any(Path(self.root).glob(f"{_BUCKET}=*")):
             return self._empty()
         return self.spark.read.schema(_STORED_SCHEMA).parquet(self.root)
-
-    def _buckets_of(self, doc_ids: list[str]) -> list[int]:
-        """The buckets ``doc_ids`` hash into: one single-task job over the
-        ids, without touching the store."""
-        if not doc_ids:
-            return []
-        ids = driver_rows(self.spark, [(d,) for d in doc_ids], "document_id string")
-        return sorted({r[0] for r in ids.select(self._bucket_col()).collect()})
 
     def _write_buckets(self, df: DataFrame) -> None:
         # Dynamic overwrite: only partitions present in `df` are replaced.
@@ -248,7 +243,7 @@ class ChunkStore:
                 probes.append(
                     self.read()
                     .filter(
-                        F.col(_BUCKET).isin(self._buckets_of(drop))
+                        F.col(_BUCKET).isin([self._bucket_col(d) for d in drop])
                         & F.col("document_id").isin(drop)
                     )
                     .select(_BUCKET, F.lit(1).alias("_hit"))
@@ -336,9 +331,8 @@ class ChunkStore:
     def chunks_for_document(self, doc_id: str) -> DataFrame:
         # Bucket pruning: the predicate on the partition column means only
         # one directory is scanned.
-        bucket = F.pmod(F.xxhash64(F.lit(doc_id)), F.lit(self.n_buckets)).cast("int")
         return self.read().filter(
-            (F.col(_BUCKET) == bucket) & (F.col("document_id") == doc_id)
+            (F.col(_BUCKET) == self._bucket_col(doc_id)) & (F.col("document_id") == doc_id)
         )
 
     def chunks_for_source_hash(self, source_hash: str) -> DataFrame:

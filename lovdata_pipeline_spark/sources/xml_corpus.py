@@ -48,8 +48,10 @@ def read_xml_corpus(spark: SparkSession, root: str, pattern: str = "*.xml") -> D
     """Distributed scan of an extracted XML tree → documents rows.
 
     Columns: doc_id, dataset_name, relative_path, xml, source_hash,
-    status (constant 'added'; a sync diff against a previous manifest
-    assigns real statuses — see manifest_diff).
+    status (constant 'added'). That is all ``lg process`` needs: its
+    identify anti-join on (doc_id, source_hash) against the processed
+    state tells added, modified and unchanged apart. ``manifest_diff``
+    assigns the explicit statuses when a caller wants them.
     """
     # resolve relative roots in Python — the JVM's working directory is
     # not the Python process's

@@ -99,9 +99,9 @@ class TestLifecycle:
         assert state.failed().count() == 1
         assert store.count() == 0
 
-        # same hash → failed doc is NOT retried (anti-join is on processed only…
-        # reference retries failed docs every run: state.is_processed only
-        # checks the processed map, state.py:77-81)
+        # same hash → failed doc IS retried: the anti-join consults only the
+        # processed state, as the reference retries failed docs every run
+        # (state.is_processed only checks the processed map, state.py:77-81)
         r2 = run_pipeline(_docs(spark, bad), store, state, CFG, now="t2")
         assert r2.failed == 1
 

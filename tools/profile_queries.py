@@ -1,6 +1,8 @@
 """Optimization-round profiler: time individual registry queries with
-the bench's exact methodology (noop sink, median of reps, cache clearing
-between reps) and dump their ``explain("formatted")`` plans.
+bench.py's own timing protocol (its ``run_once`` rep — noop sink, caches
+released between reps — and its ``_measure`` median and trimmed spread,
+with extra reps while the spread exceeds the median) and dump their
+``explain("formatted")`` plans.
 
 Usage:
     python tools/profile_queries.py --round rNN [--reps N] [--tag before|after]
@@ -17,14 +19,15 @@ bench.py and is unchanged.
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from bench import _measure, release_caches, run_once
 from lovdata_pipeline_spark.queries import QUERIES
 from lovdata_pipeline_spark.session import get_spark
 
@@ -45,9 +48,6 @@ def main() -> int:
     spark = get_spark(f"profile_{args.round}")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warmup
 
-    from lovdata_pipeline_spark.operators.packing import release_offsets_caches
-    from lovdata_pipeline_spark.operators.textstats import release_textstats_caches
-
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
     for name in args.names:
@@ -59,21 +59,11 @@ def main() -> int:
             with open(os.path.join(plans_dir, f"{name}_{args.tag}.txt"), "w") as fh:
                 fh.write(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
-            release_offsets_caches()
-            release_textstats_caches()
-            spark.catalog.clearCache()
-        samples = []
-        for _ in range(args.reps):
-            spark.sparkContext.setJobDescription(f"profile:{name}")
-            t0 = time.time()
-            fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
-            release_offsets_caches()
-            release_textstats_caches()
-            spark.catalog.clearCache()
-        s = sorted(samples)
-        timings[name] = round(s[len(s) // 2], 3)
-        spreads[name] = round(s[-1] - s[0], 3)
+            release_caches(spark)
+        spark.sparkContext.setJobDescription(f"profile:{name}")
+        timings[name], spreads[name] = _measure(
+            functools.partial(run_once, spark, fn, args.sf_dir), args.reps
+        )
     print(json.dumps({"queries": timings, "spread": spreads, "reps": args.reps,
                       "sf_dir": args.sf_dir}))
     spark.stop()
