@@ -30,7 +30,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from lovdata_pipeline_spark.operators.skew import collect_bounded, spread_if_narrow
 from lovdata_pipeline_spark.operators.textstats import _clean_split
+from lovdata_pipeline_spark.session import driver_rows
 
 
 def ngram_hash_array(text_col: str, n: int) -> Column:
@@ -58,8 +60,6 @@ def _scan_local_ngram_hashes(
     """(id, shingle: bigint) word-n-gram hashes, generated inside the scan
     projection (NOT distinct — downstream distinct aggregation dedups on
     the 8-byte hash, so the pre-shuffle data is already minimal)."""
-    from lovdata_pipeline_spark.operators.skew import spread_if_narrow
-
     # input-skew fix (r13, guide §2.5): the interpreted gram lambda runs
     # in the scan stage — spread a single-file input so it parallelizes
     return spread_if_narrow(docs).select(
@@ -288,8 +288,6 @@ def exact_substring_contamination(
         .select(id_col, "needle_id")
         .distinct()
     )
-    from lovdata_pipeline_spark.operators.skew import spread_if_narrow
-
     verified = (
         cands.join(
             # spread (guide §2.5): when the candidate side broadcasts,
@@ -389,6 +387,12 @@ def remove_contaminated_spans(
     never shuffles except flagged rows joining their needle lists, and
     untouched documents pass through a left join as a pure scan-local
     projection.
+
+    The per-document needle lists are small by contract: one
+    ``skew.collect_bounded`` job evaluates them into driver rows, which
+    are broadcast and survive executor loss (nothing is checkpointed).
+    On a mass-contaminated corpus past ``SPARK_GRAFT_MAX_BROADCAST_ROWS``
+    it warns and the left join shuffles over the lazy lists instead.
     """
     nw = _clean_split(F.col(needle_text_col))
     bench = needles.select(
@@ -443,19 +447,18 @@ def remove_contaminated_spans(
     # back to a SortMergeJoin, SHUFFLING THE WHOLE CORPUS for a left
     # join against a rare-row table; the explicit broadcast keeps the
     # corpus scan-local (plan: SortMergeJoin LeftOuter + 2 Exchanges →
-    # BroadcastHashJoin, corpus side exchange-free).
-    from lovdata_pipeline_spark.operators.skew import bounded_broadcast, spread_if_narrow
-
-    # r14 (VERDICT Next #7): verify the rarity contract before
-    # broadcasting — a mass-contaminated corpus falls back to a shuffle
-    # join instead of OOMing the driver. One evaluation either way.
-    per_doc, small = bounded_broadcast(per_doc)
+    # BroadcastHashJoin, corpus side exchange-free). The rarity contract
+    # is checked by skew.collect_bounded, whose rows are the broadcast
+    # side; past the bound the join shuffles over the lazy per_doc.
+    rows = collect_bounded(per_doc)
+    if rows is not None:
+        per_doc = F.broadcast(driver_rows(corpus.sparkSession, rows, per_doc.schema))
     # spread (guide §2.5): with the broadcast below the surgery
     # expressions execute in the corpus scan stage — a single-file input
     # would serialize them onto one task (no-op on corpus-scale inputs)
     joined = spread_if_narrow(
         corpus.select(F.col(id_col), F.col(text_col).alias("_text"))
-    ).join(F.broadcast(per_doc) if small else per_doc, id_col, "left")
+    ).join(per_doc, id_col, "left")
     return _apply_surgery(joined, id_col, F.col("_ndls").isNull(), keep_text)
 
 

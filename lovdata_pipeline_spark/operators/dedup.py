@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
-from lovdata_pipeline_spark.operators.skew import max_broadcast_rows
+from lovdata_pipeline_spark.operators.skew import collect_bounded, spread_if_narrow
 from lovdata_pipeline_spark.operators.textstats import _clean_split
 from lovdata_pipeline_spark.session import driver_rows
 
@@ -156,8 +156,6 @@ def hashed_word_shingles(
     grading needs, because ``max_df`` interacts with the prefix order's
     hash tiebreak. xxhash64 stays the production fast path.
     """
-    from lovdata_pipeline_spark.operators.skew import spread_if_narrow
-
     # input-skew fix (r13, guide §2.5): the split+explode runs in the
     # scan stage — a single-file table serializes it onto one task
     docs = spread_if_narrow(docs)
@@ -213,9 +211,11 @@ def ngram_jaccard_pairs(
     so every downstream shuffle (df counts, prefix join, verify) carries
     longs instead of n-gram strings; Jaccard over hashed sets equals
     Jaccard over the strings (64-bit collisions are ~1e-8 even at 1e6
-    distinct shingles). The result is materialized eagerly so the shingle
-    cache can be released before returning (repeated calls in one session
-    must not accumulate executor storage).
+    distinct shingles). The result is ``cache()``d and materialized
+    eagerly so the shingle cache can be released before returning; the
+    cached result is the caller's to release (``unpersist()``, or
+    ``clearCache`` as ``bench.release_caches`` does), so each call leaves
+    exactly that one frame in executor storage.
 
     ``max_df`` (r9, the minhash-LSH df-cap analog): when the SHINGLE
     SPACE saturates — a bounded vocabulary, boilerplate-heavy crawl
@@ -334,11 +334,6 @@ def _banded_view(
     )
 
 
-#: largest hot-shingle set inlined as a codegen isin literal; bigger sets
-#: (small df_cap on a large corpus) fall back to a broadcast anti-join
-_HOT_SET_ISIN_MAX = 20_000
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
@@ -361,10 +356,14 @@ def minhash_lsh_pairs(
     shingles present in more than that fraction of documents are dropped
     BEFORE signature computation. The hot set is bounded by construction
     (at cap c, at most avg_shingles_per_doc / c distinct shingles can
-    exceed it — a few thousand even at 100 TB), so it collects to the
-    driver and the drop is a codegen ``isin`` filter; when the corpus has
-    no hot shingles (the common case) the guard costs one aggregate over
-    the cached shingle frame and nothing else. Boilerplate shingles
+    exceed it — a few thousand even at 100 TB), so it is small by
+    contract: ``skew.collect_bounded`` brings it to the driver and the
+    drop is a ``left_anti`` join against ``F.broadcast`` of its driver
+    rows (no isin literal). A small ``df_cap`` (a public parameter) can
+    push it past ``SPARK_GRAFT_MAX_BROADCAST_ROWS``; the anti-join then
+    runs against the lazy hot frame instead. When the corpus has no hot
+    shingles (the common case) the guard costs one aggregate over the
+    cached shingle frame and adds no join. Boilerplate shingles
     shared by a large slice of the corpus otherwise align minhash rows
     across that whole slice, and one band bucket holding m docs costs an
     m² bucket join — the classic LSH skew failure at 100 TB.
@@ -389,7 +388,9 @@ def minhash_lsh_pairs(
     Jaccard is collision-immune in practice — see ngram_jaccard_pairs).
     The (small) result is ``cache()``d and materialized by one
     ``count()``, after which the shingle cache is released; the cached
-    result keeps its lineage, so a lost block is recomputed.
+    result keeps its lineage, so a lost block is recomputed. Each call
+    leaves that cached result for the caller to release (``unpersist()``,
+    or ``clearCache`` as ``bench.release_caches`` does).
     """
     rows_per_band = num_hashes // bands
     sh = hashed_word_shingles(docs, text_col, id_col, n).cache()
@@ -403,16 +404,11 @@ def minhash_lsh_pairs(
             .filter(F.col("df") > df_cap * n_docs)
             .select("shingle")
         )
-        hot_list = [r["shingle"] for r in hot.limit(_HOT_SET_ISIN_MAX + 1).collect()]
-        if len(hot_list) > _HOT_SET_ISIN_MAX:
-            # small df_cap values (a public parameter) can make the hot
-            # set ~avg_shingles_per_doc/cap entries — far past what a
-            # driver-side isin literal should hold; fall back to the
-            # broadcast anti-join, which handles any hot-set size.
-            sh_for_sig = sh.join(F.broadcast(hot), "shingle", "left_anti")
-        elif hot_list:
-            sh_for_sig = sh.filter(~F.col("shingle").isin(hot_list))
-        if hot_list:
+        rows = collect_bounded(hot)  # None past the bound: hot stays lazy
+        if rows is None or rows:
+            if rows:
+                hot = F.broadcast(driver_rows(docs.sparkSession, rows, hot.schema))
+            sh_for_sig = sh.join(hot, "shingle", "left_anti")
             # zero-survivor recall guard: docs whose whole shingle set was
             # hot re-enter candidacy through an exact set-hash equi-join
             # (identical sets ⇒ Jaccard 1.0 ≥ any threshold; verify step
@@ -785,13 +781,12 @@ def connected_components(
     equal to its component id. Ids are typed like the input id columns.
 
     Two regimes, chosen by the edge count alone, against the driver-side
-    row bound every small-by-contract side uses
-    (``skew.max_broadcast_rows()``, ``SPARK_GRAFT_MAX_BROADCAST_ROWS``,
-    default 1e6):
+    row bound every small-by-contract side uses (``skew.collect_bounded``,
+    ``SPARK_GRAFT_MAX_BROADCAST_ROWS``, default 1e6):
 
     - **Small graph (≤ bound edges) — driver finish.** The first action
-      is ``limit(bound + 1).collect()`` of the edge list; the collected
-      size IS the bound check, so no separate count runs. Union-find on
+      is ``collect_bounded`` of the edge list; the collected size IS the
+      bound check, so no separate count runs. Union-find on
       the driver links each root toward the smaller one (the root is
       the component minimum) and compresses paths iteratively; the rows
       come back through ``session.driver_rows``. Near-duplicate pair
@@ -838,9 +833,8 @@ def connected_components(
     sym = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     ).unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-    bound = max_broadcast_rows()
-    edges = pairs.select(id_a, id_b).limit(bound + 1).collect()
-    if len(edges) <= bound:
+    edges = collect_bounded(pairs.select(id_a, id_b))
+    if edges is not None:
         id_type = sym.schema["src"].dataType
         schema = StructType(
             [
@@ -1012,6 +1006,13 @@ def remove_duplicated_spans(
     higher-order folds; kept segments between merged ranges splice back
     with substring + an order-pinned array_join. Nothing ever shuffles
     except by doc id, and docs without spans pass through a left join.
+
+    The merged ranges are small by contract (near-dup mass): one
+    ``skew.collect_bounded`` job evaluates them into driver rows, which
+    are broadcast and survive executor loss. On a mass-duplicated corpus
+    past ``SPARK_GRAFT_MAX_BROADCAST_ROWS`` it warns and the joins turn
+    into shuffle joins over the lazy ranges; on that path only, span
+    detection runs twice, once for ``cuts`` and once for ``tails``.
     """
     # distinct (r11): removal ranges are a SET — the same doc_b range
     # arriving from several doc_a partners is one removal. Exact
@@ -1037,15 +1038,12 @@ def remove_duplicated_spans(
     merged = ranged.groupBy(id_col, "island").agg(
         F.min("s").alias("s"), F.max("e").alias("e")
     )
-    from lovdata_pipeline_spark.operators.skew import bounded_broadcast, spread_if_narrow
-
-    # r14 (VERDICT Next #7): verify the rarity contract before the
-    # broadcasts below — a mass-duplicated corpus falls back to shuffle
-    # joins instead of OOMing the driver. The checkpoint also fixes a
-    # double evaluation: ``cuts`` and ``tails`` both derive from
-    # ``merged``, whose span-detection subtree previously ran once per
-    # consumer.
-    merged, small = bounded_broadcast(merged)
+    # rarity contract (skew.collect_bounded): the merged ranges run
+    # once, into driver rows that ``cuts`` and ``tails`` both read.
+    rows = collect_bounded(merged)
+    small = rows is not None
+    if small:
+        merged = driver_rows(docs.sparkSession, rows, merged.schema)
 
     def _maybe_b(df):
         return F.broadcast(df) if small else df

@@ -63,13 +63,8 @@ def spread_if_narrow(df: DataFrame) -> DataFrame:
       pretraining_pipeline: probe-parity audit, OPTIMIZATION_r14.md).
 
     Both checks are pure driver metadata — zero jobs, zero AQE stage
-    materialization, at any scale. ``SPARK_GRAFT_NO_SPREAD=1`` is the
-    measurement kill switch (bench A/B evidence in
-    OPTIMIZATION_r14.md), not a production knob."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):  # A/B kill switch (r14)
-        return df
+    materialization, at any scale (bench A/B evidence in
+    OPTIMIZATION_r14.md)."""
     target = df.sparkSession.sparkContext.defaultParallelism
     try:
         files = df.inputFiles()
@@ -126,45 +121,39 @@ def max_broadcast_rows() -> int:
     return int(os.environ.get("SPARK_GRAFT_MAX_BROADCAST_ROWS", "1000000"))
 
 
-def bounded_broadcast(df: DataFrame, max_rows: int | None = None):
-    """Materialize a "rare by contract" frame once, verify the contract,
-    and return (frame, broadcastable: bool) — r14 VERDICT Next #7.
+def collect_bounded(df: DataFrame) -> list | None:
+    """Collect a side that is small by contract, or ``None`` when the
+    contract is broken.
 
-    The span-surgery operators broadcast corpus-derived aggregates
-    (flagged-doc needle lists, near-dup cut lists) that are MB-sized by
-    the operators' documented rarity contract — but nothing verified
-    the contract, so a pathological corpus (mass contamination / mass
-    duplication) would build an over-sized broadcast and OOM the
-    driver. This helper localCheckpoints the frame (ONE evaluation —
-    the broadcast build would have evaluated it anyway; Context-
-    Cleaner reclaims the blocks when references drop), counts rows
-    with an early-terminating ``limit(max+1)`` read of the
-    materialized blocks, and tells the caller to fall back to a plain
-    (shuffle) join when the bound breaks — degraded, not dead. On a
-    contract-respecting corpus the only added cost is the capped count
-    over cached blocks, and join strategies are unchanged.
-
-    ``max_broadcast_rows()`` sizes the bound (default 1e6 rows — at
-    the ~100-byte span/needle row shapes here that is ~100 MB, inside
-    the session's 64 MB auto threshold × safety 2).
+    The span-removal ranges, per-document needle lists, hot shingles and
+    near-duplicate pair graphs of the curation operators are small by
+    their documented rarity contract, but a mass-duplicated or
+    mass-contaminated corpus breaks it, and an unchecked broadcast would
+    then OOM the driver. One job, ``limit(max_broadcast_rows() + 1)
+    .collect()``, reads the side and checks the bound at once: no
+    separate count runs and nothing stays persisted. Callers rebuild the
+    rows with ``session.driver_rows``, so the side survives executor
+    loss. Past the bound this warns ("rarity contract") and returns
+    ``None``; callers then take their distributed path over the lazy
+    side, which re-evaluates it once per consumer — a cost only corpora
+    that break the contract pay. The collect holds at most bound + 1
+    rows, the driver memory a broadcast of the side needs anyway.
     """
     import warnings
 
-    if max_rows is None:
-        max_rows = max_broadcast_rows()
-    cp = df.localCheckpoint(eager=True)
-    n = cp.limit(max_rows + 1).count()
-    if n > max_rows:
-        warnings.warn(
-            f"bounded_broadcast: side has >{max_rows} rows — the rarity "
-            "contract is broken; falling back to a shuffle join instead "
-            "of broadcasting (raise SPARK_GRAFT_MAX_BROADCAST_ROWS only "
-            "if the driver is sized for it)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return cp, False
-    return cp, True
+    bound = max_broadcast_rows()
+    rows = df.limit(bound + 1).collect()
+    if len(rows) <= bound:
+        return rows
+    warnings.warn(
+        f"collect_bounded: side has >{bound} rows — the rarity contract "
+        "is broken; falling back to the distributed path instead of "
+        "collecting it to the driver (raise SPARK_GRAFT_MAX_BROADCAST_ROWS "
+        "only if the driver is sized for it)",
+        RuntimeWarning,
+        stacklevel=2,
+    )
+    return None
 
 
 def skew_report(df: DataFrame, key_cols: list[str], top_n: int = 10) -> DataFrame:

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from lovdata_pipeline_spark.operators.skew import spread_if_narrow
+
 # Tiny per-language stopword anchors — enough signal for a corpus-level
 # heuristic; deliberately small so the oracle SQL stays readable.
 STOPWORDS = {
@@ -21,18 +23,6 @@ STOPWORDS = {
     "es": ["el", "la", "los", "y", "de", "que", "es", "en"],
     "no": ["og", "i", "det", "som", "er", "av", "til", "en"],
 }
-
-
-def _spread(docs: DataFrame) -> DataFrame:
-    """Round-robin repartition when the input has fewer partitions than
-    cores (operators/skew.spread_if_narrow): a single-file table's scan
-    task otherwise serializes this module's per-token/per-gram md5 and
-    explode projections — measured 2.5-3x at sf0.1; structurally a no-op
-    on corpus-scale (already many-partitioned) inputs."""
-    from lovdata_pipeline_spark.operators.skew import spread_if_narrow
-
-    return spread_if_narrow(docs)
-
 
 
 def _nonempty(arr: Column) -> Column:
@@ -157,7 +147,7 @@ def language_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     reversed) would be opaque; an explicit CASE keeps oracle parity
     trivial).
     """
-    docs = _spread(docs)  # input-skew fix (r13, guide §2.5)
+    docs = spread_if_narrow(docs)
     toks = _tokenized(docs, text_col, id_col)
     hits = toks.select(
         F.col(id_col),
@@ -192,7 +182,7 @@ def quality_scores(
     ``keep_cols`` pass through the projection unchanged so consumers
     grouping by e.g. source stay single-scan (no re-join on id).
     """
-    docs = _spread(docs)  # input-skew fix (r13, guide §2.5)
+    docs = spread_if_narrow(docs)
     text = F.col(text_col)
     n_chars = F.greatest(F.length(text), F.lit(1))
     words = _clean_split(text)
@@ -251,7 +241,7 @@ def winnowing_fingerprints(
     expression formulation ``winnowing_fingerprints_expr`` (pinned by
     test) and therefore the same DuckDB oracle.
     """
-    docs = _spread(docs)  # input-skew fix (r13, guide §2.5)
+    docs = spread_if_narrow(docs)
     import numpy as np
     import pandas as pd
 
@@ -370,7 +360,7 @@ def winnowing_anchors(
     narrow ``mapInPandas`` pass, no shuffle, numpy Horner + sliding-
     window minima; the rightmost-argmin is one reversed argmax.
     """
-    docs = _spread(docs)  # input-skew fix (r13, guide §2.5)
+    docs = spread_if_narrow(docs)
     import numpy as np
     import pandas as pd
     from numpy.lib.stride_tricks import sliding_window_view
@@ -439,7 +429,7 @@ def repetition_signals(
     (id, bigram) then id, partial-aggregated map-side, shuffling short
     bigram strings, never the document text.
     """
-    docs = _spread(docs)  # input-skew fix (r13, guide §2.5)
+    docs = spread_if_narrow(docs)
     from pyspark.sql import Window
 
     trimmed = F.trim(F.lower(F.col(text_col)))
@@ -626,7 +616,7 @@ def hashed_linear_quality(
     # silent row loss in a quality stage is a data bug, not a
     # convenience. (r6 whitespace audit: the old form hashed a phantom
     # '' token instead, giving empty docs an arbitrary nonzero logit.)
-    docs = _spread(docs)  # input-skew fix (r13, guide §2.5)
+    docs = spread_if_narrow(docs)
     tok = docs.select(
         F.col(id_col),
         F.explode_outer(
@@ -1028,7 +1018,7 @@ def gopher_quality(
     values hash-match bit-for-bit. Empty/NULL docs score zeros and fail
     the gate rather than erroring.
     """
-    docs = _spread(docs)  # input-skew fix (r13, guide §2.5)
+    docs = spread_if_narrow(docs)
     exprs = _gopher_exprs(text_col)
     return docs.select(
         F.col(id_col), *[c.alias(name) for name, c in exprs.items()]
@@ -1085,7 +1075,7 @@ def hashed_importance_score(
     longs — at 100 TB pass a larger ``n_buckets`` to keep per-bucket
     counts meaningful, not for overflow (2^63 tokens is out of reach).
     """
-    docs = _spread(docs)  # input-skew fix (r13, guide §2.5)
+    docs = spread_if_narrow(docs)
     def bigram_buckets(df: DataFrame, with_id: bool):
         w = _words(text_col)
         grams = F.when(
@@ -1200,7 +1190,7 @@ def bigram_surprisal(
     frame, as ``perplexity_buckets`` does, rather than the text-bearing
     intermediates.
     """
-    docs = _spread(docs)  # input-skew fix (r13, guide §2.5)
+    docs = spread_if_narrow(docs)
     w = _words(text_col)
     grams = F.when(F.size(w) < 2, F.array().cast("array<struct<w1:string,w2:string>>")).otherwise(
         F.zip_with(
@@ -1318,7 +1308,7 @@ def vocab_drift(
     counting (r6 review: relying on equi-join NULL semantics left a
     fabricated all-zero-counts row for the NULL group).
     """
-    docs = _spread(docs)  # input-skew fix (r13, guide §2.5)
+    docs = spread_if_narrow(docs)
     spark = docs.sparkSession
     bucket = (
         F.conv(F.substring(F.md5(F.concat(F.col("_w"), F.lit(seed))), 1, 15), 16, 10)
@@ -1517,7 +1507,7 @@ def gopher_repetition_signals(
     frequent gram" resolve to the larger char mass (lexicographic
     struct max on (count, mass) in both engines).
     """
-    docs = _spread(docs)  # input-skew fix (r13, guide §2.5)
+    docs = spread_if_narrow(docs)
     seed = "rep-v1"
 
     def h60(c: Column) -> Column:
@@ -2114,7 +2104,7 @@ def compression_signals(
     not SQL-expressible — same weak-oracle class as the multimodal
     codec plumbing).
     """
-    docs = _spread(docs)  # input-skew fix (r13, guide §2.5)
+    docs = spread_if_narrow(docs)
     import zlib
 
     import pandas as pd
@@ -2187,7 +2177,7 @@ def quality_blend(
     only other costs are the |groups|-row aggregate and its broadcast
     join back.
     """
-    docs = _spread(docs)  # input-skew fix (r13, guide §2.5)
+    docs = spread_if_narrow(docs)
     e = _gopher_exprs(text_col)
     lwords = _clean_split(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     sw_hits = F.size(F.filter(lwords, lambda w: w.isin(STOPWORDS["en"])))
@@ -2278,7 +2268,7 @@ def kn_surprisal(
     the bigram-type frame, which is vocabulary²-bounded, not
     corpus-bounded.
     """
-    docs = _spread(docs)  # input-skew fix (r13, guide §2.5)
+    docs = spread_if_narrow(docs)
     d = float(discount)
     w = _words(text_col)
     grams = F.when(
@@ -2359,7 +2349,7 @@ def kn_trigram_surprisal(
     (type-scale joins), so the token-scale trigram stream pays exactly
     ONE equi-join against the scored types — the same shape as the
     oracle; AQE absorbs stopword-prefix skew."""
-    docs = _spread(docs)  # input-skew fix (r13, guide §2.5)
+    docs = spread_if_narrow(docs)
     d = float(discount)
     w = _words(text_col)
     tri_len = F.greatest(F.size(w) - 2, F.lit(1))

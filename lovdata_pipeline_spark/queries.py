@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from lovdata_pipeline_spark.operators import decontam, dedup, similarity, textstats
+from lovdata_pipeline_spark.operators.skew import spread_if_narrow
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -88,16 +89,6 @@ def _drain_partitions(spark: SparkSession, n: int = 8):
             conf.set("spark.sql.shuffle.partitions", prev)
 
     return _cm()
-
-
-def spread_if_narrow(df: DataFrame) -> DataFrame:
-    """Round-robin repartition ONLY when the input has fewer partitions
-    than cores — see operators/skew.spread_if_narrow (hoisted there in
-    r13 so compute-heavy operators spread their own input; this alias
-    keeps the established query-level call sites)."""
-    from lovdata_pipeline_spark.operators.skew import spread_if_narrow as _s
-
-    return _s(df)
 
 
 def _dsum(col, alias: str):

@@ -23,7 +23,7 @@ def test_spread_if_narrow_is_conditional(spark, tmp_path):
     untouched; an input that already carries a Repartition is not
     re-spread (composed operators would otherwise stack one Exchange
     per call)."""
-    from lovdata_pipeline_spark.queries import spread_if_narrow
+    from lovdata_pipeline_spark.operators.skew import spread_if_narrow
 
     cores = spark.sparkContext.defaultParallelism
 

@@ -12,11 +12,16 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 
+from tests.test_r10_fixes import _pinned_ids
+
 
 class TestBoundedBroadcast:
     """VERDICT Next #7: the span-surgery broadcasts ride on a rarity
     contract; a mass-duplication corpus must degrade to a shuffle join
-    (same values) instead of building an unbounded broadcast."""
+    (same values) instead of building an unbounded broadcast. The
+    bounded path collects the side to the driver, so it leaves no
+    persisted RDD behind (no checkpoint blocks for executor loss to
+    strand)."""
 
     def _mass_dup_inputs(self, spark):
         # EVERY document span-affected — the contract-breaking shape
@@ -35,9 +40,11 @@ class TestBoundedBroadcast:
 
         docs, spans = self._mass_dup_inputs(spark)
         monkeypatch.delenv("SPARK_GRAFT_MAX_BROADCAST_ROWS", raising=False)
+        before = _pinned_ids(spark)
         fast = sorted(
             tuple(r) for r in remove_duplicated_spans(docs, spans).collect()
         )
+        assert not (_pinned_ids(spark) - before)
         # bound of 3 << 20 affected docs: the guard must trip and fall
         # back to shuffle joins — with identical output
         monkeypatch.setenv("SPARK_GRAFT_MAX_BROADCAST_ROWS", "3")
@@ -61,10 +68,12 @@ class TestBoundedBroadcast:
         )
         needles = spark.createDataFrame([(900, needle)], "doc_id long, text string")
         monkeypatch.delenv("SPARK_GRAFT_MAX_BROADCAST_ROWS", raising=False)
+        before = _pinned_ids(spark)
         fast = sorted(
             tuple(r)
             for r in remove_contaminated_spans(corpus, needles, anchor_n=3).collect()
         )
+        assert not (_pinned_ids(spark) - before)
         monkeypatch.setenv("SPARK_GRAFT_MAX_BROADCAST_ROWS", "3")
         with pytest.warns(RuntimeWarning, match="rarity contract"):
             slow = sorted(

@@ -73,19 +73,23 @@ def test_winnowing_offsets_survive_expanding_lowercase(spark):
         assert 1 <= r.pos <= len(text) - 25 + 1
 
 
-def test_minhash_hot_set_fallback_matches_isin_path(spark, monkeypatch):
-    """Forcing the broadcast anti-join fallback (hot set 'too big' for an
-    isin literal) must produce the identical pair set."""
+def test_minhash_hot_set_lazy_anti_join_matches_driver_rows_path(spark, monkeypatch):
+    """Forcing the over-bound hot set (anti-join against the lazy hot
+    frame instead of its broadcast driver rows) must produce the
+    identical pair set. df_cap=0.01 makes the hot set non-empty on this
+    table (45 shingles in more than 5 of 500 documents; none pass a
+    0.05 cap, which would compare the no-join path with itself)."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     base = sorted(
         (r.doc_a, r.doc_b)
-        for r in dedup.minhash_lsh_pairs(docs, threshold=0.8, df_cap=0.05).collect()
+        for r in dedup.minhash_lsh_pairs(docs, threshold=0.8, df_cap=0.01).collect()
     )
-    monkeypatch.setattr(dedup, "_HOT_SET_ISIN_MAX", 0)
-    via_join = sorted(
-        (r.doc_a, r.doc_b)
-        for r in dedup.minhash_lsh_pairs(docs, threshold=0.8, df_cap=0.05).collect()
-    )
+    monkeypatch.setenv("SPARK_GRAFT_MAX_BROADCAST_ROWS", "0")
+    with pytest.warns(RuntimeWarning, match="rarity contract"):
+        via_join = sorted(
+            (r.doc_a, r.doc_b)
+            for r in dedup.minhash_lsh_pairs(docs, threshold=0.8, df_cap=0.01).collect()
+        )
     assert via_join == base
 
 
