@@ -256,6 +256,7 @@ def cmd_curate(args) -> int:
         stratified_sample,
         temperature_sample,
     )
+    from lovdata_pipeline_spark.operators.skew import spread_if_narrow
 
     spark = _spark("lg-curate")
     id_col, text_col, strata_col = args.id_col, args.text_col, args.strata_col
@@ -279,7 +280,12 @@ def cmd_curate(args) -> int:
                 "[PHONE]",
             ),
         )
-    cur = cur.cache()
+    # A cached frame reads no files, so decontaminate and
+    # hashed_linear_quality cannot spread a narrow input themselves:
+    # spread it before the first cache. A narrow input is small, so the
+    # dedup and decontam joins broadcast their other side and keep this
+    # layout, as does the mix (a filter).
+    cur = spread_if_narrow(cur).cache()
     stages["after_pii"] = cur.count()
 
     if not args.no_dedup:

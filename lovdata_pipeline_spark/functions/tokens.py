@@ -29,10 +29,6 @@ from __future__ import annotations
 import re
 from collections.abc import Iterable
 
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
 try:  # optional, not installed in the test container
     import tiktoken
 
@@ -69,12 +65,6 @@ def count_tokens_batch(texts: Iterable[str]) -> list[int]:
     if _ENC is not None:
         return [len(t) for t in _ENC.encode_ordinary_batch([s or "" for s in texts])]
     return [count_tokens(s or "") for s in texts]
-
-
-@F.pandas_udf(T.IntegerType())
-def token_count_udf(texts: pd.Series) -> pd.Series:
-    """Arrow-batched token counter for DataFrame columns."""
-    return pd.Series(count_tokens_batch(texts.fillna("").tolist()), dtype="int32")
 
 
 def hard_token_split(text: str, max_tokens: int) -> list[str]:
@@ -127,19 +117,3 @@ def hard_token_split(text: str, max_tokens: int) -> list[str]:
         last_end = m.end()
     flush(last_end)
     return [s for s in out if s]
-
-
-def whitespace_token_count(col):
-    """JVM-side whitespace token count — SQL-expressible, zero Python.
-
-    ``size(split(<regexp-trimmed col>, '\\s+'))`` with empty-string → 0.
-    The trim is a regexp strip of ALL whitespace, not ``F.trim`` (which
-    strips only ASCII spaces — a leading newline or tab would leave an
-    empty first split element and over-count by one, r10 review). This
-    is the cheap scale path for corpus statistics where exact BPE parity
-    is not required; it stays inside whole-stage codegen.
-    """
-    stripped = F.regexp_replace(F.coalesce(col, F.lit("")), r"^\s+|\s+$", "")
-    return F.when(stripped == "", F.lit(0)).otherwise(
-        F.size(F.split(stripped, r"\s+"))
-    )

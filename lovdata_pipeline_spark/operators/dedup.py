@@ -833,7 +833,8 @@ def connected_components(
     sym = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     ).unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-    edges = collect_bounded(pairs.select(id_a, id_b))
+    # past the bound the distributed loop is the designed path: no warning
+    edges = collect_bounded(pairs.select(id_a, id_b), warn=False)
     if edges is not None:
         id_type = sym.schema["src"].dataType
         schema = StructType(

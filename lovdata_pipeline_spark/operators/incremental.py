@@ -24,6 +24,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from lovdata_pipeline_spark.schemas import MANIFEST_SCHEMA
+from lovdata_pipeline_spark.session import driver_rows
 
 CHANGED_STATUSES = ("added", "modified")
 
@@ -50,7 +51,7 @@ def flatten_sync_state(spark: SparkSession, state_json_path: str | Path) -> Data
                     meta.get("status", "added"),
                 )
             )
-    return spark.createDataFrame(rows, MANIFEST_SCHEMA)
+    return driver_rows(spark, rows, MANIFEST_SCHEMA)
 
 
 def filter_datasets(manifest: DataFrame, pattern: str) -> DataFrame:

@@ -19,99 +19,34 @@ from pyspark.sql import DataFrame, functions as F
 
 
 def spread_if_narrow(df: DataFrame) -> DataFrame:
-    """INPUT-skew fix (guide §2.5 "one huge unsplittable file"):
-    round-robin repartition ONLY when the input has fewer partitions
-    than cores. A single-file parquet table arrives as one scan task,
-    which serializes every interpreted/codegen-heavy per-row projection
-    that runs before the first Exchange (per-token md5 hashing, gram
-    explosion, winnowing, surgery splices) — measured 2.5-3× on the
-    sf0.1 corpus for gopher-repetition and simhash. A corpus-scale
-    table is already many-partitioned, so this is a structural no-op at
-    100 TB (the condition, not the call site, carries the scale story);
-    round-robin repartition is retry-safe (sort-before-repartition is
-    on by default, SPARK-23207).
+    """Round-robin ``df`` over ``defaultParallelism`` partitions when it
+    reads fewer files than that; otherwise return it unchanged.
 
-    Lived in queries.py since r5 applied to three queries; r13 hoists
-    it here so the OPERATORS whose first stage is compute-heavy can
-    spread their own input instead of relying on each caller to
-    remember (the callers that did — curation_report, decontam
-    benchmark flags — measured the same serialization this fixes).
+    A single-file parquet table arrives as one scan task, which
+    serializes every compute-heavy per-row projection that runs before
+    the first Exchange (per-token hashing, gram explosion, winnowing,
+    span surgery) — measured 2.5-3x on the sf0.1 corpus for
+    gopher-repetition and simhash. A corpus-scale table already has at
+    least as many files as cores, so there this is a no-op.
 
-    r14 probe rewrite (VERDICT r13 Next #1): the old trigger probe was
-    ``df.rdd.getNumPartitions()``, which builds the full RDD plan and —
-    on any input that already contains an Exchange — makes AQE
-    MATERIALIZE those shuffle stages, running real upstream compute
-    that the actual query then re-runs (the exact cost r13 measured at
-    +2.3s/call and rejected for the chunker, yet shipped everywhere
-    else). The new probe never touches ``.rdd``:
-
-    - ``df.inputFiles()`` (a driver-side file-index lookup, no job)
-      approximates scan parallelism: a file-backed input with fewer
-      files than cores is the single-scan-task shape this helper
-      exists for. Non-file inputs (in-memory test frames, streams)
-      return no files and are left alone — their partitioning came
-      from whatever produced them.
-    - a logical-plan check skips inputs whose CURRENT partitioning is
-      already governed by an explicit ``Repartition`` — i.e. one that
-      sits downstream of every shuffle-producing node — so composed
-      operators (curation report → N textstats calls on the same
-      spread frame) don't stack one round-robin Exchange per operator.
-      A Repartition buried BELOW a later Join/Aggregate does NOT
-      suppress the spread: that shuffle re-partitioned the data, and
-      at local scale AQE coalesces a small post-shuffle frame to ~1
-      partition, re-serializing the downstream compute (measured on
-      pretraining_pipeline: probe-parity audit, OPTIMIZATION_r14.md).
-
-    Both checks are pure driver metadata — zero jobs, zero AQE stage
-    materialization, at any scale (bench A/B evidence in
-    OPTIMIZATION_r14.md)."""
-    target = df.sparkSession.sparkContext.defaultParallelism
+    ``inputFiles()`` is a driver-side file-index lookup: the decision
+    runs no job. Frames with no files are left alone: in-memory frames,
+    streams, and cached frames (their optimized plan reads the cache, not
+    the files). A caller that caches a narrow frame spreads it before
+    ``.cache()``. Spreading an already-spread frame again adds no
+    exchange when only filters or plain column selections lie between
+    the two (Catalyst's ``CollapseRepartition`` merges them); a computed
+    column between them keeps both. Round-robin repartition is
+    retry-safe (sort-before-repartition is on by default, SPARK-23207).
+    """
     try:
         files = df.inputFiles()
     except Exception:  # streaming sources etc. — leave untouched
         return df
-    if not files:
-        # No file relation: probe ONLY cache-backed frames (pipeline
-        # queries pass bounded cached samples/survivors whose expensive
-        # subtree is already materialized, so ``.rdd`` here is a
-        # metadata call — measured ~25 ms; on any other shape ``.rdd``
-        # can execute AQE stages, the exact r13 cost this rewrite
-        # removes, so everything else is left untouched).
-        try:
-            cached = (
-                "InMemoryRelation"
-                in df._jdf.queryExecution().optimizedPlan().toString()
-            )
-            if cached and df.rdd.getNumPartitions() < target:
-                return df.repartition(target)
-        except Exception:
-            pass
-        return df
-    if len(files) >= target:
-        return df
-    plan = df._jdf.queryExecution().logical().toString()
-    rep = _first_node(plan, ("Repartition",))
-    if rep is not None:
-        shuffle = _first_node(
-            plan, ("Join", "Aggregate", "Window", "Deduplicate", "Sort")
-        )
-        if shuffle is None or rep < shuffle:
-            # the newest layout decision is already an explicit spread
-            return df
-    return df.repartition(target)
-
-
-def _first_node(plan: str, names: tuple[str, ...]) -> int | None:
-    """Line index of the first (i.e. most-downstream) logical-plan NODE
-    whose name starts with one of ``names``; None if absent. Matches
-    node names only (line heads after the tree-drawing prefix), never
-    expression text — a lowercase ``aggregate(...)`` lambda inside a
-    projection does not count."""
-    for i, line in enumerate(plan.splitlines()):
-        head = line.lstrip(" :+-")
-        if head.startswith(names):
-            return i
-    return None
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if files and len(files) < target:
+        return df.repartition(target)
+    return df
 
 
 def max_broadcast_rows() -> int:
@@ -121,7 +56,7 @@ def max_broadcast_rows() -> int:
     return int(os.environ.get("SPARK_GRAFT_MAX_BROADCAST_ROWS", "1000000"))
 
 
-def collect_bounded(df: DataFrame) -> list | None:
+def collect_bounded(df: DataFrame, *, warn: bool = True) -> list | None:
     """Collect a side that is small by contract, or ``None`` when the
     contract is broken.
 
@@ -138,6 +73,8 @@ def collect_bounded(df: DataFrame) -> list | None:
     side, which re-evaluates it once per consumer — a cost only corpora
     that break the contract pay. The collect holds at most bound + 1
     rows, the driver memory a broadcast of the side needs anyway.
+    ``warn=False`` is for callers whose distributed path is the designed
+    regime for large inputs, not a broken contract.
     """
     import warnings
 
@@ -145,6 +82,8 @@ def collect_bounded(df: DataFrame) -> list | None:
     rows = df.limit(bound + 1).collect()
     if len(rows) <= bound:
         return rows
+    if not warn:
+        return None
     warnings.warn(
         f"collect_bounded: side has >{bound} rows — the rarity contract "
         "is broken; falling back to the distributed path instead of "

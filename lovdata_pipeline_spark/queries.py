@@ -890,12 +890,10 @@ def decontaminate_benchmark_overlap(spark, sf_dir):
     """Benchmark decontamination report (new r4): training docs sharing
     any word-3-gram with the benchmark slice, with overlap counts.
     Scale shape: scan-local n-gram hashing, broadcast benchmark set,
-    one 16-byte-pair aggregate shuffle — text never moves. The
-    single-file test corpus pins the interpreted n-gram loop to one
-    scan task, so spread it locally (a corpus-scale table is already
-    many-partitioned)."""
+    one 16-byte-pair aggregate shuffle — text never moves. The n-gram
+    scan spreads its own single-file input (``decontam``'s
+    ``spread_if_narrow``)."""
     train, bench = _bench_split(spark, sf_dir)
-    train = spread_if_narrow(train)
     return decontam.ngram_overlap_flags(train, bench, n=3).orderBy("doc_id")
 
 
@@ -1538,13 +1536,16 @@ def pretraining_pipeline(spark, sf_dir):
     # anti-join's left side) and everything upstream is regex-heavy;
     # cache+count pins ONE evaluation of the ingest/PII/dedup prefix
     # (same scoped-cache discipline as ngram_jaccard_pairs — released by
-    # the session's cache clearing, lineage recoverable).
-    surv = fp.join(keep, ["fp", "doc_id"]).drop("fp").cache()
+    # the session's cache clearing, lineage recoverable). A cached frame
+    # reads no files, so the operators below cannot spread it: spread
+    # here, while the frame still sees the single-file table.
+    surv = spread_if_narrow(fp.join(keep, ["fp", "doc_id"]).drop("fp")).cache()
     surv.count()
     decont = decontam.decontaminate(surv, bench, n=3)
     rates = {f"src{i}": (1.0 if i < 10 else 0.4) for i in range(20)}
     # mixed likewise fans out three ways (quality stats, packing input,
-    # final source join)
+    # final source join); it keeps surv's spread layout (the anti-join
+    # broadcasts its flag side, the mix is a filter)
     mixed = stratified_sample(decont, rates, "source", "doc_id", seed="mix-v1").cache()
     stats = textstats.hashed_linear_quality(mixed).select(
         "doc_id", "n_tokens", "quality_logit"

@@ -91,8 +91,3 @@ MANIFEST_SCHEMA = T.StructType(
         T.StructField("status", T.StringType(), False),
     ]
 )
-
-
-def ddl(schema: T.StructType) -> str:
-    """Schema as a DDL string (handy for applyInPandas/mapInPandas)."""
-    return schema.simpleString()[len("struct<") : -1].replace(":", " ")

@@ -11,6 +11,7 @@ boundary ties).
 from __future__ import annotations
 
 import math
+import warnings
 
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
@@ -446,7 +447,9 @@ def test_connected_components_driver_and_distributed_parity(spark, monkeypatch):
 
 def test_connected_components_path_choice_at_the_bound(spark, monkeypatch):
     """Exactly ``bound`` edges take the driver finish; ``bound + 1``
-    edges take the distributed loop. Same rows either way."""
+    edges take the distributed loop. Same rows either way, and the loop
+    (the designed large-graph path, not a broken rarity contract) raises
+    no RuntimeWarning."""
     from lovdata_pipeline_spark.operators import dedup
 
     calls = []
@@ -463,8 +466,11 @@ def test_connected_components_path_choice_at_the_bound(spark, monkeypatch):
     assert calls == [3]
 
     monkeypatch.setenv("SPARK_GRAFT_MAX_BROADCAST_ROWS", "2")
-    assert set(map(tuple, dedup.connected_components(pairs).collect())) == want
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert set(map(tuple, dedup.connected_components(pairs).collect())) == want
     assert calls == [3]
+    assert not [w for w in caught if issubclass(w.category, RuntimeWarning)]
 
 
 @pytest.mark.slow_ladder

@@ -47,6 +47,52 @@ def _with_xml(rows):
     return [(d, ds, p, xml[d], h, s) for d, ds, p, _, h, s in rows]
 
 
+def test_flatten_sync_state_lovlig_shape(spark, tmp_path):
+    """Op 3: lovlig's nested state.json becomes one manifest row per
+    file — the dataset name is the archive minus ``.tar.bz2``, doc_id the
+    file stem, a missing status reads ``added`` and a missing sha256
+    reads as an empty hash."""
+    import json
+
+    from lovdata_pipeline_spark.operators.incremental import flatten_sync_state
+    from lovdata_pipeline_spark.schemas import MANIFEST_SCHEMA
+
+    state = {
+        "raw_datasets": {
+            "gjeldende-lover.tar.bz2": {
+                "files": {
+                    "nl/nl-18840614-003.xml": {"sha256": "aa", "status": "modified"},
+                    "nl/nl-19020522-010.xml": {"sha256": "bb"},
+                }
+            },
+            "gjeldende-sentrale-forskrifter.tar.bz2": {
+                "files": {"sf/sf-20050627-0709.xml": {"status": "removed"}}
+            },
+            "empty-archive.tar.bz2": {},
+        }
+    }
+    path = tmp_path / "state.json"
+    path.write_text(json.dumps(state))
+    manifest = flatten_sync_state(spark, path)
+    assert manifest.schema == MANIFEST_SCHEMA
+    assert sorted(tuple(r) for r in manifest.collect()) == [
+        ("nl-18840614-003", "gjeldende-lover", "nl/nl-18840614-003.xml", "aa", "modified"),
+        ("nl-19020522-010", "gjeldende-lover", "nl/nl-19020522-010.xml", "bb", "added"),
+        (
+            "sf-20050627-0709",
+            "gjeldende-sentrale-forskrifter",
+            "sf/sf-20050627-0709.xml",
+            "",
+            "removed",
+        ),
+    ]
+
+    path.write_text("{}")
+    empty = flatten_sync_state(spark, path)
+    assert empty.schema == MANIFEST_SCHEMA
+    assert empty.count() == 0
+
+
 class TestLifecycle:
     def test_full_matrix(self, spark, stores):
         store, state = stores

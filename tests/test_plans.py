@@ -15,14 +15,12 @@ def test_all_plans_clean(spark):
 
 
 def test_spread_if_narrow_is_conditional(spark, tmp_path):
-    """spread_if_narrow must add an Exchange ONLY for the shape it
-    exists for — a file-backed input with fewer files than cores — and
-    must never probe ``.rdd`` (r14: the old probe materialized AQE
-    stages on derived inputs, re-running upstream compute). A
-    corpus-scale table (files >= cores) and non-file inputs are
-    untouched; an input that already carries a Repartition is not
-    re-spread (composed operators would otherwise stack one Exchange
-    per call)."""
+    """spread_if_narrow adds a round-robin Exchange ONLY for the shape it
+    exists for — a file-backed input with fewer files than cores. A
+    corpus-scale table (files >= cores) and inputs that read no files
+    (in-memory and cached frames) come back unchanged without running a
+    job; spreading an already-spread input leaves one Exchange in the
+    executed plan (Catalyst collapses the adjacent repartitions)."""
     from lovdata_pipeline_spark.operators.skew import spread_if_narrow
 
     cores = spark.sparkContext.defaultParallelism
@@ -39,15 +37,52 @@ def test_spread_if_narrow_is_conditional(spark, tmp_path):
     assert spread is not narrow
     assert spread.rdd.getNumPartitions() == cores
 
-    # already-spread input: no second Exchange stacked on top
+    # already-spread input: one round-robin Exchange in the final plan
     again = spread_if_narrow(spread.select("id"))
-    assert (
-        again._jdf.queryExecution().logical().toString().count("Repartition")
-        == 1
-    )
+    again.collect()
+    final = again._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    assert final.count("RoundRobinPartitioning") == 1
+
+    # cached narrow input (before and after the cache fills): it reads
+    # no files, so it is returned as is, and deciding runs no job
+    cached = narrow.filter("id % 2 = 0").cache()
+    try:
+        sc = spark.sparkContext
+        sc.setJobGroup("spread-cached", "spread_if_narrow, cache empty")
+        assert spread_if_narrow(cached) is cached
+        sc.setJobGroup("fill-cache", "fill the cache")
+        cached.count()
+        sc.setJobGroup("spread-cached-filled", "spread_if_narrow, cache filled")
+        assert spread_if_narrow(cached) is cached
+        tracker = sc.statusTracker()
+        assert tracker.getJobIdsForGroup("fill-cache")  # the probe works
+        assert tracker.getJobIdsForGroup("spread-cached") == []
+        assert tracker.getJobIdsForGroup("spread-cached-filled") == []
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            spark.sparkContext.setLocalProperty(key, None)
+        cached.unpersist()
 
     # many-files parquet (>= cores): untouched — corpus-scale no-op
     many = str(tmp_path / "many")
     spark.range(1000).repartition(cores + 4).write.parquet(many)
     wide = spark.read.parquet(many)
     assert spread_if_narrow(wide) is wide
+
+
+def test_library_holds_no_private_jvm_handles():
+    """The package talks to Spark through the public PySpark API only:
+    ``_jdf``/``_jvm``/``_jsc`` reach into private JVM objects whose
+    plan strings and methods change across Spark versions."""
+    import re
+
+    pkg = Path(__file__).resolve().parents[1] / "lovdata_pipeline_spark"
+    handle = re.compile(r"\._j(df|vm|sc)\b")
+    hits = [
+        f"{path.relative_to(pkg)}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if handle.search(line)
+    ]
+    assert not hits, hits
