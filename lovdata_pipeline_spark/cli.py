@@ -284,8 +284,11 @@ def cmd_curate(args) -> int:
     # hashed_linear_quality cannot spread a narrow input themselves:
     # spread it before the first cache. A narrow input is small, so the
     # dedup and decontam joins broadcast their other side and keep this
-    # layout, as does the mix (a filter).
+    # layout, as does the mix (a filter). Every frame cached below is
+    # released after the write, so a long-lived session keeps exactly
+    # the caches it had before (lg clean's rule).
     cur = spread_if_narrow(cur).cache()
+    pinned = [cur]
     stages["after_pii"] = cur.count()
 
     if not args.no_dedup:
@@ -297,6 +300,7 @@ def cmd_curate(args) -> int:
         )
         keep = fp.groupBy("_fp").agg(F.min(id_col).alias(id_col))
         cur = fp.join(keep, ["_fp", id_col]).drop("_fp").cache()
+        pinned.append(cur)
         stages["after_dedup"] = cur.count()
 
     if args.benchmark:
@@ -304,6 +308,7 @@ def cmd_curate(args) -> int:
         cur = decontam.decontaminate(
             cur, bench, n=args.ngram, text_col=text_col, id_col=id_col
         ).cache()
+        pinned.append(cur)
         stages["after_decontam"] = cur.count()
 
     if args.mix:
@@ -312,11 +317,13 @@ def cmd_curate(args) -> int:
             k, _, v = part.partition("=")
             rates[k.strip()] = float(v)
         cur = stratified_sample(cur, rates, strata_col, id_col, seed=args.seed).cache()
+        pinned.append(cur)
         stages["after_mix"] = cur.count()
     elif args.temperature is not None:
         cur = temperature_sample(
             cur, strata_col, id_col, alpha=args.temperature, seed=args.seed
         ).cache()
+        pinned.append(cur)
         stages["after_mix"] = cur.count()
 
     stats = textstats.hashed_linear_quality(cur, text_col, id_col).select(
@@ -329,6 +336,8 @@ def cmd_curate(args) -> int:
         ).drop("n_tokens")
         out = out.join(seqs, id_col)
     out.write.mode("overwrite").parquet(args.output)
+    for df in pinned:  # release exactly what this command pinned
+        df.unpersist()
     if args.seq_len:
         from lovdata_pipeline_spark.operators.packing import release_offsets_caches
 
@@ -997,15 +1006,15 @@ def cmd_quantize(args) -> int:
     per-dimension min/max (one scan, exact), write (id, codes) —
     one byte of information per dimension, the 4× storage/memory tier
     below PQ — plus the fit parameters as ``_sq8_params.json`` inside
-    the output directory (the ``_`` prefix keeps parquet readers from
-    listing it). Print one JSON summary line. Decode is the affine map
+    the output directory (the ``indexwrite`` artifact format). Print
+    one JSON summary line. Decode is the affine map
     mn + code·(mx − mn)/255 with the stored arrays."""
     import json as _json
-    import os as _os
 
     from pyspark.sql import functions as F
 
     from lovdata_pipeline_spark.operators import similarity
+    from lovdata_pipeline_spark.operators.indexwrite import write_artifact
 
     spark = _spark("lg-quantize")
     emb = spark.read.parquet(args.input)
@@ -1024,10 +1033,18 @@ def cmd_quantize(args) -> int:
     codes = similarity.sq8_encode(
         emb, mins, maxs, id_col=args.id_col, vec_col=args.vec_col
     )
-    codes.write.mode("overwrite").parquet(args.output)
+    write_artifact(
+        codes,
+        args.output,
+        "sq8",
+        {
+            "version": similarity.SQ8_ARTIFACT_VERSION,
+            "dims": dims,
+            "mins": mins,
+            "maxs": maxs,
+        },
+    )
     n_out = spark.read.parquet(args.output).count()
-    with open(_os.path.join(args.output, "_sq8_params.json"), "w") as fh:
-        _json.dump({"dims": dims, "mins": mins, "maxs": maxs}, fh)
     print(
         _json.dumps(
             {
@@ -1243,8 +1260,8 @@ def cmd_funnel(args) -> int:
 def cmd_sketch(args) -> int:
     """Corpus sketches over a documents parquet. ``--mode cms`` builds
     a count-min sketch (optionally persisted with ``--output``; its
-    parameters land in a ``_cms_params.json`` sidecar like the SQ8/IVF
-    artifacts) and prints estimates for ``--query`` tokens as JSON
+    parameters land in a ``_cms_params.json`` sidecar, the
+    ``indexwrite`` artifact format) and prints estimates for ``--query`` tokens as JSON
     lines; ``--mode hll`` prints the per-group HyperLogLog
     distinct-token estimates, optionally persisting the registers with
     ``--output`` (+ ``_hll_params.json``) and merging persisted stores
@@ -1252,23 +1269,18 @@ def cmd_sketch(args) -> int:
     ``--mode bloom`` builds the membership filter and answers
     ``--query`` token probes. All run one explode scan with
     parameter-bounded aggregate state — usable at any corpus size."""
-    import os as _os
-
     from pyspark.sql import functions as F
 
     from lovdata_pipeline_spark.operators.sketches import (
         cms_estimate,
         cms_sketch,
+        cms_sketch_load,
+        cms_sketch_write,
         hll_estimate,
         hll_registers,
         hll_registers_load,
         hll_registers_merge,
         hll_registers_write,
-    )
-
-    from lovdata_pipeline_spark.operators.sketches import (
-        CMS_STORE_VERSION,
-        cms_sketch_load,
     )
 
     spark = _spark("lg-sketch")
@@ -1414,9 +1426,7 @@ def cmd_sketch(args) -> int:
         w, d = args.width, args.depth
         sk = cms_sketch(docs, w=w, d=d)
         if args.output:
-            sk.write.mode("overwrite").parquet(args.output)
-            with open(_os.path.join(args.output, "_cms_params.json"), "w") as fh:
-                json.dump({"version": CMS_STORE_VERSION, "w": w, "d": d}, fh)
+            cms_sketch_write(sk, args.output, w, d)
     if args.query:
         terms = [t for t in args.query.split(",") if t]
         qdf = spark.createDataFrame([(t,) for t in terms], "token string")
@@ -1441,11 +1451,9 @@ def cmd_layout(args) -> int:
     clamp, or fail loud with ``--strict-range``); ``--index`` +
     ``--box`` box-scans a persisted index with stats-rectangle pruning
     and prints a JSON summary (rows matched, buckets scanned/total)."""
-    import os as _os
-
     from lovdata_pipeline_spark.operators.layout import (
-        _SIDECAR,
         zorder_append,
+        zorder_box_buckets,
         zorder_box_scan,
         zorder_write_index,
     )
@@ -1492,20 +1500,13 @@ def cmd_layout(args) -> int:
         print("error: --box must be four comma-separated integers")
         return 2
     scan = zorder_box_scan(spark, idx, qx_lo, qx_hi, qy_lo, qy_hi)
-    with open(_os.path.join(idx, _SIDECAR)) as fh:
-        sc = json.load(fh)
-    cands = [
-        b
-        for b, s in sc["buckets"].items()
-        if s["minqx"] <= qx_hi and s["maxqx"] >= qx_lo
-        and s["minqy"] <= qy_hi and s["maxqy"] >= qy_lo
-    ]
+    cands, n_total = zorder_box_buckets(idx, qx_lo, qx_hi, qy_lo, qy_hi)
     print(
         json.dumps(
             {
                 "rows": scan.count(),
                 "buckets_scanned": len(cands),
-                "buckets_total": len(sc["buckets"]),
+                "buckets_total": n_total,
             }
         )
     )

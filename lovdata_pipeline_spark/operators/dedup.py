@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
+from lovdata_pipeline_spark.operators.indexwrite import read_sidecar, write_sidecar
 from lovdata_pipeline_spark.operators.skew import collect_bounded, spread_if_narrow
 from lovdata_pipeline_spark.operators.textstats import _clean_split
 from lovdata_pipeline_spark.session import driver_rows
@@ -498,9 +499,6 @@ def minhash_store_write(
     when pair-searching inside a batch (``minhash_lsh_pairs``); the
     store keeps complete signatures so the probe side decides its own
     pruning."""
-    import json as _json
-    import os as _os
-
     # r13: the bands write and the shingles write both consume the
     # shingle frame — unpersisted, the corpus was tokenized/shingled
     # twice (guide §5: reuse-justified persist, released below)
@@ -513,18 +511,18 @@ def minhash_store_write(
     finally:
         sh.unpersist()
     n_docs = docs.select(id_col).distinct().count()
-    with open(_os.path.join(path, "_minhash_params.json"), "w") as fh:
-        _json.dump(
-            {
-                "version": MINHASH_STORE_VERSION,
-                "n": n,
-                "num_hashes": num_hashes,
-                "bands": bands,
-                "id_col": id_col,
-                "n_docs": n_docs,
-            },
-            fh,
-        )
+    write_sidecar(
+        path,
+        "minhash",
+        {
+            "version": MINHASH_STORE_VERSION,
+            "n": n,
+            "num_hashes": num_hashes,
+            "bands": bands,
+            "id_col": id_col,
+            "n_docs": n_docs,
+        },
+    )
     return n_docs
 
 
@@ -555,16 +553,7 @@ def minhash_store_dedup_new(
     history's text), and the verify joins only candidate ids against
     the stored sets table. Cost scales with the BATCH, not the corpus.
     """
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_minhash_params.json")) as fh:
-        params = _json.load(fh)
-    if params.get("version") != MINHASH_STORE_VERSION:
-        raise ValueError(
-            f"minhash store version {params.get('version')} != "
-            f"{MINHASH_STORE_VERSION} (rebuild): {path}"
-        )
+    params = read_sidecar(path, "minhash", MINHASH_STORE_VERSION)
     n = params["n"]
     num_hashes = params["num_hashes"]
     bands = params["bands"]

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from lovdata_pipeline_spark.operators.indexwrite import write_one_file_per_partition
+from lovdata_pipeline_spark.operators.indexwrite import read_sidecar, write_artifact
 from lovdata_pipeline_spark.operators.sampling import top_k_per_group
 from lovdata_pipeline_spark.operators import _vecmath
 from lovdata_pipeline_spark.operators.similarity import _as_double, _dot, _norm
@@ -251,9 +251,6 @@ def knn_write_ivf_index(
     index. The sidecar carries ``geometry: 'knn-sphere-raw-v1'`` so
     the reader rejects a raw-space search index (``lg index`` without
     ``--graph``) passed by mistake."""
-    import json as _json
-    import os as _os
-
     from lovdata_pipeline_spark.operators.similarity import (
         IVF_INDEX_VERSION,
         deterministic_centroids,
@@ -273,12 +270,11 @@ def knn_write_ivf_index(
         u, n_cells, id_col="vid", vec_col="uv", portable=True
     )
     assigned = _probe_cells(v.select("vid", "vv"), cents, n_probe=1)
-    # one file per cell directory — the shared indexwrite discipline
-    write_one_file_per_partition(
+    # one file per cell directory (indexwrite)
+    write_artifact(
         assigned,
         path,
-        "cell",
-        "_ivf_params.json",
+        "ivf",
         {
             "version": IVF_INDEX_VERSION,
             "n_cells": len(cents),
@@ -286,6 +282,7 @@ def knn_write_ivf_index(
             "geometry": KNN_INDEX_GEOMETRY,
             "centroids": cents,
         },
+        partition_col="cell",
     )
     return cents
 
@@ -349,29 +346,20 @@ def _ivf_index_candidates(
     also reads only the probed partitions (r9 review: re-reading the
     whole index for dst vectors would defeat the pruning) and scores
     the same raw-vector expression as the in-memory path."""
-    import json as _json
-    import os as _os
-
     import numpy as np
     import pandas as pd
 
-    spark = v.sparkSession
-    with open(_os.path.join(index_path, "_ivf_params.json")) as fh:
-        params = _json.load(fh)
     from lovdata_pipeline_spark.operators.similarity import IVF_INDEX_VERSION
 
-    if params.get("version") != IVF_INDEX_VERSION:
-        raise ValueError(
-            f"knn ivf index version {params.get('version')} != "
-            f"{IVF_INDEX_VERSION} — rebuild with knn_write_ivf_index"
-        )
-    if params.get("geometry") != KNN_INDEX_GEOMETRY:
-        raise ValueError(
-            f"index at {index_path} has geometry "
-            f"{params.get('geometry')!r}, not {KNN_INDEX_GEOMETRY!r} — "
-            "this looks like a raw-space search index (lg index without "
-            "--graph); build the graph geometry with knn_write_ivf_index"
-        )
+    spark = v.sparkSession
+    # a raw-space search index (lg index without --graph) fails the
+    # geometry gate: rebuild it with knn_write_ivf_index
+    params = read_sidecar(
+        index_path,
+        "ivf",
+        IVF_INDEX_VERSION,
+        expect={"geometry": KNN_INDEX_GEOMETRY},
+    )
 
     # consumed twice (probed-cell collect + the per-cell scoring join),
     # deliberately NOT persisted (r9 ADVICE / r10 VERDICT Next #5: the

@@ -23,11 +23,10 @@ Everything here is pure integer math, replayable bit-for-bit in SQL:
   of its values (an ORACLE can replay it; a sampled range partitioner
   could balance rows better but its boundaries are not replayable).
 
-The persisted form (``zorder_write_index`` / ``zorder_box_scan``)
-follows the engine's partitioned-index discipline (one file per bucket
-directory via ``indexwrite``, params + per-bucket stats in a JSON
-sidecar, reads prune with an IN filter the plan shows as
-``PartitionFilters``) — the IVF/postings convention, applied to layout.
+The persisted form (``zorder_write_index`` / ``zorder_box_scan``) is
+an ``indexwrite`` artifact (one file per bucket directory, params +
+per-bucket stats in the JSON sidecar); reads prune with an IN filter
+the plan shows as ``PartitionFilters``.
 
 Incremental maintenance (``zorder_append``, r13): the sidecar PINS the
 quantization ranges at build time (the chunk-store modulus-pin
@@ -43,15 +42,19 @@ upsert idiom (``sources/chunk_store.py:185``), applied to layout.
 
 from __future__ import annotations
 
-import json as _json
-import os as _os
-
 from pyspark.sql import Column, DataFrame, functions as F
+
+from lovdata_pipeline_spark.operators.indexwrite import (
+    read_sidecar,
+    sidecar_name,
+    write_artifact,
+    write_sidecar,
+)
 
 #: interleave precision per dimension; zvalue spans 2*ZBITS bits.
 ZBITS = 16
 
-_SIDECAR = "_zorder_params.json"
+_SIDECAR = sidecar_name("zorder")
 _VERSION = "zorder-v1"
 
 
@@ -241,10 +244,6 @@ def zorder_write_index(
     layout params and the per-bucket quantized min/max stats the
     reader prunes with — the Delta data-skipping contract, in a form a
     plain JSON read can consume without touching any data file."""
-    from lovdata_pipeline_spark.operators.indexwrite import (
-        write_one_file_per_partition,
-    )
-
     _validate_params(bits, n_buckets)
     [rng] = df.agg(
         F.min(xcol).cast("long").alias("xlo"),
@@ -301,19 +300,11 @@ def zorder_write_index(
         },
     }
     try:
-        write_one_file_per_partition(
-            zf.drop("zvalue"), path, "zbucket", _SIDECAR, sidecar
+        write_artifact(
+            zf.drop("zvalue"), path, "zorder", sidecar, partition_col="zbucket"
         )
     finally:
         zf.unpersist()
-
-
-def _load_sidecar(path: str) -> dict:
-    with open(_os.path.join(path, _SIDECAR)) as fh:
-        sc = _json.load(fh)
-    if sc.get("version") != _VERSION:
-        raise ValueError(f"zorder index at {path}: unknown version {sc.get('version')}")
-    return sc
 
 
 def zorder_append(
@@ -335,7 +326,7 @@ def zorder_append(
     stay exact in quantized space); ``on_out_of_range="error"`` fails
     loud instead. Returns ``{"appended": n, "dirty_buckets": [...]}``.
     """
-    sc = _load_sidecar(path)
+    sc = read_sidecar(path, "zorder", _VERSION)
     if "ranges" not in sc:
         raise ValueError(
             f"zorder index at {path}: no pinned ranges in sidecar "
@@ -394,27 +385,17 @@ def zorder_append(
             "maxqy": row["maxqy"],
             "n_rows": row["n_rows"],
         }
-    tmp = _os.path.join(path, _SIDECAR + ".tmp")
-    with open(tmp, "w") as fh:
-        _json.dump(sc, fh)
-    _os.replace(tmp, _os.path.join(path, _SIDECAR))
+    write_sidecar(path, "zorder", sc)
     return {"appended": new.count(), "dirty_buckets": [int(d) for d in dirty]}
 
 
-def zorder_box_scan(
-    spark,
-    path: str,
-    qx_lo: int,
-    qx_hi: int,
-    qy_lo: int,
-    qy_hi: int,
-) -> DataFrame:
-    """Read only the zbuckets whose stats rectangle intersects the
-    quantized box [qx_lo, qx_hi] × [qy_lo, qy_hi], then apply the box
-    predicate. The IN filter on the partition column is what the plan
-    shows as ``PartitionFilters`` — file-level pruning from plain
-    per-bucket min/max stats, no curve arithmetic at read time."""
-    sc = _load_sidecar(path)
+def zorder_box_buckets(
+    path: str, qx_lo: int, qx_hi: int, qy_lo: int, qy_hi: int
+) -> tuple[list[int], int]:
+    """The pruning rule: (the zbuckets whose stats rectangle intersects
+    the quantized box [qx_lo, qx_hi] × [qy_lo, qy_hi], the index's
+    bucket count), from the sidecar alone."""
+    sc = read_sidecar(path, "zorder", _VERSION)
     for b, s in sc["buckets"].items():
         # a "None" bucket with null stats means the index was written
         # from rows with NULL dimension values (pre-guard build): its
@@ -433,6 +414,22 @@ def zorder_box_scan(
         if s["minqx"] <= qx_hi and s["maxqx"] >= qx_lo
         and s["minqy"] <= qy_hi and s["maxqy"] >= qy_lo
     ]
+    return cands, len(sc["buckets"])
+
+
+def zorder_box_scan(
+    spark,
+    path: str,
+    qx_lo: int,
+    qx_hi: int,
+    qy_lo: int,
+    qy_hi: int,
+) -> DataFrame:
+    """Read only the zbuckets ``zorder_box_buckets`` keeps, then apply
+    the box predicate. The IN filter on the partition column is what
+    the plan shows as ``PartitionFilters`` — file-level pruning from
+    plain per-bucket min/max stats, no curve arithmetic at read time."""
+    cands, _ = zorder_box_buckets(path, qx_lo, qx_hi, qy_lo, qy_hi)
     df = spark.read.parquet(path)
     return df.where(F.col("zbucket").isin(cands)).where(
         (F.col("qx") >= qx_lo) & (F.col("qx") <= qx_hi)

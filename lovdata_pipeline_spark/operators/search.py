@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from lovdata_pipeline_spark.operators.indexwrite import write_one_file_per_partition
+from lovdata_pipeline_spark.operators.indexwrite import read_sidecar, write_artifact
 from lovdata_pipeline_spark.operators.textstats import _clean_split
 
 
@@ -234,8 +234,8 @@ def postings_write(
 ) -> None:
     """Persist the positional inverted index: the full (doc, pos, term)
     postings parquet PARTITIONED BY ``tbucket`` (a term-hash bucket)
-    plus a ``_postings_params.json`` sidecar — the ``ivf_write_index``
-    layout convention. Partitioning by raw term would create a
+    plus a ``_postings_params.json`` sidecar — the ``indexwrite``
+    artifact format. Partitioning by raw term would create a
     directory per vocabulary word; hashing terms into ``n_buckets``
     partitions keeps the directory count fixed while a phrase probe
     still reads ONLY its terms' buckets via Catalyst partition pruning
@@ -243,26 +243,23 @@ def postings_write(
     the index at any corpus size. Build cost: the one tokenize scan +
     one partitioned write every search deployment pays to have an
     index at all."""
-    import json as _json
-    import os as _os
-
     postings = docs.select(
         F.col(id_col),
         F.posexplode(_clean_split(F.lower(F.col(text_col)))).alias("pos", "term"),
     ).withColumn(
         "tbucket", F.pmod(F.xxhash64(F.col("term")), F.lit(n_buckets)).cast("int")
     )
-    # one file per bucket directory — the shared indexwrite discipline
-    write_one_file_per_partition(
+    # one file per bucket directory (indexwrite)
+    write_artifact(
         postings,
         path,
-        "tbucket",
-        "_postings_params.json",
+        "postings",
         {
             "version": POSTINGS_INDEX_VERSION,
             "n_buckets": n_buckets,
             "id_col": id_col,
         },
+        partition_col="tbucket",
     )
 
 
@@ -278,16 +275,7 @@ def postings_phrase_counts(spark, path: str, phrase: str) -> DataFrame:
     persisted a superset postings frame the caller could never
     release; VERDICT r7 "What's wrong #1"/Next #3). Results are
     identical to the in-memory form (pinned in tests)."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_postings_params.json")) as fh:
-        params = _json.load(fh)
-    if params.get("version") != POSTINGS_INDEX_VERSION:
-        raise ValueError(
-            f"postings index version {params.get('version')} != "
-            f"{POSTINGS_INDEX_VERSION} (rebuild): {path}"
-        )
+    params = read_sidecar(path, "postings", POSTINGS_INDEX_VERSION)
     terms = [t for t in phrase.strip().lower().split() if t]
     if not terms:
         raise ValueError("postings_phrase_counts: empty phrase")

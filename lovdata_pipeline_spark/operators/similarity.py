@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from lovdata_pipeline_spark.operators import _vecmath
-from lovdata_pipeline_spark.operators.indexwrite import write_one_file_per_partition
+from lovdata_pipeline_spark.operators.indexwrite import read_sidecar, write_artifact
 
 
 def _as_double(col) -> Column:
@@ -360,9 +360,6 @@ def ivf_write_index(
     exact-integer Lloyd refinement first (bit-stable, but no longer
     SQL-replayable — use for production indexes, not graded ones).
     Returns the centroids."""
-    import json as _json
-    import os as _os
-
     cents = deterministic_centroids(
         vectors, n_cells, id_col=id_col, vec_col=vec_col, portable=portable
     )
@@ -371,13 +368,12 @@ def ivf_write_index(
             vectors, cents, refine_iterations, id_col=id_col, vec_col=vec_col
         )
     assigned = ivf_assign(vectors, cents, id_col=id_col, vec_col=vec_col)
-    # one file per cell directory, not shuffle-partitions-many — the
-    # shared indexwrite discipline (rationale + measurements there)
-    write_one_file_per_partition(
+    # one file per cell directory, not shuffle-partitions-many
+    # (rationale + measurements in indexwrite)
+    write_artifact(
         assigned,
         path,
-        "cell",
-        "_ivf_params.json",
+        "ivf",
         {
             "version": IVF_INDEX_VERSION,
             "n_cells": len(cents),
@@ -385,6 +381,7 @@ def ivf_write_index(
             "refine_iterations": refine_iterations,
             "centroids": cents,
         },
+        partition_col="cell",
     )
     return cents
 
@@ -409,17 +406,7 @@ def ivf_index_topk(
     ``n_probe >= n_cells`` degrades to exact brute force over the whole
     index (pinned). Results are identical to ``ivf_topk`` over the same
     centroids — the index is a layout, not a different algorithm."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_ivf_params.json")) as fh:
-        params = _json.load(fh)
-    if params.get("version") != IVF_INDEX_VERSION:
-        raise ValueError(
-            f"ivf index version {params.get('version')} != "
-            f"{IVF_INDEX_VERSION} (rebuild): {path}"
-        )
-    cents = params["centroids"]
+    cents = read_sidecar(path, "ivf", IVF_INDEX_VERSION)["centroids"]
     order = sorted(
         range(len(cents)),
         key=lambda i: sum((q - c) ** 2 for q, c in zip(query, cents[i])),
@@ -732,6 +719,10 @@ def _sq8_codes(vec: Column, mins: list[float], maxs: list[float]) -> Column:
         )
         .cast("int"),
     )
+
+
+#: bump when the persisted SQ8 codes layout (``lg quantize``) changes.
+SQ8_ARTIFACT_VERSION = 1
 
 
 def sq8_encode(

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from lovdata_pipeline_spark.operators import textstats
 from lovdata_pipeline_spark.operators.dedup import portable_token_hash
+from lovdata_pipeline_spark.operators.indexwrite import read_sidecar, write_artifact
 
 #: salts namespace the two sketches' hash families apart.
 CMS_SALT = "cms-v1"
@@ -207,24 +208,22 @@ def hll_estimate(
 CMS_STORE_VERSION = 1
 
 
-def cms_sketch_load(spark, path: str):
-    """Load a persisted CMS sketch (``lg sketch --output`` layout:
-    cells parquet + ``_cms_params.json`` sidecar) → (cells DataFrame,
-    w, d). Point queries go through ``cms_estimate`` with the STORE's
-    parameters — estimating under different w/d than the build would
-    silently probe the wrong cells, so the sidecar is the only source
-    of truth (the SQ8/IVF/postings artifact convention, version-gated).
-    """
-    import json as _json
-    import os as _os
+def cms_sketch_write(sketch: DataFrame, path: str, w: int, d: int) -> None:
+    """Persist a ``cms_sketch`` (``lg sketch --output``): the cells
+    parquet plus a ``_cms_params.json`` sidecar carrying (version, w,
+    d) — the ``indexwrite`` artifact format."""
+    write_artifact(
+        sketch, path, "cms", {"version": CMS_STORE_VERSION, "w": w, "d": d}
+    )
 
-    with open(_os.path.join(path, "_cms_params.json")) as fh:
-        params = _json.load(fh)
-    if params.get("version") != CMS_STORE_VERSION:
-        raise ValueError(
-            f"cms sketch version {params.get('version')} != "
-            f"{CMS_STORE_VERSION} (rebuild): {path}"
-        )
+
+def cms_sketch_load(spark, path: str):
+    """Load a persisted CMS sketch (``cms_sketch_write``) → (cells
+    DataFrame, w, d). Point queries go through ``cms_estimate`` with the
+    STORE's parameters — estimating under different w/d than the build
+    would silently probe the wrong cells, so the version-gated sidecar
+    is the only source of truth."""
+    params = read_sidecar(path, "cms", CMS_STORE_VERSION)
     return spark.read.parquet(path), int(params["w"]), int(params["d"])
 
 
@@ -242,20 +241,17 @@ def hll_registers_write(
     Next #5). Registers built under a different p or hash salt are
     NOT mergeable (different bucket spaces), so the sidecar is the
     only source of truth and the loader refuses mismatches."""
-    import json as _json
-    import os as _os
-
-    registers.write.mode("overwrite").parquet(path)
-    with open(_os.path.join(path, "_hll_params.json"), "w") as fh:
-        _json.dump(
-            {
-                "version": HLL_STORE_VERSION,
-                "p": int(p),
-                "salt": HLL_SALT,
-                "group_col": group_col,
-            },
-            fh,
-        )
+    write_artifact(
+        registers,
+        path,
+        "hll",
+        {
+            "version": HLL_STORE_VERSION,
+            "p": int(p),
+            "salt": HLL_SALT,
+            "group_col": group_col,
+        },
+    )
 
 
 def hll_registers_load(spark, path: str):
@@ -263,21 +259,9 @@ def hll_registers_load(spark, path: str):
     group_col). Version- and salt-gated: merging registers hashed
     under a different salt or bucket width would silently estimate
     garbage, so both must match this build's constants."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_hll_params.json")) as fh:
-        params = _json.load(fh)
-    if params.get("version") != HLL_STORE_VERSION:
-        raise ValueError(
-            f"hll store version {params.get('version')} != "
-            f"{HLL_STORE_VERSION} (rebuild): {path}"
-        )
-    if params.get("salt") != HLL_SALT:
-        raise ValueError(
-            f"hll store salt {params.get('salt')!r} != {HLL_SALT!r} "
-            f"(incompatible hash family): {path}"
-        )
+    params = read_sidecar(
+        path, "hll", HLL_STORE_VERSION, expect={"salt": HLL_SALT}
+    )
     return spark.read.parquet(path), int(params["p"]), params["group_col"]
 
 
@@ -595,35 +579,23 @@ def hdr_registers_write(
     built under a different ``sub_bits`` live in a different bucket
     space and are NOT mergeable, so the sidecar is the only source of
     truth and the loader refuses mismatched merges."""
-    import json as _json
-    import os as _os
-
-    registers.write.mode("overwrite").parquet(path)
-    with open(_os.path.join(path, "_hdr_params.json"), "w") as fh:
-        _json.dump(
-            {
-                "version": HDR_STORE_VERSION,
-                "sub_bits": int(sub_bits),
-                "group_col": group_col,
-            },
-            fh,
-        )
+    write_artifact(
+        registers,
+        path,
+        "hdr",
+        {
+            "version": HDR_STORE_VERSION,
+            "sub_bits": int(sub_bits),
+            "group_col": group_col,
+        },
+    )
 
 
 def hdr_registers_load(spark, path: str):
     """Load a persisted HDR register store → (registers DataFrame,
     sub_bits, group_col). Version-gated: counting a sub_bits-8 idx as
     a sub_bits-10 idx would silently estimate garbage."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_hdr_params.json")) as fh:
-        params = _json.load(fh)
-    if params.get("version") != HDR_STORE_VERSION:
-        raise ValueError(
-            f"hdr store version {params.get('version')} != "
-            f"{HDR_STORE_VERSION} (rebuild): {path}"
-        )
+    params = read_sidecar(path, "hdr", HDR_STORE_VERSION)
     return spark.read.parquet(path), int(params["sub_bits"]), params["group_col"]
 
 

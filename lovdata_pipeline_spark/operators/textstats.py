@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from lovdata_pipeline_spark.operators.indexwrite import read_sidecar, write_artifact
 from lovdata_pipeline_spark.operators.skew import spread_if_narrow
 
 # Tiny per-language stopword anchors — enough signal for a corpus-level
@@ -793,7 +794,7 @@ def train_text_classifier(
     )
 
 
-#: classifier weight-table artifact version (the BPE/SQ8 discipline).
+#: classifier weight-table artifact version (``indexwrite`` format).
 CLF_ARTIFACT_VERSION = 1
 
 
@@ -801,43 +802,33 @@ def save_classifier(weights_df: DataFrame, path: str, seed: str = "clf-v1") -> i
     """Persist a trained weight table (parquet + ``_clf_params.json``
     sidecar: version, bucket count, hash seed, fixed-point scale) so
     training and scoring can run in different sessions."""
-    import json as _json
-    import os as _os
-
-    weights_df.write.mode("overwrite").parquet(path)
     n = weights_df.count()
-    with open(_os.path.join(path, "_clf_params.json"), "w") as fh:
-        _json.dump(
-            {
-                "version": CLF_ARTIFACT_VERSION,
-                "n_buckets": int(n) - 1,
-                "seed": seed,
-                "wscale": _CLF_WSCALE,
-            },
-            fh,
-        )
+    write_artifact(
+        weights_df,
+        path,
+        "clf",
+        {
+            "version": CLF_ARTIFACT_VERSION,
+            "n_buckets": int(n) - 1,
+            "seed": seed,
+            "wscale": _CLF_WSCALE,
+        },
+    )
     return int(n)
 
 
 def load_classifier(spark, path: str) -> tuple[list, str]:
     """Load a saved weight table → (weights_q list ordered by bucket,
-    hash seed) for ``apply_text_classifier``. Validates the sidecar."""
-    import json as _json
-    import os as _os
-
-    side = _os.path.join(path, "_clf_params.json")
-    seed = "clf-v1"
-    if _os.path.exists(side):
-        with open(side) as fh:
-            params = _json.load(fh)
-        if params.get("version") != CLF_ARTIFACT_VERSION:
-            raise ValueError(
-                f"classifier artifact version {params.get('version')} != "
-                f"{CLF_ARTIFACT_VERSION} (retrain): {path}"
-            )
-        if params.get("wscale") != _CLF_WSCALE:
-            raise ValueError(f"classifier artifact wscale mismatch: {path}")
-        seed = params.get("seed", seed)
+    hash seed) for ``apply_text_classifier``. Validates the sidecar; a
+    bare weight parquet (no sidecar) loads with the default seed."""
+    params = read_sidecar(
+        path,
+        "clf",
+        CLF_ARTIFACT_VERSION,
+        expect={"wscale": _CLF_WSCALE},
+        optional=True,
+    )
+    seed = (params or {}).get("seed", "clf-v1")
     rows = spark.read.parquet(path).orderBy("bucket").collect()
     return [int(r["weight_q"]) for r in rows], seed
 
@@ -1941,25 +1932,21 @@ def save_bpe_merges(merges_df: DataFrame, path: str) -> int:
     """Persist a trained merge table as a VERSIONED parquet artifact:
     the (rank, left, right, merged, n_occurrences) rows plus a
     ``_bpe_params.json`` sidecar (version, n_merges, separator
-    codepoint) inside the output directory — the ``_sq8_params.json``
-    discipline, so training and applying can run in different sessions
-    (``lg tokenizer --output`` writes it; ``bpe_apply`` /
-    ``lg analyze --bpe`` load it). The ``_`` prefix keeps parquet
-    readers from listing the sidecar. Returns the merge count."""
-    import json as _json
-    import os as _os
-
-    merges_df.write.mode("overwrite").parquet(path)
+    codepoint) inside the output directory — the ``indexwrite``
+    artifact format, so training and applying can run in different
+    sessions (``lg tokenizer --output`` writes it; ``bpe_apply`` /
+    ``lg analyze --bpe`` load it). Returns the merge count."""
     n = merges_df.count()  # merge tables are parameters-sized
-    with open(_os.path.join(path, "_bpe_params.json"), "w") as fh:
-        _json.dump(
-            {
-                "version": BPE_ARTIFACT_VERSION,
-                "n_merges": int(n),
-                "separator": ord(_BPE_SEP),
-            },
-            fh,
-        )
+    write_artifact(
+        merges_df,
+        path,
+        "bpe",
+        {
+            "version": BPE_ARTIFACT_VERSION,
+            "n_merges": int(n),
+            "separator": ord(_BPE_SEP),
+        },
+    )
     return int(n)
 
 
@@ -1969,23 +1956,13 @@ def load_bpe_merges(spark, path: str) -> list:
     collect). Validates the sidecar's version and separator so an
     artifact trained under different rules fails loudly; a missing
     sidecar (a bare merge parquet) is accepted for compatibility."""
-    import json as _json
-    import os as _os
-
-    side = _os.path.join(path, "_bpe_params.json")
-    if _os.path.exists(side):
-        with open(side) as fh:
-            params = _json.load(fh)
-        if params.get("version") != BPE_ARTIFACT_VERSION:
-            raise ValueError(
-                f"bpe artifact version {params.get('version')} != "
-                f"{BPE_ARTIFACT_VERSION} (retrain or migrate): {path}"
-            )
-        if params.get("separator") != ord(_BPE_SEP):
-            raise ValueError(
-                f"bpe artifact separator {params.get('separator')} != "
-                f"{ord(_BPE_SEP)}: {path}"
-            )
+    read_sidecar(
+        path,
+        "bpe",
+        BPE_ARTIFACT_VERSION,
+        expect={"separator": ord(_BPE_SEP)},
+        optional=True,
+    )
     rows = spark.read.parquet(path).orderBy("rank").collect()
     return [(r["left"], r["right"]) for r in rows]
 

@@ -252,6 +252,32 @@ def test_clean_releases_only_its_own_pins(spark, tmp_path):
     bystander.unpersist()
 
 
+def test_curate_releases_only_its_own_pins(
+    spark, tmp_path, docs_parquet, bench_parquet
+):
+    """`lg curate` unpersists the stage frames it cached (PII, dedup,
+    decontam, mix) and leaves an unrelated cached frame alone — the
+    `lg clean` rule above, applied to the curation command."""
+    bystander = spark.createDataFrame([(1, "x")], "k long, v string").persist()
+    bystander.count()
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    out = tmp_path / "curated_pins"
+    rc = main(
+        [
+            "curate",
+            "--input", docs_parquet,
+            "--output", str(out),
+            "--benchmark", bench_parquet,
+            "--mix", "web=1.0,books=1.0",
+        ]
+    )
+    assert rc == 0
+    after = spark.sparkContext._jsc.getPersistentRDDs().size()
+    assert after == before, "curate left its own pins cached or evicted others"
+    assert bystander.storageLevel.useMemory
+    bystander.unpersist()
+
+
 def test_analyze_null_text(spark, tmp_path, capsys):
     """NULL-text docs land in histogram bucket -1 instead of crashing the
     driver-side int(None) (r5 ADVICE: token_count_col(NULL) is NULL under

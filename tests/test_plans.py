@@ -86,3 +86,38 @@ def test_library_holds_no_private_jvm_handles():
         if handle.search(line)
     ]
     assert not hits, hits
+
+
+def test_only_indexwrite_touches_artifact_sidecars():
+    """One module owns the versioned-artifact format: outside
+    ``operators/indexwrite.py`` no package code opens, dumps or loads a
+    ``_<kind>_params.json`` sidecar. File-object JSON (``json.load`` /
+    ``json.dump``) is flagged everywhere else, and any file call whose
+    arguments name a sidecar."""
+    import ast
+    import re
+
+    pkg = Path(__file__).resolve().parents[1] / "lovdata_pipeline_spark"
+    names_sidecar = re.compile(r"_params\.json|sidecar", re.IGNORECASE)
+    file_calls = {"open", "replace", "read_text", "write_text", "load", "dump"}
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "operators/indexwrite.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = getattr(fn, "id", None) or getattr(fn, "attr", None)
+            json_file_io = (
+                name in ("load", "dump")
+                and isinstance(fn, ast.Attribute)
+                and isinstance(fn.value, ast.Name)
+                and fn.value.id.lstrip("_") == "json"
+            )
+            if json_file_io or (
+                name in file_calls and names_sidecar.search(ast.unparse(node))
+            ):
+                hits.append(f"{rel}:{node.lineno}")
+    assert not hits, hits
