@@ -42,15 +42,19 @@ def sidecar_name(kind: str) -> str:
     return f"_{kind}_params.json"
 
 
-def write_sidecar(path: str, kind: str, params: dict) -> None:
-    """Commit ``params`` as ``path``'s sidecar: temp file, then an atomic
-    rename, so a reader sees the old sidecar or the new one, never a
-    torn write. Call only once the data under ``path`` is written."""
-    final = os.path.join(path, sidecar_name(kind))
-    tmp = final + ".tmp"
+def write_json_atomic(final, obj) -> None:
+    """Write ``obj`` as JSON to ``final``: temp file, then an atomic
+    rename, so a reader sees the old file or the new one, never a torn
+    write."""
+    tmp = f"{final}.tmp"
     with open(tmp, "w") as fh:
-        json.dump(params, fh)
+        json.dump(obj, fh)
     os.replace(tmp, final)
+
+
+def write_sidecar(path: str, kind: str, params: dict) -> None:
+    """Commit ``params`` as ``path``'s sidecar, once its data is written."""
+    write_json_atomic(os.path.join(path, sidecar_name(kind)), params)
 
 
 def write_artifact(

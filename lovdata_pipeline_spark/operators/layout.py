@@ -231,6 +231,23 @@ def zorder_frame_pinned(
     return _interleave(out, bits, n_buckets)
 
 
+def _bucket_stats(zf: DataFrame) -> dict:
+    """The sidecar's per-bucket stats of ``zf``: quantized min/max and
+    row count, keyed by the bucket as a string (bounded: one row per
+    bucket)."""
+    stats = zf.groupBy("zbucket").agg(
+        F.min("qx").alias("minqx"),
+        F.max("qx").alias("maxqx"),
+        F.min("qy").alias("minqy"),
+        F.max("qy").alias("maxqy"),
+        F.count(F.lit(1)).alias("n_rows"),
+    )
+    return {
+        str(r["zbucket"]): {k: r[k] for k in stats.columns[1:]}
+        for r in stats.orderBy("zbucket").collect()
+    }
+
+
 def zorder_write_index(
     df: DataFrame,
     path: str,
@@ -266,18 +283,6 @@ def zorder_write_index(
     # consume zf — unpersisted, each re-ran the full quantize projection
     # (and re-scanned the source) from scratch; one cached evaluation
     # feeds both (guide §5: reuse-justified persist, released below)
-    stats = (
-        zf.groupBy("zbucket")
-        .agg(
-            F.min("qx").alias("minqx"),
-            F.max("qx").alias("maxqx"),
-            F.min("qy").alias("minqy"),
-            F.max("qy").alias("maxqy"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .orderBy("zbucket")
-        .collect()  # bounded: n_buckets rows
-    )
     sidecar = {
         "version": _VERSION,
         "xcol": xcol,
@@ -288,16 +293,7 @@ def zorder_write_index(
             "xlo": ranges[0], "xhi": ranges[1],
             "ylo": ranges[2], "yhi": ranges[3],
         },
-        "buckets": {
-            str(r["zbucket"]): {
-                "minqx": r["minqx"],
-                "maxqx": r["maxqx"],
-                "minqy": r["minqy"],
-                "maxqy": r["maxqy"],
-                "n_rows": r["n_rows"],
-            }
-            for r in stats
-        },
+        "buckets": _bucket_stats(zf),
     }
     try:
         write_artifact(
@@ -316,9 +312,10 @@ def zorder_append(
     curve position, the wrong-modulus failure class), rewrite ONLY the
     dirty buckets via dynamic partition overwrite (the chunk-store
     upsert idiom: union new rows with the dirty buckets' existing rows,
-    cut lineage with localCheckpoint because the rewrite plan reads the
-    very files it replaces, one file per bucket), and refresh the
-    dirty buckets' stats in the sidecar (atomic tmp+rename swap).
+    one file per bucket; the rewrite plan reads the very files it
+    replaces, which is safe because the bucket directories swap only at
+    job commit), and refresh the dirty buckets' stats in the sidecar
+    (atomic tmp+rename swap).
 
     Out-of-pinned-range rows clamp to the pinned boundary value by
     default (deterministic, SQL-replayable with LEAST/GREATEST, and
@@ -345,48 +342,41 @@ def zorder_append(
         df, sc["xcol"], sc["ycol"], (r["xlo"], r["xhi"], r["ylo"], r["yhi"]),
         bits=bits, n_buckets=n_buckets, on_out_of_range=on_out_of_range,
     ).drop("zvalue")
-    # materialize once: the dirty-bucket probe, the rewrite, and the
-    # stats refresh all consume it (and the guard exprs must fire here,
-    # not three times)
-    new = new.localCheckpoint(eager=True)
-    dirty = sorted(
-        row["zbucket"] for row in new.select("zbucket").distinct().collect()
-    )  # bounded: <= n_buckets values
-    if not dirty:
-        return {"appended": 0, "dirty_buckets": []}
-    old = (
-        spark.read.parquet(path)
-        .where(F.col("zbucket").isin(dirty))
-        # partition-column type is inferred (int) on read; the fresh
-        # side computes long — align before unionByName
-        .withColumn("zbucket", F.col("zbucket").cast("long"))
-    )
-    merged = old.unionByName(new.select(*old.columns)).localCheckpoint(eager=True)
-    (
-        merged.repartition(F.col("zbucket"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("zbucket")
-        .parquet(path)
-    )
+    # persisted once: the probe and the rewrite both read it (and the
+    # guard exprs fire in the probe, not again in the rewrite)
+    new = new.persist()
+    try:
+        # ONE probe job: the dirty buckets and the appended row count
+        probe = new.groupBy("zbucket").count().collect()  # <= n_buckets rows
+        dirty = sorted(row["zbucket"] for row in probe)
+        if not dirty:
+            return {"appended": 0, "dirty_buckets": []}
+        old = (
+            spark.read.parquet(path)
+            .where(F.col("zbucket").isin(dirty))
+            # partition-column type is inferred (int) on read; the fresh
+            # side computes long — align before unionByName
+            .withColumn("zbucket", F.col("zbucket").cast("long"))
+        )
+        merged = old.unionByName(new.select(*old.columns))
+        (
+            merged.repartition(F.col("zbucket"))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("zbucket")
+            .parquet(path)
+        )
+    finally:
+        new.unpersist()
     spark.catalog.refreshByPath(path)
-    stats = merged.groupBy("zbucket").agg(
-        F.min("qx").alias("minqx"),
-        F.max("qx").alias("maxqx"),
-        F.min("qy").alias("minqy"),
-        F.max("qy").alias("maxqy"),
-        F.count(F.lit(1)).alias("n_rows"),
-    ).collect()  # bounded: |dirty| rows
-    for row in stats:
-        sc["buckets"][str(row["zbucket"])] = {
-            "minqx": row["minqx"],
-            "maxqx": row["maxqx"],
-            "minqy": row["minqy"],
-            "maxqy": row["maxqy"],
-            "n_rows": row["n_rows"],
-        }
+    # stats from the written buckets: ``merged``'s lazy ``old`` side would
+    # now read the new files and count the appended rows twice
+    sc["buckets"].update(
+        _bucket_stats(spark.read.parquet(path).where(F.col("zbucket").isin(dirty)))
+    )
     write_sidecar(path, "zorder", sc)
-    return {"appended": new.count(), "dirty_buckets": [int(d) for d in dirty]}
+    appended = sum(row["count"] for row in probe)
+    return {"appended": appended, "dirty_buckets": [int(d) for d in dirty]}
 
 
 def zorder_box_buckets(

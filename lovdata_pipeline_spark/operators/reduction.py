@@ -30,6 +30,9 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
+from lovdata_pipeline_spark.operators.skew import collect_bounded
+from lovdata_pipeline_spark.session import driver_rows
+
 #: quantization scale: float32 embeddings in [-2, 2] map to ints < 2^22.
 SCALE = 1 << 20
 
@@ -216,14 +219,13 @@ def _pca_rerank_candidates(
 ):
     """Stage 1 of ``pca_rerank_topk``: the IVF probe (or exhaustive
     broadcast scan) + per-query top-pool over the projected corpus,
-    materialized ONCE as the bounded candidate set (|queries|·pool id
+    collected ONCE as the bounded candidate set (|queries|·pool id
     pairs; r13, guide §1.2/§5) — stage 1 is the operator's expensive
     subtree and otherwise re-runs inside every downstream reference
     (the graded recall query consumes the result twice: the hit join
-    AND the per-query count, which doubled the whole probe).
-    localCheckpoint, not cache: blocks are ContextCleaner-released when
-    references drop, so a graded run leaves no CacheManager pin (the
-    per_q discipline in queries.py)."""
+    AND the per-query count, which doubled the whole probe). Driver
+    rows leave no pin and survive executor loss; past the row bound the
+    set stays lazy. Call it before ``cp`` is released."""
     from lovdata_pipeline_spark.operators.sampling import top_k_per_group
     from lovdata_pipeline_spark.operators.similarity import (
         deterministic_centroids,
@@ -286,17 +288,14 @@ def _pca_rerank_candidates(
             .crossJoin(cp)
             .select(query_id, corpus_id, F.round(neg_dist, 6).alias("_nd"))
         )
-    # r14 re-measurement (VERDICT Next #3): interleaved solo A/B of
-    # eager / lazy / NO checkpoint medians 5.81 / 5.78 / 5.67s — the
-    # checkpoint mode is not this query's cost (a 29-job census puts it
-    # scheduler-bound at ~0.24s/job). Eager stays: it is the shape the
-    # r13 oracle evidence and plan files describe, and it keeps stage 1
-    # single-run for every consumer.
-    return (
-        top_k_per_group(scored, pool, query_id, "_nd", corpus_id)
-        .select(query_id, corpus_id)
-        .localCheckpoint(eager=True)
+    # r14 interleaved A/B of eager / lazy / NO checkpoint: 5.81 / 5.78 /
+    # 5.67 s — materialization is not this query's cost (a 29-job census
+    # puts it scheduler-bound at ~0.24 s/job).
+    cand = top_k_per_group(scored, pool, query_id, "_nd", corpus_id).select(
+        query_id, corpus_id
     )
+    rows = collect_bounded(cand, warn=False)
+    return cand if rows is None else driver_rows(cp.sparkSession, rows, cand.schema)
 
 
 def pca_rerank_topk(
@@ -341,10 +340,9 @@ def pca_rerank_topk(
     index) — the whole operator is reproducible under any
     partitioning.
     """
-    from lovdata_pipeline_spark.operators.sampling import top_k_per_group
-    from lovdata_pipeline_spark.operators.similarity import _as_double, _dot, _norm
-
     from lovdata_pipeline_spark.operators import _vecmath
+    from lovdata_pipeline_spark.operators.sampling import top_k_per_group
+    from lovdata_pipeline_spark.operators.similarity import _as_double
 
     qp = pca_project(
         queries.select(query_id, vec_col), model, vec_col=vec_col, out_col="_qp"
@@ -375,7 +373,6 @@ def pca_rerank_topk(
     finally:
         if persisted:
             cp.unpersist()
-    from lovdata_pipeline_spark.operators import _vecmath
 
     # r14 (guide §4.2): the stage-2 rescore's norms + pair dot run as
     # Arrow-batched vectorized UDFs, fold-order exact (_vecmath).

@@ -34,6 +34,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 from lovdata_pipeline_spark.operators import textstats
 from lovdata_pipeline_spark.operators.dedup import portable_token_hash
 from lovdata_pipeline_spark.operators.indexwrite import read_sidecar, write_artifact
+from lovdata_pipeline_spark.operators.skew import collect_bounded
+from lovdata_pipeline_spark.session import driver_rows
 
 #: salts namespace the two sketches' hash families apart.
 CMS_SALT = "cms-v1"
@@ -392,9 +394,12 @@ def hll_pair_overlap(
     ga, gb = f"{group_col}_a", f"{group_col}_b"
     # three consumers below (both pair contributions + the singles
     # estimate) would each re-run the register build — the only
-    # corpus-bounded stage in the whole matrix. Materialize the
-    # parameter-bounded register table once (|groups|·m rows).
-    registers = registers.localCheckpoint(eager=True)
+    # corpus-bounded stage in the whole matrix. The register table is
+    # parameter-bounded (|groups|·m rows): collect it once into driver
+    # rows; past the row bound it stays lazy.
+    rows = collect_bounded(registers, warn=False)
+    if rows is not None:
+        registers = driver_rows(registers.sparkSession, rows, registers.schema)
     groups = registers.select(group_col).distinct()
     pairs = groups.select(F.col(group_col).alias(ga)).join(
         groups.select(F.col(group_col).alias(gb)), F.col(ga) < F.col(gb)

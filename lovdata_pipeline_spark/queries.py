@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from lovdata_pipeline_spark.operators import decontam, dedup, similarity, textstats
-from lovdata_pipeline_spark.operators.skew import spread_if_narrow
+from lovdata_pipeline_spark.operators.skew import collect_bounded, spread_if_narrow
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -2567,6 +2567,7 @@ def ann_pca_rerank_recall_embeddings(spark, sf_dir):
     the sf1 sweep. Clustered corpora (real embedding spaces) hold far
     more — the pytest fixture pins ≥ 0.94 mean at 2/8 probing."""
     from lovdata_pipeline_spark.operators import reduction
+    from lovdata_pipeline_spark.session import driver_rows
 
     (emb,) = load(spark, sf_dir, "embeddings")
     m = reduction.pca_fit(emb, k=32)
@@ -2591,15 +2592,14 @@ def ann_pca_rerank_recall_embeddings(spark, sf_dir):
         approx.groupBy("query_id")
         .agg(F.count(F.lit(1)).alias("n_results"))
         .join(hits, "query_id", "left")
-        # both the verdict aggregate and the final projection read this
-        # frame — checkpoint the (one-row-per-query, 3 narrow columns)
-        # result so the expensive lineage above (IVF probe + rescore +
-        # exact knn_join over the corpus) runs ONCE, not twice inside
-        # the crossJoin plan (r10 review). localCheckpoint, not cache:
-        # blocks are ContextCleaner-released when references drop, so a
-        # graded run leaves no CacheManager pin.
-        .localCheckpoint()
     )
+    # the verdict aggregate and the final projection both read per_q
+    # (one row per query): driver rows run the lineage above (IVF probe
+    # + rescore + exact knn_join) ONCE, not twice inside the crossJoin
+    # plan (r10 review), and leave no pin. Past the row bound it is lazy.
+    rows = collect_bounded(per_q, warn=False)
+    if rows is not None:
+        per_q = driver_rows(spark, rows, per_q.schema)
     # corpus-mean verdict as a broadcast 1-row scalar (the whitelisted
     # crossJoin shape): every row carries the aggregate judgment
     verdict = per_q.agg(

@@ -29,10 +29,12 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from lovdata_pipeline_spark.operators.indexwrite import write_json_atomic
 from lovdata_pipeline_spark.schemas import ENRICHED_CHUNKS_SCHEMA
 from lovdata_pipeline_spark.session import driver_rows
 
 _BUCKET = "bucket"
+_META = "_store_meta.json"
 # NOTE: built as a fresh StructType — StructType.add mutates in place and
 # would corrupt the shared ENRICHED_CHUNKS_SCHEMA.
 _STORED_SCHEMA = T.StructType(
@@ -69,7 +71,7 @@ class ChunkStore:
         # layout (else 32), while an explicit mismatch fails loud —
         # changing it requires a rebuild (read -> new store), exactly
         # like re-bucketing a Hive table.
-        meta = Path(self.root) / "_store_meta.json"
+        meta = Path(self.root) / _META
         stored = None
         if meta.exists():
             import json as _json
@@ -157,20 +159,22 @@ class ChunkStore:
                             "rebuild the store"
                         )
                     ChunkStore._data_confirmed.add(memo_key)
-                import errno
-                import json as _json
+                self._pin_buckets()
 
-                try:
-                    meta.write_text(_json.dumps({"n_buckets": self.n_buckets}))
-                except OSError as exc:
-                    # ONLY the read-only cases pass silently
-                    # (validation above still ran; pinning waits for
-                    # a writable open). Swallowing e.g. ENOSPC would
-                    # silently leave a WRITABLE store unpinned and
-                    # revive the slip-past corruption path this
-                    # guard exists to close (r11 review).
-                    if exc.errno not in (errno.EROFS, errno.EACCES, errno.EPERM):
-                        raise
+    def _pin_buckets(self) -> None:
+        """Commit ``n_buckets`` to ``_store_meta.json`` atomically: a crash
+        mid-write leaves no sidecar, never a truncated one."""
+        import errno
+
+        try:
+            write_json_atomic(Path(self.root) / _META, {"n_buckets": self.n_buckets})
+        except OSError as exc:
+            # ONLY the read-only cases pass silently (pinning waits for a
+            # writable open). Swallowing e.g. ENOSPC would silently leave
+            # a WRITABLE store unpinned and revive the slip-past
+            # corruption path this guard exists to close (r11 review).
+            if exc.errno not in (errno.EROFS, errno.EACCES, errno.EPERM):
+                raise
 
     def _bucket_col(self, doc_id: str | None = None):
         """The bucket of the row's ``document_id`` or, given ``doc_id``, of
@@ -198,16 +202,13 @@ class ChunkStore:
         )
         # Session-wide FileStatusCache still lists the replaced files.
         self.spark.catalog.refreshByPath(self.root)
-        meta = Path(self.root) / "_store_meta.json"
         # Pin the sidecar only once data actually exists (r14 ADVICE): an
         # empty write creates no bucket partitions, and stamping
         # n_buckets onto a store holding zero data would make a later
         # open of the still-empty store with a different explicit
         # n_buckets fail the mismatch guard for no reason.
-        if not meta.exists() and any(Path(self.root).glob(f"{_BUCKET}=*")):
-            import json as _json
-
-            meta.write_text(_json.dumps({"n_buckets": self.n_buckets}))
+        if not (Path(self.root) / _META).exists() and any(Path(self.root).glob(f"{_BUCKET}=*")):
+            self._pin_buckets()
 
     def _rewrite(self, incoming: DataFrame | None, drop: list[str]) -> int:
         """The one mutation path: every bucket that ``incoming`` writes to
@@ -218,10 +219,10 @@ class ChunkStore:
         ``drop`` ids."""
         if not any(Path(self.root).glob(f"{_BUCKET}=*")):
             # First load into an EMPTY store (r13): nothing to drop or merge,
-            # and the write reads no store files, so the probe, the incoming
-            # cache and the lineage cut are pure overhead — the chunk→embed
-            # output is evaluated exactly ONCE, by the write itself (an empty
-            # incoming writes no partitions).
+            # and the write reads no store files, so the probe and the
+            # incoming cache are pure overhead — the chunk→embed output is
+            # evaluated exactly ONCE, by the write itself (an empty incoming
+            # writes no partitions).
             if incoming is not None:
                 self._write_buckets(incoming.select(*[f.name for f in _STORED_SCHEMA.fields]))
             return 0
@@ -264,11 +265,11 @@ class ChunkStore:
                 keep = keep.join(
                     incoming.select("document_id").distinct(), "document_id", "left_anti"
                 ).unionByName(incoming.select(*keep.columns))
-            # The rewrite plan reads the same files it replaces, so cut
-            # lineage first (localCheckpoint materializes the result); with
-            # Delta this whole method is a single MERGE and the checkpoint
-            # disappears.
-            keep = keep.localCheckpoint(eager=True)
+            # The rewrite plan reads the same files it replaces. Dynamic
+            # overwrite makes that safe without materializing ``keep``:
+            # every task writes to a staging directory and the bucket
+            # directories are swapped only at job commit, after every
+            # task has read its input.
             before = {b: self._bucket_files(b) for b in touched}
             self._write_buckets(keep)
             # Dynamic overwrite never writes a partition that ended up empty,

@@ -17,3 +17,12 @@ def spark():
     spark = get_spark("tests", shuffle_partitions=4)
     yield spark
     spark.stop()
+
+
+def _pinned_ids(spark) -> set:
+    """Ids (not count) of currently persisted RDDs: assertions diff id
+    SETS so the ContextCleaner asynchronously releasing some OTHER
+    test's GC-owned checkpoint blocks mid-test can never flip a
+    verdict (count-based asserts were flaky under full-suite ordering)."""
+    m = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in m.keySet().toArray()}

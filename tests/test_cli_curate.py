@@ -9,6 +9,7 @@ import json
 import pytest
 
 from lovdata_pipeline_spark.cli import main
+from tests.conftest import _pinned_ids
 
 
 @pytest.fixture()
@@ -229,12 +230,12 @@ def test_clean_releases_only_its_own_pins(spark, tmp_path):
     """`lg clean` unpersists exactly the frames it pinned (r8 VERDICT
     "What's wrong" #3): the command's own pins are gone afterwards AND a
     pre-existing unrelated cached frame survives — the old blanket
-    ``spark.catalog.clearCache()`` would have evicted it. Counts compare
+    ``spark.catalog.clearCache()`` would have evicted it. Pins compare
     against the PRE-invocation baseline because a shared full-suite
     session legitimately holds other documented caches."""
     bystander = spark.createDataFrame([(1, "x")], "k long, v string").persist()
     bystander.count()
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    before = _pinned_ids(spark)
     p = tmp_path / "dirty_pins"
     spark.createDataFrame(
         [(1, "HEAD\na one", "web"), (2, "HEAD\nb two", "web"), (3, "HEAD\nc", "web")],
@@ -245,8 +246,7 @@ def test_clean_releases_only_its_own_pins(spark, tmp_path):
         ["clean", "--input", str(p), "--output", str(out), "--paragraph-sep", r"\n"]
     )
     assert rc == 0
-    after = spark.sparkContext._jsc.getPersistentRDDs().size()
-    assert after == before, "clean left its own pins cached or evicted others"
+    assert not (_pinned_ids(spark) - before), "clean left its own pins cached"
     # the bystander itself must still be materialized in the cache
     assert bystander.storageLevel.useMemory
     bystander.unpersist()
@@ -260,7 +260,7 @@ def test_curate_releases_only_its_own_pins(
     `lg clean` rule above, applied to the curation command."""
     bystander = spark.createDataFrame([(1, "x")], "k long, v string").persist()
     bystander.count()
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    before = _pinned_ids(spark)
     out = tmp_path / "curated_pins"
     rc = main(
         [
@@ -272,8 +272,7 @@ def test_curate_releases_only_its_own_pins(
         ]
     )
     assert rc == 0
-    after = spark.sparkContext._jsc.getPersistentRDDs().size()
-    assert after == before, "curate left its own pins cached or evicted others"
+    assert not (_pinned_ids(spark) - before), "curate left its own pins cached"
     assert bystander.storageLevel.useMemory
     bystander.unpersist()
 

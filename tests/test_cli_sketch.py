@@ -11,6 +11,7 @@ import os
 import pytest
 
 from lovdata_pipeline_spark.cli import main
+from tests.conftest import _pinned_ids
 
 
 @pytest.fixture()
@@ -65,27 +66,23 @@ def test_sketch_hll_reports_per_group(docs_parquet, capsys):
     assert all(l["n_est"] > 0 for l in lines)
 
 
-def _n_persistent_rdds(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-
 def test_phrase_cli_orders_and_counts(spark, docs_parquet, capsys):
     # VERDICT r7 Next #3: no cached postings frame survives a phrase
-    # query. Compare against the PRE-invocation count — the shared
+    # query. Compare against the PRE-invocation pins — the shared
     # session may legitimately hold other operators' documented caches
     # (textstats retained frames etc.) when the full suite runs.
-    before = _n_persistent_rdds(spark)
+    before = _pinned_ids(spark)
     rc = main(
         ["phrase", "--input", docs_parquet, "--phrase", "row column sort", "-k", "5"]
     )
     assert rc == 0
     lines = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
     assert lines == [{"doc_id": 4, "n_matches": 2}]
-    assert _n_persistent_rdds(spark) == before
+    assert not (_pinned_ids(spark) - before)
 
 
 def test_phrase_cli_index_roundtrip(spark, tmp_path, docs_parquet, capsys):
-    before = _n_persistent_rdds(spark)
+    before = _pinned_ids(spark)
     idx = str(tmp_path / "cli_postings")
     rc = main(
         [
@@ -108,7 +105,7 @@ def test_phrase_cli_index_roundtrip(spark, tmp_path, docs_parquet, capsys):
         {"doc_id": 3, "n_matches": 1},
     ]
     # VERDICT r7 Next #3: the index form leaves nothing cached either
-    assert _n_persistent_rdds(spark) == before
+    assert not (_pinned_ids(spark) - before)
 
 
 def test_sketch_hll_store_write_merge_round_trip(

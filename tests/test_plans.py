@@ -121,3 +121,31 @@ def test_only_indexwrite_touches_artifact_sidecars():
             ):
                 hits.append(f"{rel}:{node.lineno}")
     assert not hits, hits
+
+
+def test_local_checkpoint_only_cuts_iterative_lineage():
+    """``localCheckpoint`` blocks do not survive executor loss, so the
+    package keeps it only where it truncates an iterative loop's
+    lineage: the distributed components loop and pagerank. One-shot
+    materializations use the dynamic-overwrite commit, a bounded
+    collect or a persist released in ``finally``."""
+    import ast
+
+    pkg = Path(__file__).resolve().parents[1] / "lovdata_pipeline_spark"
+    allowed = {
+        ("operators/dedup.py", "connected_components"),
+        ("operators/graph.py", "pagerank_quantized"),
+    }
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Attribute)
+                    and node.attr == "localCheckpoint"
+                    and (rel, getattr(top, "name", None)) not in allowed
+                ):
+                    hits.append(f"{rel}:{node.lineno}")
+    assert not hits, hits

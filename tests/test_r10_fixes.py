@@ -14,20 +14,8 @@ from pyspark.sql import functions as F
 from lovdata_pipeline_spark.cli import main
 from lovdata_pipeline_spark.operators.similarity import bitext_margin_mine
 
+from tests.conftest import _pinned_ids
 from tests.test_r9_operators import _clustered_bitext
-
-
-def _pinned_ids(spark) -> set:
-    """Ids (not count) of currently persisted RDDs: assertions diff id
-    SETS so the ContextCleaner asynchronously releasing some OTHER
-    test's GC-owned localCheckpoint blocks mid-test can never flip a
-    verdict (count-based asserts were flaky under full-suite ordering)."""
-    m = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(k) for k in m.keySet().toArray()}
-
-
-def _n_pinned(spark) -> int:
-    return len(_pinned_ids(spark))
 
 
 class TestBitextPersistRelease:

@@ -12,7 +12,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 
-from tests.test_r10_fixes import _pinned_ids
+from tests.conftest import _pinned_ids
 
 
 class TestBoundedBroadcast:

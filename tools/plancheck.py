@@ -68,7 +68,7 @@ CROSS_JOIN_OK = {
     # hll set algebra builds the unordered group-pair grid with a
     # broadcast inequality join of two |groups|-row DISTINCT frames —
     # parameter-bounded on BOTH sides (never corpus rows; the register
-    # table itself is |groups|·m and localCheckpointed), r13.
+    # table itself is |groups|·m and collected into driver rows), r13.
     "hll_vocab_overlap_sources",
     # vocab drift crosses the |sources|-row totals with the broadcast
     # n_buckets range (a bounded parameters-sized grid) and the 1-row
