@@ -1282,6 +1282,7 @@ def cmd_sketch(args) -> int:
         hll_registers_merge,
         hll_registers_write,
     )
+    from lovdata_pipeline_spark.session import driver_rows
 
     spark = _spark("lg-sketch")
     if args.merge_stores:
@@ -1413,7 +1414,7 @@ def cmd_sketch(args) -> int:
 
             filt = bloom_build(docs, m_bits=args.m_bits, k=args.k_hashes)
             terms = [t for t in args.query.split(",") if t]
-            qdf = spark.createDataFrame([(t,) for t in terms], "token string")
+            qdf = driver_rows(spark, [(t,) for t in terms], "token string")
             hits = {
                 r.token: bool(r.in_filter)
                 for r in bloom_probe(
@@ -1429,7 +1430,7 @@ def cmd_sketch(args) -> int:
             cms_sketch_write(sk, args.output, w, d)
     if args.query:
         terms = [t for t in args.query.split(",") if t]
-        qdf = spark.createDataFrame([(t,) for t in terms], "token string")
+        qdf = driver_rows(spark, [(t,) for t in terms], "token string")
         est = {
             r.token: r.n_est
             for r in cms_estimate(sk, qdf, w=w, d=d).collect()

@@ -18,7 +18,7 @@ near-duplicate mass rather than n².
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.types import BooleanType, StructField, StructType
+from pyspark.sql.types import StructType
 
 from lovdata_pipeline_spark.operators.indexwrite import read_sidecar, write_sidecar
 from lovdata_pipeline_spark.operators.skew import collect_bounded, spread_if_narrow
@@ -826,12 +826,9 @@ def connected_components(
     edges = collect_bounded(pairs.select(id_a, id_b), warn=False)
     if edges is not None:
         id_type = sym.schema["src"].dataType
-        schema = StructType(
-            [
-                StructField("doc_id", id_type),
-                StructField("component_id", id_type),
-                StructField("is_survivor", BooleanType()),
-            ]
+        schema = (
+            StructType().add("doc_id", id_type).add("component_id", id_type)
+            .add("is_survivor", "boolean")
         )
         return driver_rows(pairs.sparkSession, _union_find_components(edges), schema)
     labels = (
@@ -1155,9 +1152,7 @@ def embedding_near_duplicates(
         spark = vectors.sparkSession
         if n == 0:  # empty corpus: the numpy matrix path needs ≥ 1 row
             id_t = vectors.schema[id_col].dataType.simpleString()
-            return spark.createDataFrame(
-                [], f"doc_a {id_t}, doc_b {id_t}, cosine double"
-            )
+            return driver_rows(spark, [], f"doc_a {id_t}, doc_b {id_t}, cosine double")
         pdf = persisted.select(id_col, vec_col).toPandas()
     finally:
         # lazy consumers built below (candidate scan, verify joins) simply
@@ -1228,6 +1223,26 @@ def _verify_cosine(
     )
 
 
+def _block_pair_members(v: DataFrame, id_col: str, n_blocks: int) -> DataFrame:
+    """Rows hashed into ``n_blocks`` blocks, each joined to every block
+    pair (bi ≤ bj) holding its block: every pair of rows meets in
+    exactly one ``pair_id`` group. Blocked near-dup and kNN-graph."""
+    pairs = driver_rows(
+        v.sparkSession,
+        [(i, j, i * n_blocks + j) for i in range(n_blocks) for j in range(i, n_blocks)],
+        "bi int, bj int, pair_id int",
+    )
+    v = v.withColumn(
+        "block", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int")
+    )
+    return v.join(F.broadcast(pairs), F.col("block") == F.col("bi")).unionByName(
+        v.join(
+            F.broadcast(pairs.filter(F.col("bi") != F.col("bj"))),
+            F.col("block") == F.col("bj"),
+        )
+    )
+
+
 def embedding_near_duplicates_blocked(
     vectors: DataFrame,
     threshold: float = 0.95,
@@ -1251,20 +1266,7 @@ def embedding_near_duplicates_blocked(
     import numpy as np
     import pandas as pd
 
-    spark = vectors.sparkSession
-    pairs = spark.createDataFrame(
-        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
-        "bi int, bj int",
-    ).withColumn("pair_id", F.col("bi") * n_blocks + F.col("bj"))
-    v = vectors.select(id_col, vec_col).withColumn(
-        "block", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int")
-    )
-    mem = v.join(F.broadcast(pairs), F.col("block") == F.col("bi")).unionByName(
-        v.join(
-            F.broadcast(pairs.filter(F.col("bi") != F.col("bj"))),
-            F.col("block") == F.col("bj"),
-        )
-    )
+    mem = _block_pair_members(vectors.select(id_col, vec_col), id_col, n_blocks)
     margin = 1e-6
     id_type = vectors.schema[id_col].dataType.simpleString()
 
@@ -1449,9 +1451,9 @@ def _cell_blocked_members(
         for i in range(b)
         for j in range(i, b)
     ]
-    nb = F.broadcast(spark.createDataFrame(blocks, "cell int, _nsub int"))
+    nb = F.broadcast(driver_rows(spark, blocks, "cell int, _nsub int"))
     pairs = F.broadcast(
-        spark.createDataFrame(pair_rows, "cell int, bi int, bj int, pair_id int")
+        driver_rows(spark, pair_rows, "cell int, bi int, bj int, pair_id int")
     )
     v = (
         assigned.join(nb, "cell")

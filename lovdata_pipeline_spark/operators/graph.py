@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from lovdata_pipeline_spark.operators.dedup import _block_pair_members
 from lovdata_pipeline_spark.operators.indexwrite import read_sidecar, write_artifact
 from lovdata_pipeline_spark.operators.sampling import top_k_per_group
 from lovdata_pipeline_spark.operators import _vecmath
@@ -75,22 +76,7 @@ def _blocked_candidates(v: DataFrame, take: int, id_type: str, n_blocks: int) ->
     import numpy as np
     import pandas as pd
 
-    spark = v.sparkSession
-    pairs = spark.createDataFrame(
-        [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
-        "bi int, bj int",
-    ).withColumn("pair_id", F.col("bi") * n_blocks + F.col("bj"))
-    blocked = v.withColumn(
-        "block", F.pmod(F.xxhash64(F.col("vid")), F.lit(n_blocks)).cast("int")
-    )
-    mem = blocked.join(
-        F.broadcast(pairs), F.col("block") == F.col("bi")
-    ).unionByName(
-        blocked.join(
-            F.broadcast(pairs.filter(F.col("bi") != F.col("bj"))),
-            F.col("block") == F.col("bj"),
-        )
-    )
+    mem = _block_pair_members(v, "vid", n_blocks)
 
     def find(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["vid"].to_numpy()

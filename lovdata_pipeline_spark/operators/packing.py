@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from lovdata_pipeline_spark.operators.textstats import _clean_split
+from lovdata_pipeline_spark.session import driver_rows
 
 # Cached offsets frames retained by global_token_offsets. The cache is
 # load-bearing while a derived frame may still be acted on (see the
@@ -112,9 +113,8 @@ def global_token_offsets(
         offsets[pid] = running
         running += subtotals[pid]
 
-    spark = df.sparkSession
-    offset_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid int, _offset long"
+    offset_df = driver_rows(
+        df.sparkSession, list(offsets.items()), "_pid int, _offset long"
     )
 
     # phase 2: partition-local running sum (window keyed by _pid never

@@ -21,6 +21,8 @@ import math
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from lovdata_pipeline_spark.session import driver_rows
+
 #: hash-space denominator: rates are granular to 0.01%.
 DENOM = 10_000
 
@@ -212,9 +214,7 @@ def cluster_balanced_sample(
         (cell, min(DENOM, (DENOM * int(target_per_cluster)) // n))
         for cell, n in sorted(counts.items())
     ]
-    thr = F.broadcast(
-        vectors.sparkSession.createDataFrame(thresholds, "cell int, _thr int")
-    )
+    thr = F.broadcast(driver_rows(vectors.sparkSession, thresholds, "cell int, _thr int"))
     return (
         assigned.join(thr, "cell")
         .filter(portable_rate_hash(F.col(id_col), seed) < F.col("_thr"))
@@ -308,7 +308,8 @@ def top_k_per_group(
     if isinstance(k, dict):
         gtype = df.schema[group_col].dataType.simpleString()
         kdf = F.broadcast(
-            df.sparkSession.createDataFrame(
+            driver_rows(
+                df.sparkSession,
                 sorted((g, int(q)) for g, q in k.items()),
                 f"{group_col} {gtype}, _tkpg_k int",
             )

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from lovdata_pipeline_spark.operators.indexwrite import read_sidecar, write_artifact
 from lovdata_pipeline_spark.operators.textstats import _clean_split
+from lovdata_pipeline_spark.session import driver_rows
 
 
 def bm25_topk(
@@ -286,7 +287,7 @@ def postings_phrase_counts(spark, path: str, phrase: str) -> DataFrame:
     # implementation to keep in sync with the writer's)
     bucket_of = {
         r.term: r.b
-        for r in spark.createDataFrame([(t,) for t in set(terms)], "term string")
+        for r in driver_rows(spark, [(t,) for t in set(terms)], "term string")
         .select(
             "term",
             F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("b"),

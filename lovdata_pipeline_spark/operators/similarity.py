@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from lovdata_pipeline_spark.operators import _vecmath
 from lovdata_pipeline_spark.operators.indexwrite import read_sidecar, write_artifact
+from lovdata_pipeline_spark.session import driver_rows
 
 
 def _as_double(col) -> Column:
@@ -59,9 +60,7 @@ def cosine_topk(
     qn = math.sqrt(sum(float(x) * float(x) for x in query))
     if qn == 0.0:
         id_t = vectors.schema[id_col].dataType.simpleString()
-        return vectors.sparkSession.createDataFrame(
-            [], f"{id_col} {id_t}, score double"
-        )
+        return driver_rows(vectors.sparkSession, [], f"{id_col} {id_t}, score double")
     q = [float(x) for x in query]
 
     # r14 (guide §4.2): the per-row norm + dot folds ran interpreted;
@@ -1059,17 +1058,8 @@ def bitext_margin_mine(
         # Short-circuit with the output schema instead.
         from pyspark.sql import types as T
 
-        return src.sparkSession.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    s.schema[src_id],
-                    t.schema[tgt_id],
-                    T.StructField("score", T.DoubleType()),
-                    T.StructField("margin", T.DoubleType()),
-                ]
-            ),
-        )
+        out = T.StructType([s.schema[src_id], t.schema[tgt_id]])
+        return driver_rows(src.sparkSession, [], out.add("score", "double").add("margin", "double"))
     if buckets and head is not None:
         import math as _math
 

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from lovdata_pipeline_spark.operators.indexwrite import read_sidecar, write_artifact
 from lovdata_pipeline_spark.operators.skew import spread_if_narrow
+from lovdata_pipeline_spark.session import driver_rows
 
 # Tiny per-language stopword anchors — enough signal for a corpus-level
 # heuristic; deliberately small so the oracle SQL stays readable.
@@ -788,7 +789,8 @@ def train_text_classifier(
                 )
     finally:
         X.unpersist()
-    return spark.createDataFrame(
+    return driver_rows(
+        spark,
         [(b, int(wq[b]), wq[b] / _CLF_WSCALE) for b in range(n_buckets + 1)],
         "bucket int, weight_q long, weight double",
     )
@@ -1060,7 +1062,7 @@ def hashed_importance_score(
     shuffles; the fan-out carries (id, int) pairs). EXACTLY two raw
     scans and one target scan: each corpus's ≤ ``n_buckets``-row count
     table is collected once, the totals fold on the driver, and the
-    merged table re-broadcasts via ``createDataFrame`` — so the final
+    merged table re-broadcasts via ``session.driver_rows`` — so the final
     per-doc job never re-runs the counting aggregates. The only full
     shuffle is the final groupBy(id) over small ints. Bucket totals are
     longs — at 100 TB pass a larger ``n_buckets`` to keep per-bucket
@@ -1088,11 +1090,9 @@ def hashed_importance_score(
         return exploded.select(*cols, bucket.alias("_b"))
 
     raw_b = bigram_buckets(docs, with_id=True)
-    # ONE counting pass per corpus: both per-bucket count tables are at
-    # most n_buckets rows by construction, so collect them, derive the
-    # totals in Python, and re-broadcast via createDataFrame — the final
-    # job then reads only the second raw scan, never recomputing the
-    # aggregates (three-scans-hidden-as-two was a review finding).
+    # ONE counting pass per corpus: both count tables are ≤ n_buckets
+    # rows, so collect them, total them in Python and broadcast them
+    # back as driver rows; the final job never recomputes the aggregates.
     raw_counts = {
         int(r["_b"]): int(r["_c"])
         for r in raw_b.groupBy("_b").agg(F.count("*").alias("_c")).collect()
@@ -1107,7 +1107,8 @@ def hashed_importance_score(
     totals = sum(raw_counts.values()) or 1
     t_total = sum(tgt_counts.values()) or 1
     table = F.broadcast(
-        docs.sparkSession.createDataFrame(
+        driver_rows(
+            docs.sparkSession,
             [
                 (b, raw_counts.get(b, 0), tgt_counts.get(b, 0))
                 for b in sorted(set(raw_counts) | set(tgt_counts))
@@ -1791,9 +1792,9 @@ def bpe_train(
         if est is not None and est <= inmemory_max_bytes:
             vocab = [(r["word"], r["cnt"]) for r in wc.collect()]
             merges = _bpe_train_inmemory(vocab, n_merges, min_count)
-            return spark.createDataFrame(merges, schema)
-        merges = _bpe_train_distributed(wc, n_merges, min_count)
-        return spark.createDataFrame(merges, schema)
+        else:
+            merges = _bpe_train_distributed(wc, n_merges, min_count)
+        return driver_rows(spark, merges, schema)
     finally:
         wc.unpersist()
 

@@ -10,7 +10,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 
 def get_spark(
@@ -53,17 +53,36 @@ def get_spark(
 
 
 def driver_rows(spark: SparkSession, rows: list, schema) -> DataFrame:
-    """A DataFrame over a few rows held on the driver (``schema`` a
-    StructType or a DDL string). Non-empty rows go to the JVM as Arrow
-    batches, so no Python worker task runs over them; empty rows become
-    an ``emptyRDD`` (no partition at all). ``createDataFrame(list)``
-    slices even an empty list into ``defaultParallelism`` Python tasks:
-    ~2 s per action at 32 slices on a 4-core host, against ~0.1-0.3 s
-    here."""
-    if not rows:
-        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
-    import pandas as pd
+    """The package's one DataFrame over rows held on the driver (tuples
+    or ``Row`` objects in the order of ``schema``, a StructType or DDL).
+    The rows become a ``pyarrow.Table`` built column by column with the
+    schema's Arrow types, so nothing is inferred (a long next to a null
+    stays exact). Spark reads it as a ``LocalRelation``: no Python task
+    runs at any action, and empty rows give an empty relation that
+    ``PropagateEmptyRelation`` prunes. One partition: a scan is one
+    task and an ``orderBy`` over the frame plans no exchange."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
+    schema = _open_structs(schema, top=True)
+    arrow = to_arrow_schema(schema)
+    cols = [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow)]
+    table = pa.Table.from_arrays(cols, schema=arrow)
+    return spark.createDataFrame(table, schema).coalesce(1)
+
+
+def _open_structs(dt, top: bool = False):
+    """``dt`` with every nested struct field nullable: PySpark rebuilds
+    a struct holding a nested or timestamp child with nullable children
+    before its Arrow cast, which then refuses a non-nullable target."""
+    if isinstance(dt, ArrayType):
+        return ArrayType(_open_structs(dt.elementType), dt.containsNull)
+    if isinstance(dt, MapType):
+        return MapType(dt.keyType, _open_structs(dt.valueType), dt.valueContainsNull)
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _open_structs(f.dataType), f.nullable or not top) for f in dt]
+        )
+    return dt

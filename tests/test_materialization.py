@@ -157,3 +157,42 @@ def test_pca_rerank_recall_query_bounded_and_lazy_paths_agree(spark, tmp_path, m
     monkeypatch.setenv("SPARK_GRAFT_MAX_BROADCAST_ROWS", "0")
     assert [tuple(r) for r in ann_pca_rerank_recall_embeddings(spark, sf).collect()] == driver
     assert driver
+
+
+def test_driver_rows_keeps_values_and_schema_exact(spark):
+    """``session.driver_rows`` takes its types from the schema, not from
+    the values: a large long next to a null stays exact (pandas would
+    widen the column to float64), structs and arrays round-trip, empty
+    input keeps the schema, and ``Row`` objects from ``collect_bounded``
+    rebuild the frame they came from."""
+    from pyspark.sql import Row
+
+    from lovdata_pipeline_spark.operators.skew import collect_bounded
+    from lovdata_pipeline_spark.session import driver_rows
+
+    big = 2**62 + 1
+    rows = driver_rows(spark, [(big, "a"), (None, "b")], "x long, s string").collect()
+    assert [tuple(r) for r in rows] == [(big, "a"), (None, "b")]
+
+    nested = driver_rows(
+        spark,
+        [((big, "q"), [big, None]), (Row(a=None, b="r"), None), ((1, None), [])],
+        "st struct<a:long,b:string>, arr array<long>",
+    ).collect()
+    assert [(tuple(r.st), r.arr) for r in nested] == [
+        ((big, "q"), [big, None]),
+        ((None, "r"), None),
+        ((1, None), []),
+    ]
+
+    empty = driver_rows(spark, [], "x long, s string")
+    assert empty.schema.simpleString() == "struct<x:bigint,s:string>"
+    assert empty.collect() == []
+    assert empty.join(spark.range(5).withColumnRenamed("id", "x"), "x").count() == 0
+
+    src = spark.range(4).selectExpr(
+        "id", "if(id = 2, null, id + 4611686018427387905) AS big",
+        "named_struct('k', id, 'v', array(id, null)) AS st",
+    )
+    got = collect_bounded(src, warn=False)
+    assert sorted(driver_rows(spark, got, src.schema).collect()) == sorted(got)

@@ -71,6 +71,66 @@ def test_spread_if_narrow_is_conditional(spark, tmp_path):
     assert spread_if_narrow(wide) is wide
 
 
+def test_driver_frames_only_through_driver_rows():
+    """Driver-held rows enter a plan through ``session.driver_rows``
+    alone: one Arrow ``LocalRelation`` in one partition, never a
+    ``createDataFrame(list)`` that reruns pickled Python tasks over
+    ``defaultParallelism`` slices at every action."""
+    import ast
+
+    pkg = Path(__file__).resolve().parents[1] / "lovdata_pipeline_spark"
+    hits = [
+        f"{path.relative_to(pkg)}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.relative_to(pkg).as_posix() != "session.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr == "createDataFrame"
+    ]
+    assert not hits, hits
+
+
+def test_driver_frames_scan_in_one_task(spark):
+    """A driver frame is one partition: an ``orderBy`` over it plans no
+    exchange, and ``hll_pair_overlap``'s collected register table scans
+    in one task per stage (read from ``statusTracker`` under a job
+    group) where a sliced ``LocalTableScan`` ran ``defaultParallelism``."""
+    from lovdata_pipeline_spark.operators.sketches import hll_pair_overlap, hll_registers
+    from lovdata_pipeline_spark.session import driver_rows
+
+    rows = [(i % 7, f"r{i}") for i in range(50)]
+    df = driver_rows(spark, rows, "k int, s string")
+    assert df.rdd.getNumPartitions() == 1
+    ordered = df.orderBy("k", "s")
+    assert ordered.collect() == sorted(driver_rows(spark, rows, "k int, s string").collect())
+    final = ordered._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in final, final
+
+    docs = driver_rows(
+        spark,
+        [(i, src, " ".join(f"w{j}" for j in range(lo + i, lo + i + 20)))
+         for src, lo in (("a", 0), ("b", 30), ("c", 300)) for i in range(6)],
+        "doc_id long, source string, text string",
+    )
+    overlap = hll_pair_overlap(hll_registers(docs, p=5), p=5)  # collects the registers
+    sc = spark.sparkContext
+    sc.setJobGroup("hll-overlap", "hll_pair_overlap over driver registers")
+    try:
+        assert len(overlap.collect()) == 3
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("hll-overlap")
+    assert jobs
+    tasks = {
+        sid: tracker.getStageInfo(sid).numTasks
+        for jid in jobs
+        for sid in tracker.getJobInfo(jid).stageIds
+        if tracker.getStageInfo(sid) is not None
+    }
+    assert tasks and set(tasks.values()) == {1}, tasks
+
+
 def test_library_holds_no_private_jvm_handles():
     """The package talks to Spark through the public PySpark API only:
     ``_jdf``/``_jvm``/``_jsc`` reach into private JVM objects whose
