@@ -48,6 +48,26 @@ def _error_row(doc_id: str, dataset: str | None, source_hash: str | None, msg: s
     }
 
 
+def chunk_batch(pdf: pd.DataFrame, params: ChunkParams) -> pd.DataFrame:
+    """Chunk one Arrow batch of document rows into CHUNKS_SCHEMA rows: the
+    per-batch loop of ``chunk_documents_df`` and of the pipeline's fused
+    chunk-and-embed stage. A document whose chunker raises becomes one
+    error row; a document yielding zero chunks adds no row."""
+    # Import inside the task so executors resolve the package fresh.
+    from lovdata_pipeline_spark.chunking.chunker import chunk_document
+
+    rows: list[dict] = []
+    for rec in pdf.itertuples(index=False):
+        doc_id = str(rec.doc_id)
+        dataset = getattr(rec, "dataset_name", None)
+        source_hash = getattr(rec, "source_hash", None)
+        try:
+            rows.extend(chunk_document(rec.xml, doc_id, dataset, source_hash, params))
+        except Exception as exc:  # poison doc → side output
+            rows.append(_error_row(doc_id, dataset, source_hash, str(exc)))
+    return pd.DataFrame(rows, columns=[f.name for f in CHUNKS_SCHEMA.fields])
+
+
 def chunk_documents_df(documents: DataFrame, params: ChunkParams | None = None) -> DataFrame:
     """Apply the chunker to every document row.
 
@@ -57,25 +77,10 @@ def chunk_documents_df(documents: DataFrame, params: ChunkParams | None = None) 
     failed-docs side output.
     """
     params = params or ChunkParams()
-    columns = [f.name for f in CHUNKS_SCHEMA.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Import inside the task so executors resolve the package fresh.
-        from lovdata_pipeline_spark.chunking.chunker import chunk_document
-
         for pdf in batches:
-            rows: list[dict] = []
-            for rec in pdf.itertuples(index=False):
-                doc_id = str(rec.doc_id)
-                dataset = getattr(rec, "dataset_name", None)
-                source_hash = getattr(rec, "source_hash", None)
-                try:
-                    rows.extend(
-                        chunk_document(rec.xml, doc_id, dataset, source_hash, params)
-                    )
-                except Exception as exc:  # poison doc → side output
-                    rows.append(_error_row(doc_id, dataset, source_hash, str(exc)))
-            yield pd.DataFrame(rows, columns=columns)
+            yield chunk_batch(pdf, params)
 
     needed = [c for c in ("doc_id", "dataset_name", "xml", "source_hash") if c in documents.columns]
     return documents.select(*needed).mapInPandas(run, schema=CHUNKS_SCHEMA)

@@ -239,6 +239,34 @@ def rate_limited(
     return embed
 
 
+def embed_batch(
+    pdf: pd.DataFrame,
+    provider: EmbeddingProvider,
+    batch_size: int,
+    model_name: str,
+    embedded_at: str,
+) -> pd.DataFrame:
+    """Embed one Arrow batch of chunk rows: the per-batch loop of
+    ``embed_chunks_df`` and of the pipeline's fused chunk-and-embed stage.
+    Texts go to ``provider`` in slices of at most ``batch_size``; a slice
+    answered with the wrong number of vectors raises. Returns the rows in
+    ENRICHED_CHUNKS_SCHEMA column order."""
+    texts = pdf["content"].fillna("").tolist()
+    vectors: list[list[float]] = []
+    for i in range(0, len(texts), batch_size):
+        got = provider(texts[i : i + batch_size])
+        if len(got) != len(texts[i : i + batch_size]):  # zip strict=True analog
+            raise ValueError("provider returned wrong number of vectors")
+        vectors.extend(got)
+    out = pdf.assign(
+        # object dtype: one list per row, whatever the row count
+        embedding=pd.Series(vectors, index=pdf.index, dtype=object),
+        embedding_model=model_name,
+        embedded_at=embedded_at,
+    )
+    return out[[f.name for f in ENRICHED_CHUNKS_SCHEMA.fields]]
+
+
 def embed_chunks_df(
     chunks: DataFrame,
     provider: EmbeddingProvider | None = None,
@@ -254,22 +282,9 @@ def embed_chunks_df(
     stamps wall-clock time, tests stamp a constant.
     """
     impl = provider or mock_hash_provider(dims)
-    out_cols = [f.name for f in ENRICHED_CHUNKS_SCHEMA.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            texts = pdf["content"].fillna("").tolist()
-            vectors: list[list[float]] = []
-            for i in range(0, len(texts), batch_size):
-                got = impl(texts[i : i + batch_size])
-                if len(got) != len(texts[i : i + batch_size]):  # zip strict=True analog
-                    raise ValueError("provider returned wrong number of vectors")
-                vectors.extend(got)
-            pdf = pdf.assign(
-                embedding=vectors,
-                embedding_model=model_name,
-                embedded_at=embedded_at,
-            )
-            yield pdf[out_cols]
+            yield embed_batch(pdf, impl, batch_size, model_name, embedded_at)
 
     return chunks.mapInPandas(run, schema=ENRICHED_CHUNKS_SCHEMA)

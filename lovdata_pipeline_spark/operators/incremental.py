@@ -79,6 +79,15 @@ def filter_datasets(manifest: DataFrame, pattern: str) -> DataFrame:
     return manifest.filter(col.isNull() | col.like(like))
 
 
+def _with_prior_hash(manifest: DataFrame, processed_state: DataFrame) -> DataFrame:
+    """``manifest`` plus ``prior_hash``: the hash the processed state lists
+    for the doc_id, NULL when it lists none. The state side is one row per
+    document, so it is broadcast; keyed on doc_id alone, every use of it
+    in one plan shares one broadcast and one state scan."""
+    prior = processed_state.select("doc_id", F.col("hash").alias("prior_hash"))
+    return manifest.join(F.broadcast(prior), "doc_id", "left")
+
+
 def identify_changed(
     manifest: DataFrame,
     processed_state: DataFrame,
@@ -88,9 +97,12 @@ def identify_changed(
     """Documents to (re)process this run (ops 4-7).
 
     ``processed_state``: (doc_id, hash) of successfully processed docs.
-    force bypasses the anti-join (op 6); limit is a deterministic head-n
-    by doc_id for testing (op 7 — the reference's list slice is input-
-    ordered; we order by key so the result is partition-independent).
+    force bypasses the hash comparison (op 6); limit is a deterministic
+    head-n by doc_id for testing (op 7 — the reference's list slice is
+    input-ordered; we order by key so the result is partition-independent).
+    The result adds ``stored``: whether the processed state lists the
+    doc_id under any hash, i.e. whether the chunk store holds an earlier
+    version of the document.
     """
     if force:
         # Force takes ALL non-removed files, not just changed ones
@@ -98,20 +110,24 @@ def identify_changed(
         changed = manifest.filter(F.col("status") != "removed")
     else:
         changed = manifest.filter(F.col("status").isin(*CHANGED_STATUSES))
-        state = processed_state.select(
-            "doc_id", F.col("hash").alias("source_hash")
+    changed = _with_prior_hash(changed, processed_state)
+    if not force:
+        # the anti-join on (doc_id, source_hash): drop a row only where the
+        # hashes compare equal (a NULL on either side keeps it)
+        changed = changed.filter(
+            F.coalesce(F.col("prior_hash") != F.col("source_hash"), F.lit(True))
         )
-        changed = changed.join(
-            F.broadcast(state), ["doc_id", "source_hash"], "left_anti"
-        )
+    changed = changed.withColumn("stored", F.col("prior_hash").isNotNull()).drop("prior_hash")
     if limit is not None:
         changed = changed.orderBy("doc_id").limit(limit)
     return changed
 
 
-def identify_removed(manifest: DataFrame) -> DataFrame:
-    """Documents flagged removed upstream (op 4; lovlig.py:122-123)."""
-    return manifest.filter(F.col("status") == "removed")
+def identify_removed(manifest: DataFrame, processed_state: DataFrame) -> DataFrame:
+    """Documents flagged removed upstream (op 4; lovlig.py:122-123), with
+    ``stored`` as in ``identify_changed``."""
+    removed = _with_prior_hash(manifest.filter(F.col("status") == "removed"), processed_state)
+    return removed.withColumn("stored", F.col("prior_hash").isNotNull()).drop("prior_hash")
 
 
 def scd2_intervals(

@@ -26,7 +26,7 @@ from __future__ import annotations
 from collections.abc import Iterable
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from lovdata_pipeline_spark.operators.indexwrite import write_json_atomic
@@ -176,10 +176,14 @@ class ChunkStore:
             if exc.errno not in (errno.EROFS, errno.EACCES, errno.EPERM):
                 raise
 
-    def _bucket_col(self, doc_id: str | None = None):
-        """The bucket of the row's ``document_id`` or, given ``doc_id``, of
-        that literal id — a constant Spark folds into a partition filter."""
-        key = F.col("document_id") if doc_id is None else F.lit(doc_id)
+    def _bucket_col(self, doc_id: str | Column | None = None):
+        """The bucket of the row's ``document_id``, of a doc-id column or,
+        given a string, of that literal id — a constant Spark folds into a
+        partition filter."""
+        if doc_id is None:
+            key = F.col("document_id")
+        else:
+            key = doc_id if isinstance(doc_id, Column) else F.lit(doc_id)
         return F.pmod(F.xxhash64(key), F.lit(self.n_buckets)).cast("int")
 
     def _empty(self) -> DataFrame:
@@ -211,12 +215,10 @@ class ChunkStore:
             self._pin_buckets()
 
     def _rewrite(self, incoming: DataFrame | None, drop: list[str]) -> int:
-        """The one mutation path: every bucket that ``incoming`` writes to
-        or that stores a ``drop`` document is read once, loses the stored
-        rows of the incoming and dropped documents, gains ``incoming``, and
-        is written back in one dynamic overwrite. Untouched buckets are
-        neither read nor written. Returns the stored rows dropped for
-        ``drop`` ids."""
+        """The mutation path for callers that do not know the touched
+        buckets: ONE probe job finds every bucket that ``incoming`` writes
+        to or that stores a ``drop`` document, and ``_replace`` rewrites
+        them. Returns the stored rows dropped for ``drop`` ids."""
         if not any(Path(self.root).glob(f"{_BUCKET}=*")):
             # First load into an EMPTY store (r13): nothing to drop or merge,
             # and the write reads no store files, so the probe and the
@@ -253,56 +255,78 @@ class ChunkStore:
                 return 0
             probe = probes[0] if len(probes) == 1 else probes[0].unionByName(probes[1])
             rows = probe.groupBy(_BUCKET).agg(F.sum("_hit").alias("_n")).collect()
-            touched = sorted(r[_BUCKET] for r in rows)
-            if not touched:
-                return 0
-            dropped = sum(r["_n"] for r in rows)
-
-            keep = self.read().filter(F.col(_BUCKET).isin(touched))
-            if drop:
-                keep = keep.filter(~F.col("document_id").isin(drop))
-            if incoming is not None:
-                keep = keep.join(
-                    incoming.select("document_id").distinct(), "document_id", "left_anti"
-                ).unionByName(incoming.select(*keep.columns))
-            # The rewrite plan reads the same files it replaces. Dynamic
-            # overwrite makes that safe without materializing ``keep``:
-            # every task writes to a staging directory and the bucket
-            # directories are swapped only at job commit, after every
-            # task has read its input.
-            before = {b: self._bucket_files(b) for b in touched}
-            self._write_buckets(keep)
-            # Dynamic overwrite never writes a partition that ended up empty,
-            # so a fully-emptied bucket keeps its old files — it is exactly
-            # a touched bucket whose files the write did not replace. Drop
-            # it (the analog of the reference unlinking emptied JSONL files,
-            # jsonl_vector_store.py:104-117).
-            import shutil
-
-            emptied = [b for b in touched if before[b] and self._bucket_files(b) == before[b]]
-            for b in emptied:
-                shutil.rmtree(Path(self.root) / f"{_BUCKET}={b}", ignore_errors=True)
-            if emptied:
-                self.spark.catalog.refreshByPath(self.root)
-            return dropped
+            self._replace(incoming, drop, sorted(r[_BUCKET] for r in rows))
+            return sum(r["_n"] for r in rows)
         finally:
             if incoming is not None:
                 incoming.unpersist()
+
+    def _replace(self, incoming: DataFrame | None, drop: list[str], touched: list[int]) -> None:
+        """The one rewrite: each ``touched`` bucket is read once, loses the
+        stored rows of the incoming and dropped documents, gains
+        ``incoming``, and is written back in one dynamic overwrite.
+        Untouched buckets are neither read nor written, so ``touched``
+        must hold every bucket ``incoming`` writes to: a bucket missing
+        from it would be overwritten with the incoming rows alone."""
+        if not touched:
+            return
+        keep = self.read().filter(F.col(_BUCKET).isin(touched))
+        if drop:
+            keep = keep.filter(~F.col("document_id").isin(drop))
+        if incoming is not None:
+            keep = keep.join(
+                incoming.select("document_id").distinct(), "document_id", "left_anti"
+            ).unionByName(incoming.select(*keep.columns))
+        # The rewrite plan reads the same files it replaces. Dynamic
+        # overwrite makes that safe without materializing ``keep``:
+        # every task writes to a staging directory and the bucket
+        # directories are swapped only at job commit, after every
+        # task has read its input.
+        before = {b: self._bucket_files(b) for b in touched}
+        self._write_buckets(keep)
+        # Dynamic overwrite never writes a partition that ended up empty,
+        # so a fully-emptied bucket keeps its old files — it is exactly
+        # a touched bucket whose files the write did not replace. Drop
+        # it (the analog of the reference unlinking emptied JSONL files,
+        # jsonl_vector_store.py:104-117).
+        import shutil
+
+        emptied = [b for b in touched if before[b] and self._bucket_files(b) == before[b]]
+        for b in emptied:
+            shutil.rmtree(Path(self.root) / f"{_BUCKET}={b}", ignore_errors=True)
+        if emptied:
+            self.spark.catalog.refreshByPath(self.root)
 
     def _bucket_files(self, bucket: int) -> set[str]:
         return {p.name for p in (Path(self.root) / f"{_BUCKET}={bucket}").glob("*.parquet")}
 
     # -- mutations (op 24 upsert / op 26 delete) ------------------------------
 
-    def upsert_chunks(self, chunks: DataFrame, delete: Iterable[str] = ()) -> None:
+    def upsert_chunks(
+        self,
+        chunks: DataFrame,
+        delete: Iterable[str] = (),
+        buckets: Iterable[int] | None = None,
+    ) -> None:
         """Replace all chunks of the incoming documents, insert the rest,
         and delete every chunk of the ``delete`` documents — one bucket
         rewrite for the lot.
 
         Touched buckets are recomputed as (survivors ∪ incoming) and
         atomically swapped; untouched buckets are not read or written.
+        ``buckets``, when given, are the touched buckets: every bucket the
+        incoming documents hash into plus every bucket storing a
+        ``delete`` document (see ``_bucket_col``). It saves the probe job
+        that otherwise finds them; ``run_pipeline`` takes them from its
+        decision aggregate. The rewrite reads ``chunks`` twice (the
+        replaced ids and the new rows), so pass ``buckets`` with a cached
+        or cheap ``chunks``; without it the probe path caches it.
         """
-        self._rewrite(chunks.withColumn(_BUCKET, self._bucket_col()), list(delete))
+        chunks = chunks.withColumn(_BUCKET, self._bucket_col())
+        if buckets is None:
+            self._rewrite(chunks, list(delete))
+        else:
+            self._replace(chunks, list(delete), sorted(buckets))
 
     def delete_documents(self, doc_ids: DataFrame) -> int:
         """DELETE WHERE document_id IN (...); returns deleted count

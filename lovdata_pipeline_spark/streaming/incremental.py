@@ -58,11 +58,15 @@ def run_streaming_chunk_pipeline(
     NOT directly a valid sink (it unions against the stored ENRICHED
     schema and would fail on the missing embedding columns — r10
     review); a store-landing sink must embed (or null-pad) and filter
-    error rows first, the same adapter the batch ``pipeline.py`` is:
+    error rows first — the rows the batch pipeline's fused stage
+    (``pipeline.chunk_and_embed_df``) produces in one pass:
 
         def sink(batch_df, _bid):
             good = batch_df.filter(F.col("error").isNull())
             store.upsert_chunks(embed_chunks_df(good, dims=...))
+
+    Such a sink passes no ``buckets``, so the store probes for the
+    buckets it rewrites.
 
     Trigger.AvailableNow: drain everything currently available, then
     stop — the streaming analog of one incremental batch run, with
