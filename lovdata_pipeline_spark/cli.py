@@ -45,10 +45,10 @@ def cmd_process(args) -> int:
     docs = read_xml_corpus(spark, args.corpus)
     # Two scopes (matching the reference's retry + cleanup semantics):
     #  * every on-disk doc arrives as 'added', and run_pipeline's
-    #    anti-join on (doc_id, hash) against the PROCESSED state alone
-    #    drops the unchanged ones, so a previously-FAILED doc is retried
-    #    every run (reference state.is_processed consults only the
-    #    processed map, state.py:77-81);
+    #    doc_id-keyed join against the PROCESSED state alone drops only
+    #    the docs whose listed hash is unchanged, so a previously-FAILED
+    #    doc is retried every run (reference state.is_processed consults
+    #    only the processed map, state.py:77-81);
     #  * the removed set is the FULL state minus the on-disk doc ids, so
     #    deleting a failed doc's file still cleans up its state row. An
     #    anti-join on doc_id alone lets the binaryFile scan of that branch

@@ -6,13 +6,16 @@ pipeline_orchestrator.py:214-278, rationale state.py:1-14). Expressed
 as plain optimized joins:
 
   changed  = manifest WHERE status IN (added, modified)
-  to_do    = changed ANTI JOIN processed_state ON (doc_id, hash)   -- op 5
+  to_do    = changed LEFT JOIN processed_state ON doc_id
+             WHERE coalesce(source_hash <> hash, true)              -- op 5
   removed  = manifest WHERE status = removed                        -- op 4
 
-The processed-state side is one row per document — tiny relative to the
-corpus — so Catalyst broadcasts it and the anti-join never shuffles the
-manifest. This ordering (filter before chunk/embed) is the pipeline-level
-"pushdown" the reference hand-rolls: never re-embed unchanged documents
+The join keeps a row unless both hashes are present and equal, and it
+adds ``stored`` (the state lists the doc_id). The processed-state side
+is one row per document — tiny relative to the corpus — so Catalyst
+broadcasts it and the join never shuffles the manifest. This ordering
+(filter before chunk/embed) is the pipeline-level "pushdown" the
+reference hand-rolls: never re-embed unchanged documents
 (docs/GUIDE.md:479-496).
 """
 
@@ -112,8 +115,8 @@ def identify_changed(
         changed = manifest.filter(F.col("status").isin(*CHANGED_STATUSES))
     changed = _with_prior_hash(changed, processed_state)
     if not force:
-        # the anti-join on (doc_id, source_hash): drop a row only where the
-        # hashes compare equal (a NULL on either side keeps it)
+        # drop a row only where the hashes compare equal (a NULL on
+        # either side keeps it)
         changed = changed.filter(
             F.coalesce(F.col("prior_hash") != F.col("source_hash"), F.lit(True))
         )

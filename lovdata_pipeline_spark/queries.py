@@ -13,6 +13,12 @@ float column is ``round(x, 6)`` (or coarser) in BOTH engines.
 
 from __future__ import annotations
 
+import atexit
+import itertools
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from lovdata_pipeline_spark.operators import decontam, dedup, similarity, textstats
@@ -34,16 +40,44 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncated to microseconds (exactly how DuckDB surfaces the column);
     earlier 4.x rejects it unless the legacy nanosAsLong conf is set, in
     which case the column arrives as a nanosecond long. Support both so
-    the registry runs on either runtime, normalizing to session-zone
+    the registry runs on either runtime (``_events_ts``)."""
+    return _events_ts(_events_raw(spark, sf_dir))
+
+
+def _events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events.parquet as stored; its schema is the event streams' schema."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")  # no-op on 4.1+
+    return spark.read.parquet(f"{sf_dir}/events.parquet")
+
+
+def _events_ts(df: DataFrame) -> DataFrame:
+    """Normalize a batch or streaming events frame's ts to session-zone
     TimestampType (session tz is pinned UTC → value-preserving) so every
     downstream unix_micros/date_trunc/cast behaves identically."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")  # no-op on 4.1+
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if raw.schema["ts"].dataType.simpleString() == "bigint":
+    if df.schema["ts"].dataType.simpleString() == "bigint":
         # integer `div`, not `/`: nanosecond longs exceed 2^53, so double
         # division would round the microsecond off by one.
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+_staging_root: str | None = None
+_staging_seq = itertools.count()
+
+
+def _staging_dir(prefix: str) -> str:
+    """A fresh directory for a row's staged files (stream sources,
+    checkpoints, landings, persisted indexes and stores), under one root
+    per process. The root lives until interpreter exit, not until the
+    row returns: every row hands back a lazy frame that still reads its
+    directory."""
+    global _staging_root
+    if _staging_root is None:
+        _staging_root = tempfile.mkdtemp(prefix="lovdata_registry_")
+        atexit.register(shutil.rmtree, _staging_root, ignore_errors=True)
+    d = os.path.join(_staging_root, f"{prefix}{next(_staging_seq)}")
+    os.mkdir(d)
+    return d
 
 
 def _link_stream_source(sf_dir: str, table: str, prefix: str) -> str:
@@ -53,10 +87,7 @@ def _link_stream_source(sf_dir: str, table: str, prefix: str) -> str:
     ladder corpus) is a DIRECTORY of part files — link each part in
     (found r9: symlinking the directory itself made the source list zero
     files and the drain silently emit nothing at sf1)."""
-    import os
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=prefix)
+    d = _staging_dir(prefix)
     src = os.path.join(sf_dir, f"{table}.parquet")
     if os.path.isdir(src):
         for i, f in enumerate(sorted(os.listdir(src))):
@@ -69,27 +100,38 @@ def _link_stream_source(sf_dir: str, table: str, prefix: str) -> str:
     return d
 
 
-def _drain_partitions(spark: SparkSession, n: int = 8):
-    """Context manager pinning shuffle partitions for a finite streaming
-    drain (r13 optimization): per-partition state-store init dominates a
-    small drain, and a streaming query's partition count is frozen into
-    its checkpoint — so production sizes this per query anyway. The
-    append-session and interval-join rows already pinned 8 inline; this
-    applies the same discipline to all five drains. Restored on exit;
-    batch-equivalent results are partition-count-independent."""
-    from contextlib import contextmanager
+def _drain(stream_df: DataFrame, output_mode: str, schema: str) -> DataFrame:
+    """Run ``stream_df`` to completion with ``Trigger.AvailableNow`` into
+    a ``foreachBatch`` parquet landing and read the landing back. Complete
+    mode re-emits the whole result each trigger, so a batch overwrites
+    the landing; every other mode appends. Shuffle partitions pin to 8
+    for the drain and are restored after: state-store setup per shuffle
+    partition (four stores per partition for a stream-stream join)
+    dominates a small drain, and a streaming query's partition count is
+    frozen into its checkpoint, so production sizes it per query anyway.
+    Batch-equivalent results are partition-count-independent."""
+    spark = stream_df.sparkSession
+    landing = _staging_dir("drain_out_")
+    write_mode = "overwrite" if output_mode == "complete" else "append"
 
-    @contextmanager
-    def _cm():
-        conf = spark.conf
-        prev = conf.get("spark.sql.shuffle.partitions")
-        conf.set("spark.sql.shuffle.partitions", str(n))
-        try:
-            yield
-        finally:
-            conf.set("spark.sql.shuffle.partitions", prev)
+    def land(batch_df, _bid):
+        batch_df.write.mode(write_mode).parquet(landing)
 
-    return _cm()
+    conf = spark.conf
+    prev = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        (
+            stream_df.writeStream.outputMode(output_mode)
+            .foreachBatch(land)
+            .option("checkpointLocation", _staging_dir("drain_chk_"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        conf.set("spark.sql.shuffle.partitions", prev)
+    return spark.read.schema(schema).parquet(landing)
 
 
 def _dsum(col, alias: str):
@@ -1205,8 +1247,6 @@ def hll_store_merged_counts(spark, sf_dir):
     100-TB nightly shape: each day summarizes its own text once into
     |groups|·m integer registers; cross-day distinct counts never
     re-read any day's text."""
-    import tempfile
-
     from lovdata_pipeline_spark.operators.sketches import (
         hll_estimate,
         hll_registers,
@@ -1216,8 +1256,8 @@ def hll_store_merged_counts(spark, sf_dir):
     )
 
     (docs,) = load(spark, sf_dir, "documents")
-    d1 = tempfile.mkdtemp(prefix="hll_day1_")
-    d2 = tempfile.mkdtemp(prefix="hll_day2_")
+    d1 = _staging_dir("hll_day1_")
+    d2 = _staging_dir("hll_day2_")
     hll_registers_write(
         hll_registers(docs.filter(F.col("doc_id") % 2 == 0), p=5), d1, p=5
     )
@@ -2713,10 +2753,8 @@ def ann_topk_ivf_index(spark, sf_dir):
     ``ann_topk_ivf``, so the results — and the oracle — are identical:
     the index is a layout, not a different algorithm. The
     PartitionFilters plan assertion lives in tests/test_r7_operators.py."""
-    import tempfile
-
     (emb,) = load(spark, sf_dir, "embeddings")
-    idx = tempfile.mkdtemp(prefix="ivf_index_")
+    idx = _staging_dir("ivf_index_")
     similarity.ivf_write_index(emb, idx, n_cells=8, portable=True)
     query = list(emb.filter(F.col("vec_id") == 0).first()["embedding"])
     return similarity.ivf_index_topk(spark, idx, query, k=10, n_probe=2)
@@ -2731,12 +2769,10 @@ def dedup_incremental_minhash(spark, sf_dir):
     0.8 gives recall ≈ 1 − 3e-12 (the dedup_minhash_lsh argument), so
     the output equals the exact cross-split Jaccard pairs the oracle
     computes all-pairs."""
-    import tempfile
-
     (docs,) = load(spark, sf_dir, "documents")
     hist = docs.filter(F.col("doc_id") % 5 != 0)
     batch = docs.filter(F.col("doc_id") % 5 == 0)
-    store = tempfile.mkdtemp(prefix="minhash_store_")
+    store = _staging_dir("minhash_store_")
     dedup.minhash_store_write(hist, store, n=3, num_hashes=32, bands=16)
     return dedup.minhash_store_dedup_new(
         spark, store, batch, threshold=0.8
@@ -2795,19 +2831,9 @@ def streaming_session_counts(spark, sf_dir):
     mode here is a finite-drain grading harness, not the production
     plan — the operator itself (`streaming.windows.session_windows`)
     carries the watermark."""
-    import os
-    import tempfile
-
-    ev = load_events(spark, sf_dir)
     src_dir = _link_stream_source(sf_dir, "events", "stream_sess_src_")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream = spark.readStream.schema(raw.schema).parquet(src_dir)
-    if dict(raw.dtypes)["ts"] == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    else:
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    raw = _events_raw(spark, sf_dir)
+    stream = _events_ts(spark.readStream.schema(raw.schema).parquet(src_dir))
     sess = (
         stream.groupBy(
             F.session_window("ts", "30 minutes").alias("sess"), "user_id"
@@ -2820,29 +2846,11 @@ def streaming_session_counts(spark, sf_dir):
             "n_events",
         )
     )
-    out_dir = tempfile.mkdtemp(prefix="stream_sess_out_")
-    chk_dir = tempfile.mkdtemp(prefix="stream_sess_chk_")
-
-    def land(batch_df, _bid):
-        batch_df.write.mode("overwrite").parquet(out_dir)
-
-    with _drain_partitions(spark):
-        q = (
-            sess.writeStream.outputMode("complete")
-            .foreachBatch(land)
-            .option("checkpointLocation", chk_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _ = ev  # batch load above pins the nanosAsLong conf for the raw read
-    return (
-        spark.read.schema(
-            "user_id long, session_start timestamp, session_end timestamp, n_events long"
-        )
-        .parquet(out_dir)
-        .orderBy("user_id", "session_start")
-    )
+    return _drain(
+        sess,
+        "complete",
+        "user_id long, session_start timestamp, session_end timestamp, n_events long",
+    ).orderBy("user_id", "session_start")
 
 
 def streaming_session_append_counts(spark, sf_dir):
@@ -2875,18 +2883,10 @@ def streaming_session_append_counts(spark, sf_dir):
     Scale shape: state is bounded by ACTIVE users (closed sessions
     evict at the watermark — the complete-mode row instead re-emits
     the whole table every trigger, which cannot scale); the landing is
-    per-batch append parquet. Shuffle partitions pin to 8 for the
-    drain (state-store init per partition dominates a small drain; a
-    streaming query's partition count is frozen into its checkpoint,
-    so production sizes this per-query too), restored in finally."""
-    import datetime
-    import os
-    import tempfile
-
+    per-batch append parquet."""
     from lovdata_pipeline_spark.streaming.windows import session_windows
 
-    _ = load_events(spark, sf_dir)  # pins the nanosAsLong conf on pre-4.1 runtimes
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = _events_raw(spark, sf_dir)
     src_dir = _link_stream_source(sf_dir, "events", "stream_sessap_src_")
     # sentinel heartbeat: one event 90 min (3×gap) past the span, in the
     # source's own ts dtype; written to a scratch dir and its part file
@@ -2910,46 +2910,23 @@ def streaming_session_append_counts(spark, sf_dir):
     sent = raw.agg(sent_ts.alias("_sent_ts")).select(
         *[sent_vals[f.name].cast(f.dataType).alias(f.name) for f in raw.schema.fields]
     )
-    sent_dir = tempfile.mkdtemp(prefix="stream_sessap_sent_")
+    sent_dir = _staging_dir("stream_sessap_sent_")
     sent.write.mode("overwrite").parquet(sent_dir)
     part = [f for f in os.listdir(sent_dir) if f.endswith(".parquet")][0]
     os.symlink(
         os.path.join(sent_dir, part), os.path.join(src_dir, "zz_sentinel.parquet")
     )
 
-    stream = spark.readStream.schema(raw.schema).parquet(src_dir)
-    if dict(raw.dtypes)["ts"] == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = _events_ts(spark.readStream.schema(raw.schema).parquet(src_dir))
     # delay 0: the watermark lands exactly on the sentinel ts — already
     # 60 min past every real session end, so no boundary case exists
     sess = session_windows(stream, gap="30 minutes", watermark="0 seconds")
-    out_dir = tempfile.mkdtemp(prefix="stream_sessap_out_")
-    chk_dir = tempfile.mkdtemp(prefix="stream_sessap_chk_")
-
-    def land(batch_df, _bid):
-        batch_df.write.mode("append").parquet(out_dir)
-
-    conf = spark.conf
-    prev = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            sess.writeStream.outputMode("append")
-            .foreachBatch(land)
-            .option("checkpointLocation", chk_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        conf.set("spark.sql.shuffle.partitions", prev)
     return (
-        spark.read.schema(
-            "user_id long, session_start timestamp, session_end timestamp, n_events long"
+        _drain(
+            sess,
+            "append",
+            "user_id long, session_start timestamp, session_end timestamp, n_events long",
         )
-        .parquet(out_dir)
         # the sentinel's own session stays open (held back) by design;
         # the filter guards the graded frame if a future edit widens the
         # heartbeat enough to flush it
@@ -2977,14 +2954,9 @@ def streaming_vocab_counts(spark, sf_dir):
     hash aggregate over update rows — nothing driver-side scales with
     the stream's history.
     """
-    import tempfile
-
     from lovdata_pipeline_spark.streaming.windows import (
         streaming_token_counts,
     )
-
-    import os
-    import tempfile
 
     (batch_docs,) = load(spark, sf_dir, "documents")
     # the file stream source lists a DIRECTORY; the testdata table is a
@@ -2995,22 +2967,7 @@ def streaming_vocab_counts(spark, sf_dir):
     # NoTimeout: a finite AvailableNow drain must terminate on its own
     # (ProcessingTimeTimeout keeps the query alive to fire evictions)
     counts = streaming_token_counts(stream, timeout_minutes=None)
-    out_dir = tempfile.mkdtemp(prefix="stream_vocab_out_")
-    chk_dir = tempfile.mkdtemp(prefix="stream_vocab_chk_")
-
-    def land(batch_df, _bid):
-        batch_df.write.mode("append").parquet(out_dir)
-
-    with _drain_partitions(spark):
-        q = (
-            counts.writeStream.outputMode("update")
-            .foreachBatch(land)
-            .option("checkpointLocation", chk_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    upd = spark.read.schema("token string, n_occurrences long").parquet(out_dir)
+    upd = _drain(counts, "update", "token string, n_occurrences long")
     return (
         upd.groupBy("token")
         .agg(F.max("n_occurrences").alias("n_occurrences"))
@@ -3282,41 +3239,16 @@ def streaming_dedup_counts(spark, sf_dir):
     streaming.windows.streaming_dedup — is the same either way). The
     count(*) rollup (NOT countDistinct) is the grading teeth: any key
     the streaming dedup emits twice breaks the hash."""
-    import os
-    import tempfile
-
     from lovdata_pipeline_spark.streaming.windows import streaming_dedup
 
-    ev = load_events(spark, sf_dir)
     src_dir = _link_stream_source(sf_dir, "events", "stream_dedup_src_")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream = spark.readStream.schema(raw.schema).parquet(src_dir)
-    if dict(raw.dtypes)["ts"] == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    raw = _events_raw(spark, sf_dir)
+    stream = _events_ts(spark.readStream.schema(raw.schema).parquet(src_dir))
     deduped = streaming_dedup(
         stream, ["user_id", "event_type"], watermark_col="ts", watermark="3650 days"
     ).select("user_id", "event_type")
-    out_dir = tempfile.mkdtemp(prefix="stream_dedup_out_")
-    chk_dir = tempfile.mkdtemp(prefix="stream_dedup_chk_")
-
-    def land(batch_df, _bid):
-        batch_df.write.mode("append").parquet(out_dir)
-
-    with _drain_partitions(spark):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .foreachBatch(land)
-            .option("checkpointLocation", chk_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _ = ev  # batch load pins the nanosAsLong conf for the raw read
     return (
-        spark.read.schema("user_id long, event_type string")
-        .parquet(out_dir)
+        _drain(deduped, "append", "user_id long, event_type string")
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_users"))
         .orderBy("event_type")
@@ -3337,21 +3269,13 @@ def streaming_interval_join_counts(spark, sf_dir):
     the grading teeth: any pair the join state dropped or emitted
     twice breaks the hash. Streaming coverage now spans stateful agg,
     session windows, dedup, AND joins."""
-    import os
-    import tempfile
-
     from lovdata_pipeline_spark.streaming.windows import interval_join
 
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = _events_raw(spark, sf_dir)
 
     def mk_stream(tag):
         d = _link_stream_source(sf_dir, "events", f"stream_ij_{tag}_")
-        s = spark.readStream.schema(raw.schema).parquet(d)
-        if dict(raw.dtypes)["ts"] == "bigint":
-            s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        else:
-            s = s.withColumn("ts", F.col("ts").cast("timestamp"))
-        return s
+        return _events_ts(spark.readStream.schema(raw.schema).parquet(d))
 
     left = (
         mk_stream("l")
@@ -3366,37 +3290,8 @@ def streaming_interval_join_counts(spark, sf_dir):
     joined = interval_join(
         left, right, on="user_id", lookback="2 hours", watermark="3650 days"
     ).select("user_id", "event_id", "click_id")
-    out_dir = tempfile.mkdtemp(prefix="stream_ij_out_")
-    chk_dir = tempfile.mkdtemp(prefix="stream_ij_chk_")
-
-    def land(batch_df, _bid):
-        batch_df.write.mode("append").parquet(out_dir)
-
-    # a stream-stream join materializes FOUR state stores per shuffle
-    # partition (keyed keep/index, both sides); at the session's 32
-    # partitions the store init dominates a small drain, so the
-    # checkpoint is pinned to 8 — a streaming query's partition count
-    # is frozen into its checkpoint anyway, so production picks this
-    # per-query too (state size, not data size, drives it). The
-    # session conf is restored immediately after start; results are
-    # partition-count independent (exact inner join + count).
-    conf = spark.conf
-    prev = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.outputMode("append")
-            .foreachBatch(land)
-            .option("checkpointLocation", chk_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        conf.set("spark.sql.shuffle.partitions", prev)
     return (
-        spark.read.schema("user_id long, event_id long, click_id long")
-        .parquet(out_dir)
+        _drain(joined, "append", "user_id long, event_id long, click_id long")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_pairs"))
         .orderBy("user_id")
@@ -3584,8 +3479,6 @@ def zorder_append_box_scan(spark, sf_dir):
     the initial subset, clamp, magic-mask interleave, bucket, box).
     The scan still prunes through the refreshed sidecar stats
     (PartitionFilters — plan-asserted in tests)."""
-    import tempfile
-
     from lovdata_pipeline_spark.operators.layout import (
         zorder_append,
         zorder_box_scan,
@@ -3597,7 +3490,7 @@ def zorder_append_box_scan(spark, sf_dir):
         "user_id",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )
-    idx = tempfile.mkdtemp(prefix="zappend_")
+    idx = _staging_dir("zappend_")
     zorder_write_index(
         ev.filter(F.col("event_id") % 3 != 0), idx, "user_id", "cents",
         n_buckets=64,
@@ -3628,8 +3521,6 @@ def hdr_store_merged_quantiles(spark, sf_dir):
     register table; cross-day percentiles never re-read any day's
     rows. The loader's sub_bits gate keeps incompatible bucket spaces
     from merging silently."""
-    import tempfile
-
     from lovdata_pipeline_spark.operators.sketches import (
         hdr_buckets,
         hdr_merge,
@@ -3644,8 +3535,8 @@ def hdr_store_merged_quantiles(spark, sf_dir):
         "o_orderpriority",
         F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    d1 = tempfile.mkdtemp(prefix="hdr_day1_")
-    d2 = tempfile.mkdtemp(prefix="hdr_day2_")
+    d1 = _staging_dir("hdr_day1_")
+    d2 = _staging_dir("hdr_day2_")
     hdr_registers_write(
         hdr_buckets(
             cents.filter(F.col("o_orderkey") % 2 == 0), "cents", "o_orderpriority"

@@ -49,8 +49,9 @@ def read_xml_corpus(spark: SparkSession, root: str, pattern: str = "*.xml") -> D
 
     Columns: doc_id, dataset_name, relative_path, xml, source_hash,
     status (constant 'added'). That is all ``lg process`` needs: its
-    identify anti-join on (doc_id, source_hash) against the processed
-    state tells added, modified and unchanged apart. ``manifest_diff``
+    identify step left-joins the processed state on doc_id and keeps a
+    row unless the stored hash equals ``source_hash``, which tells added,
+    modified and unchanged apart. ``manifest_diff``
     assigns the explicit statuses when a caller wants them.
     """
     # resolve relative roots in Python — the JVM's working directory is

@@ -209,3 +209,97 @@ def test_local_checkpoint_only_cuts_iterative_lineage():
                 ):
                     hits.append(f"{rel}:{node.lineno}")
     assert not hits, hits
+
+
+#: the registry rows that stage files (stream sources, checkpoints,
+#: landings, persisted stores and indexes)
+STAGING_ROWS = (
+    "streaming_session_counts",
+    "streaming_session_append_counts",
+    "streaming_vocab_counts",
+    "streaming_dedup_counts",
+    "streaming_interval_join_counts",
+    "hll_store_merged_counts",
+    "ann_topk_ivf_index",
+    "dedup_incremental_minhash",
+    "zorder_append_box_scan",
+    "hdr_store_merged_quantiles",
+)
+
+
+def test_staging_and_drain_have_one_owner():
+    """Every directory the package stages comes from
+    ``queries._staging_dir`` (one root per process, removed at exit),
+    and the registry's AvailableNow ``foreachBatch`` drain is written
+    once, in ``queries._drain``."""
+    import ast
+
+    pkg = Path(__file__).resolve().parents[1] / "lovdata_pipeline_spark"
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            for node in ast.walk(top):
+                fn = getattr(node, "func", None)
+                if (
+                    isinstance(node, ast.Call)
+                    and (getattr(fn, "attr", None) or getattr(fn, "id", None)) == "mkdtemp"
+                    and (rel, getattr(top, "name", None)) != ("queries.py", "_staging_dir")
+                ):
+                    hits.append(f"{rel}:{node.lineno}")
+    assert not hits, hits
+
+    drains = [
+        node.lineno
+        for node in ast.walk(ast.parse((pkg / "queries.py").read_text()))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "attr", None) == "trigger"
+        and any(k.arg == "availableNow" for k in node.keywords)
+    ]
+    assert len(drains) == 1, drains
+
+
+def test_registry_rows_leave_nothing_in_tmp(tmp_path):
+    """A process that runs every file-staging registry row and exits
+    leaves nothing in its temp directory: the rows stage under one root
+    that is removed at interpreter exit."""
+    import os
+    import subprocess
+    import textwrap
+
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    script = textwrap.dedent(
+        """
+        import sys
+        from lovdata_pipeline_spark import queries
+        from lovdata_pipeline_spark.session import get_spark
+
+        spark = get_spark("staging-leak", shuffle_partitions=2)
+        for name in sys.argv[1:]:
+            df = queries.QUERIES[name](spark, "/root/testdata/sf0.001")
+            df.write.format("noop").mode("overwrite").save()
+        print("ran", len(sys.argv) - 1)
+        print("root", getattr(queries, "_staging_root", None))
+        """
+    )
+    env = dict(
+        os.environ,
+        TMPDIR=str(tmpdir),
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script, *STAGING_ROWS],
+        cwd=Path(__file__).resolve().parents[1],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert f"ran {len(STAGING_ROWS)}" in out.stdout, out.stdout
+    assert sorted(os.listdir(tmpdir)) == []
+    # the rows did stage under the temp directory before it was cleared
+    assert f"root {tmpdir}{os.sep}" in out.stdout, out.stdout

@@ -11,7 +11,6 @@
 import datetime
 import json
 import os
-import tempfile
 
 import pytest
 
@@ -124,10 +123,10 @@ class TestChunkStoreLegacySidecar:
         os.remove(os.path.join(tmp, "_store_meta.json"))
         return store
 
-    def test_sidecar_pinned_on_open(self, spark):
+    def test_sidecar_pinned_on_open(self, spark, tmp_path):
         from lovdata_pipeline_spark.sources.chunk_store import ChunkStore
 
-        tmp = tempfile.mkdtemp(prefix="legacy_store_")
+        tmp = str(tmp_path)
         self._legacy_store(spark, tmp)
         ChunkStore(spark, tmp, n_buckets=4)  # open only, no mutation
         meta = os.path.join(tmp, "_store_meta.json")
@@ -137,7 +136,7 @@ class TestChunkStoreLegacySidecar:
         with pytest.raises(ValueError, match="n_buckets=4"):
             ChunkStore(spark, tmp, n_buckets=32)
 
-    def test_larger_wrong_modulus_fails_the_data_check(self, spark):
+    def test_larger_wrong_modulus_fails_the_data_check(self, spark, tmp_path):
         """r11 review + r12 (r11 ADVICE): a legacy 4-bucket store opened
         with n_buckets=8 passes the max-dir check (necessary, not
         sufficient). The r11 fix merely skipped the pin; the r12
@@ -147,7 +146,7 @@ class TestChunkStoreLegacySidecar:
         mis-prune), and nothing is pinned."""
         from lovdata_pipeline_spark.sources.chunk_store import ChunkStore
 
-        tmp = tempfile.mkdtemp(prefix="legacy_store_8_")
+        tmp = str(tmp_path)
         self._legacy_store(spark, tmp)
         with pytest.raises(ValueError, match="do not hash into"):
             ChunkStore(spark, tmp, n_buckets=8)
@@ -156,7 +155,7 @@ class TestChunkStoreLegacySidecar:
         ChunkStore(spark, tmp, n_buckets=4)
         assert json.load(open(os.path.join(tmp, "_store_meta.json")))["n_buckets"] == 4
 
-    def test_sparse_store_pins_when_data_confirms(self, spark):
+    def test_sparse_store_pins_when_data_confirms(self, spark, tmp_path):
         """r12 (r11 ADVICE): the pin is confirmed by data, not by
         directory names — a genuinely sparse store (modulus 8, only a
         few buckets populated) opened with the CORRECT n_buckets=8 now
@@ -166,7 +165,7 @@ class TestChunkStoreLegacySidecar:
         test_larger_wrong_modulus_fails_the_data_check."""
         from lovdata_pipeline_spark.sources.chunk_store import ChunkStore
 
-        tmp = tempfile.mkdtemp(prefix="legacy_sparse_8_")
+        tmp = str(tmp_path)
         # build an 8-bucket store with few docs -> genuinely sparse dirs
         from lovdata_pipeline_spark.chunking import chunk_documents_df
         from lovdata_pipeline_spark.config import ChunkParams, PipelineConfig
@@ -188,7 +187,7 @@ class TestChunkStoreLegacySidecar:
         ChunkStore(spark, tmp, n_buckets=8)  # open only, no mutation
         assert json.load(open(os.path.join(tmp, "_store_meta.json")))["n_buckets"] == 8
 
-    def test_data_confirm_scan_runs_once_per_process(self, spark, monkeypatch):
+    def test_data_confirm_scan_runs_once_per_process(self, spark, monkeypatch, tmp_path):
         """r12 review: when the sidecar cannot persist (read-only mount,
         EROFS/EACCES swallowed), every open used to repeat the full
         (document_id, bucket) scan — minutes per open on a large store.
@@ -196,7 +195,7 @@ class TestChunkStoreLegacySidecar:
         open of the same (root, n_buckets) must not touch the data."""
         from lovdata_pipeline_spark.sources.chunk_store import ChunkStore
 
-        tmp = tempfile.mkdtemp(prefix="legacy_memo_")
+        tmp = str(tmp_path)
         self._legacy_store(spark, tmp)
         ChunkStore(spark, tmp, n_buckets=4)  # scan + pin
         key = (str(os.path.realpath(tmp)), 4)
@@ -214,25 +213,25 @@ class TestChunkStoreLegacySidecar:
         # the (cheap) sidecar write still re-pins on the memoized path
         assert json.load(open(os.path.join(tmp, "_store_meta.json")))["n_buckets"] == 4
 
-    def test_open_with_modulus_smaller_than_layout_fails(self, spark):
+    def test_open_with_modulus_smaller_than_layout_fails(self, spark, tmp_path):
         """A legacy store whose directories prove a larger modulus must
         refuse the open instead of pinning a wrong sidecar."""
         from lovdata_pipeline_spark.sources.chunk_store import ChunkStore
 
-        tmp = tempfile.mkdtemp(prefix="legacy_store_big_")
+        tmp = str(tmp_path)
         self._legacy_store(spark, tmp)
         os.makedirs(os.path.join(tmp, "bucket=17"), exist_ok=True)
         with pytest.raises(ValueError, match="bucket directories"):
             ChunkStore(spark, tmp, n_buckets=4)
 
-    def test_empty_dir_open_writes_no_sidecar(self, spark):
+    def test_empty_dir_open_writes_no_sidecar(self, spark, tmp_path):
         from lovdata_pipeline_spark.sources.chunk_store import ChunkStore
 
-        tmp = tempfile.mkdtemp(prefix="empty_store_")
+        tmp = str(tmp_path)
         ChunkStore(spark, tmp)
         assert not os.path.exists(os.path.join(tmp, "_store_meta.json"))
 
-    def test_default_open_of_legacy_store_fails_loud(self, spark):
+    def test_default_open_of_legacy_store_fails_loud(self, spark, tmp_path):
         """r11 review: the bucket dirs cannot CONFIRM a modulus (max
         dir < n is necessary, not sufficient), so a default open of a
         legacy store must not pin 32 onto, say, a 4-bucket layout —
@@ -240,7 +239,7 @@ class TestChunkStoreLegacySidecar:
         modulus. Fail loud instead."""
         from lovdata_pipeline_spark.sources.chunk_store import ChunkStore
 
-        tmp = tempfile.mkdtemp(prefix="legacy_default_")
+        tmp = str(tmp_path)
         self._legacy_store(spark, tmp)
         with pytest.raises(ValueError, match="cannot be inferred"):
             ChunkStore(spark, tmp)  # default n_buckets=None

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import math
 import os
-import tempfile
 
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -196,7 +195,7 @@ class TestZorderLayout:
         with pytest.raises(Exception, match="zorder: dimension range"):
             zorder_frame(df, "x", "y").collect()
 
-    def test_persisted_index_prunes_partitions(self, spark):
+    def test_persisted_index_prunes_partitions(self, spark, tmp_path):
         """The IVF-index treatment for the layout: pruned scan equals
         the full-scan filter, the plan shows PartitionFilters on
         zbucket, and the candidate set is a strict minority of buckets
@@ -217,7 +216,7 @@ class TestZorderLayout:
                 F.floor(F.col("value") * 100).cast("long").alias("cents"),
             )
         )
-        idx = tempfile.mkdtemp(prefix="zidx_test_")
+        idx = str(tmp_path)
         zorder_write_index(ev, idx, "user_id", "cents", n_buckets=64)
         b = 1 << 16
         box = (3 * b // 8, 5 * b // 8 - 1, 3 * b // 8, 5 * b // 8 - 1)

@@ -335,14 +335,13 @@ class TestScd2Intervals:
 
 
 class TestFilterAttrition:
-    def test_funnel_chains_and_is_monotone(self, spark):
+    def test_funnel_chains_and_is_monotone(self, spark, tmp_path):
         from lovdata_pipeline_spark.queries import filter_attrition_report
 
         import os
-        import tempfile
 
         # build a tiny documents.parquet with known gate outcomes
-        d = tempfile.mkdtemp(prefix="attr_")
+        d = str(tmp_path)
         rows = [
             (1, None, "s"),                         # fails has_text
             (2, "short text", "s"),                 # fails length band
@@ -363,16 +362,15 @@ class TestFilterAttrition:
             assert r.n_dropped == r.n_in - r.n_out
             assert 0.0 <= r.retention <= 1.0
 
-    def test_empty_corpus_yields_zero_funnel(self, spark):
+    def test_empty_corpus_yields_zero_funnel(self, spark, tmp_path):
         """An empty documents table must report four all-zero stages
         (sum over empty is NULL without the coalesce), retention 0/0
         guarded to n_out/greatest(n_in,1)."""
         import os
-        import tempfile
 
         from lovdata_pipeline_spark.queries import filter_attrition_report
 
-        d = tempfile.mkdtemp(prefix="attr_empty_")
+        d = str(tmp_path)
         spark.createDataFrame(
             [], "doc_id long, text string, source string"
         ).write.parquet(os.path.join(d, "documents.parquet"))
