@@ -221,16 +221,17 @@ def _measure(rep, reps: int) -> tuple[float, float]:
 
 
 def release_caches(spark) -> None:
-    """Drop the caches a query fn created (shingle sets etc.) so reps
-    don't accumulate executor memory pressure; the module release calls
-    also empty the retained-frame lists, which clearCache alone leaves
-    growing (r6 review)."""
-    from lovdata_pipeline_spark.operators.packing import release_offsets_caches
-    from lovdata_pipeline_spark.operators.textstats import release_textstats_caches
+    """Drop what a query fn left behind once its frame has been consumed,
+    so reps accumulate neither executor memory nor disk: the retained
+    frames (``release_retained`` also empties the registry, which
+    clearCache alone leaves growing), every other cache, and the
+    directories the registry rows staged."""
+    from lovdata_pipeline_spark.queries import _release_staging
+    from lovdata_pipeline_spark.session import release_retained
 
-    release_offsets_caches()
-    release_textstats_caches()
+    release_retained()
     spark.catalog.clearCache()
+    _release_staging()
 
 
 def run_once(spark, fn, sf_dir: str) -> float:

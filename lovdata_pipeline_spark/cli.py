@@ -257,6 +257,7 @@ def cmd_curate(args) -> int:
         temperature_sample,
     )
     from lovdata_pipeline_spark.operators.skew import spread_if_narrow
+    from lovdata_pipeline_spark.session import cached, release_retained
 
     spark = _spark("lg-curate")
     id_col, text_col, strata_col = args.id_col, args.text_col, args.strata_col
@@ -280,68 +281,60 @@ def cmd_curate(args) -> int:
                 "[PHONE]",
             ),
         )
-    # A cached frame reads no files, so decontaminate and
-    # hashed_linear_quality cannot spread a narrow input themselves:
-    # spread it before the first cache. A narrow input is small, so the
-    # dedup and decontam joins broadcast their other side and keep this
-    # layout, as does the mix (a filter). Every frame cached below is
-    # released after the write, so a long-lived session keeps exactly
-    # the caches it had before (lg clean's rule).
-    cur = spread_if_narrow(cur).cache()
-    pinned = [cur]
-    stages["after_pii"] = cur.count()
+    with cached() as pin:
+        # A cached frame reads no files, so decontaminate and
+        # hashed_linear_quality cannot spread a narrow input themselves:
+        # spread it before the first cache. A narrow input is small, so the
+        # dedup and decontam joins broadcast their other side and keep this
+        # layout, as does the mix (a filter). Every frame pinned below is
+        # released after the write, and so is every retained frame (the
+        # --seq-len offsets); a plain cache the session held before the
+        # command survives it.
+        cur = pin(spread_if_narrow(cur))
+        stages["after_pii"] = cur.count()
 
-    if not args.no_dedup:
-        # coalesce: md5(normalized(NULL)) is NULL and a NULL join key
-        # silently drops the row; NULL and empty texts instead dedup
-        # together as one "no content" group
-        fp = cur.withColumn(
-            "_fp", F.md5(F.coalesce(textstats._normalized(text_col), F.lit("")))
+        if not args.no_dedup:
+            # coalesce: md5(normalized(NULL)) is NULL and a NULL join key
+            # silently drops the row; NULL and empty texts instead dedup
+            # together as one "no content" group
+            fp = cur.withColumn(
+                "_fp", F.md5(F.coalesce(textstats._normalized(text_col), F.lit("")))
+            )
+            keep = fp.groupBy("_fp").agg(F.min(id_col).alias(id_col))
+            cur = pin(fp.join(keep, ["_fp", id_col]).drop("_fp"))
+            stages["after_dedup"] = cur.count()
+
+        if args.benchmark:
+            bench = spark.read.parquet(args.benchmark)
+            cur = pin(
+                decontam.decontaminate(cur, bench, n=args.ngram, text_col=text_col, id_col=id_col)
+            )
+            stages["after_decontam"] = cur.count()
+
+        if args.mix:
+            rates = {}
+            for part in args.mix.split(","):
+                k, _, v = part.partition("=")
+                rates[k.strip()] = float(v)
+            cur = pin(stratified_sample(cur, rates, strata_col, id_col, seed=args.seed))
+            stages["after_mix"] = cur.count()
+        elif args.temperature is not None:
+            cur = pin(
+                temperature_sample(cur, strata_col, id_col, alpha=args.temperature, seed=args.seed)
+            )
+            stages["after_mix"] = cur.count()
+
+        stats = textstats.hashed_linear_quality(cur, text_col, id_col).select(
+            id_col, "n_tokens", "quality_logit"
         )
-        keep = fp.groupBy("_fp").agg(F.min(id_col).alias(id_col))
-        cur = fp.join(keep, ["_fp", id_col]).drop("_fp").cache()
-        pinned.append(cur)
-        stages["after_dedup"] = cur.count()
-
-    if args.benchmark:
-        bench = spark.read.parquet(args.benchmark)
-        cur = decontam.decontaminate(
-            cur, bench, n=args.ngram, text_col=text_col, id_col=id_col
-        ).cache()
-        pinned.append(cur)
-        stages["after_decontam"] = cur.count()
-
-    if args.mix:
-        rates = {}
-        for part in args.mix.split(","):
-            k, _, v = part.partition("=")
-            rates[k.strip()] = float(v)
-        cur = stratified_sample(cur, rates, strata_col, id_col, seed=args.seed).cache()
-        pinned.append(cur)
-        stages["after_mix"] = cur.count()
-    elif args.temperature is not None:
-        cur = temperature_sample(
-            cur, strata_col, id_col, alpha=args.temperature, seed=args.seed
-        ).cache()
-        pinned.append(cur)
-        stages["after_mix"] = cur.count()
-
-    stats = textstats.hashed_linear_quality(cur, text_col, id_col).select(
-        id_col, "n_tokens", "quality_logit"
-    )
-    out = cur.join(stats, id_col)
-    if args.seq_len:
-        seqs = pack_token_sequences(
-            stats.select(id_col, "n_tokens"), seq_len=args.seq_len, id_col=id_col
-        ).drop("n_tokens")
-        out = out.join(seqs, id_col)
-    out.write.mode("overwrite").parquet(args.output)
-    for df in pinned:  # release exactly what this command pinned
-        df.unpersist()
-    if args.seq_len:
-        from lovdata_pipeline_spark.operators.packing import release_offsets_caches
-
-        release_offsets_caches()  # the write above was the final action
+        out = cur.join(stats, id_col)
+        if args.seq_len:
+            seqs = pack_token_sequences(
+                stats.select(id_col, "n_tokens"), seq_len=args.seq_len, id_col=id_col
+            ).drop("n_tokens")
+            out = out.join(seqs, id_col)
+        out.write.mode("overwrite").parquet(args.output)
+    release_retained()  # the write above was the final action
     stages["output"] = spark.read.parquet(args.output).count()
     print(json.dumps({"stages": stages, "output_path": args.output}))
     return 0
@@ -434,11 +427,8 @@ def cmd_pack(args) -> int:
     from pyspark.sql import functions as F
 
     from lovdata_pipeline_spark.operators import textstats
-    from lovdata_pipeline_spark.operators.packing import (
-        emit_token_sequences,
-        release_offsets_caches,
-        sequence_manifest,
-    )
+    from lovdata_pipeline_spark.operators.packing import emit_token_sequences, sequence_manifest
+    from lovdata_pipeline_spark.session import release_retained
 
     spark = _spark("lg-pack")
     docs = spark.read.parquet(args.input)
@@ -454,7 +444,7 @@ def cmd_pack(args) -> int:
         sequence_manifest(counts, seq_len=args.seq_len, id_col=args.id_col).write.mode(
             "overwrite"
         ).parquet(args.manifest)
-    release_offsets_caches()  # the writes above were the final actions
+    release_retained()  # the writes above were the final actions
     out = spark.read.parquet(args.output)
     stats = out.agg(
         F.count("*").alias("n"), F.sum("n_tokens_filled").alias("t")
@@ -484,6 +474,7 @@ def cmd_analyze(args) -> int:
     from pyspark.sql import functions as F
 
     from lovdata_pipeline_spark.operators import textstats
+    from lovdata_pipeline_spark.session import release_retained
 
     spark = _spark("lg-analyze")
     docs = spark.read.parquet(args.input)
@@ -607,8 +598,8 @@ def cmd_analyze(args) -> int:
             }
         )
     )
-    # the drift collect above was the final action on the pinned frame
-    textstats.release_textstats_caches()
+    # the drift collect above was the final action on the retained frame
+    release_retained()
     return 0
 
 
@@ -629,74 +620,71 @@ def cmd_clean(args) -> int:
     from lovdata_pipeline_spark.operators import textstats
     from lovdata_pipeline_spark.operators.decontam import remove_contaminated_spans
     from lovdata_pipeline_spark.operators.dedup import remove_duplicate_paragraphs
+    from lovdata_pipeline_spark.session import cached
 
     spark = _spark("lg-clean")
     docs = spark.read.parquet(args.input)
-    # frames pinned below — released individually after the write, so a
-    # long-lived shared session keeps its other caches (r8 VERDICT
+    # frames pinned below are released after the write and only they,
+    # so a long-lived shared session keeps its other caches (r8 VERDICT
     # "What's wrong" #3: a blanket clearCache evicted unrelated frames)
-    pinned = []
-    out = docs.select(args.id_col, args.group_col, args.text_col)
-    if not args.no_boilerplate:
-        out = textstats.strip_boilerplate_lines(
-            out,
-            text_col=args.text_col,
-            id_col=args.id_col,
-            group_col=args.group_col,
-            min_frac=args.boilerplate_min_frac,
-        ).select(args.id_col, args.group_col, "n_stripped", args.text_col)
-    if not args.no_paragraph_dedup:
-        # dedup rewrites (id, text); the narrow metadata columns ride back
-        # on an id join (the text itself still never shuffles). The sep
-        # arrives shell-escaped ('\n' = backslash-n) — decode ONLY the
-        # common escapes: a bytes round-trip through unicode_escape
-        # mojibakes any non-ASCII separator (UTF-8 bytes re-read as
-        # latin-1, r6 review).
-        sep = (
-            args.paragraph_sep.replace("\\r", "\r")
-            .replace("\\n", "\n")
-            .replace("\\t", "\t")
-        )
+    with cached() as pin:
+        out = docs.select(args.id_col, args.group_col, args.text_col)
         if not args.no_boilerplate:
-            # both branches below (meta + the dedup rewrite) read the
-            # stripped frame — unpinned, the whole strip pipeline
-            # (explode + countDistinct + join + splice) evaluates twice
-            out = out.persist()
-            pinned.append(out)
-            out.count()
-        meta = out.drop(args.text_col)
-        deduped = remove_duplicate_paragraphs(
-            out.select(args.id_col, args.text_col),
-            text_col=args.text_col,
-            id_col=args.id_col,
-            sep=sep,
-        ).select(args.id_col, "n_dropped", args.text_col)
-        out = meta.join(deduped, args.id_col)
-    if args.needles:
-        # the surgery rewrite fans out twice (meta + surgery input) —
-        # pin unless `out` is still the bare input scan
-        if not (args.no_boilerplate and args.no_paragraph_dedup):
-            out = out.persist()
-            pinned.append(out)
-            out.count()
-        surg = remove_contaminated_spans(
-            out.select(args.id_col, args.text_col),
-            spark.read.parquet(args.needles),
-            text_col=args.text_col,
-            id_col=args.id_col,
-            needle_text_col=args.needle_text_col,
-            anchor_n=args.anchor_n,
-            keep_text=True,
-        ).select(
-            args.id_col,
-            "n_needles_hit",
-            "n_tokens_removed",
-            F.col("clean_text").alias(args.text_col),
-        )
-        out = out.drop(args.text_col).join(surg, args.id_col)
-    out.write.mode("overwrite").parquet(args.output)
-    for df in pinned:  # release exactly what this command pinned
-        df.unpersist()
+            out = textstats.strip_boilerplate_lines(
+                out,
+                text_col=args.text_col,
+                id_col=args.id_col,
+                group_col=args.group_col,
+                min_frac=args.boilerplate_min_frac,
+            ).select(args.id_col, args.group_col, "n_stripped", args.text_col)
+        if not args.no_paragraph_dedup:
+            # dedup rewrites (id, text); the narrow metadata columns ride back
+            # on an id join (the text itself still never shuffles). The sep
+            # arrives shell-escaped ('\n' = backslash-n) — decode ONLY the
+            # common escapes: a bytes round-trip through unicode_escape
+            # mojibakes any non-ASCII separator (UTF-8 bytes re-read as
+            # latin-1, r6 review).
+            sep = (
+                args.paragraph_sep.replace("\\r", "\r")
+                .replace("\\n", "\n")
+                .replace("\\t", "\t")
+            )
+            if not args.no_boilerplate:
+                # both branches below (meta + the dedup rewrite) read the
+                # stripped frame — unpinned, the whole strip pipeline
+                # (explode + countDistinct + join + splice) evaluates twice
+                out = pin(out)
+                out.count()
+            meta = out.drop(args.text_col)
+            deduped = remove_duplicate_paragraphs(
+                out.select(args.id_col, args.text_col),
+                text_col=args.text_col,
+                id_col=args.id_col,
+                sep=sep,
+            ).select(args.id_col, "n_dropped", args.text_col)
+            out = meta.join(deduped, args.id_col)
+        if args.needles:
+            # the surgery rewrite fans out twice (meta + surgery input) —
+            # pin unless `out` is still the bare input scan
+            if not (args.no_boilerplate and args.no_paragraph_dedup):
+                out = pin(out)
+                out.count()
+            surg = remove_contaminated_spans(
+                out.select(args.id_col, args.text_col),
+                spark.read.parquet(args.needles),
+                text_col=args.text_col,
+                id_col=args.id_col,
+                needle_text_col=args.needle_text_col,
+                anchor_n=args.anchor_n,
+                keep_text=True,
+            ).select(
+                args.id_col,
+                "n_needles_hit",
+                "n_tokens_removed",
+                F.col("clean_text").alias(args.text_col),
+            )
+            out = out.drop(args.text_col).join(surg, args.id_col)
+        out.write.mode("overwrite").parquet(args.output)
     written = spark.read.parquet(args.output)
     agg = [F.count(F.lit(1)).alias("n_docs")]
     if "n_dropped" in written.columns:
@@ -1187,6 +1175,7 @@ def cmd_mine(args) -> int:
     from pyspark.sql import functions as F
 
     from lovdata_pipeline_spark.operators.similarity import bitext_margin_mine
+    from lovdata_pipeline_spark.session import release_retained
 
     spark = _spark("lg-mine")
     emb = spark.read.parquet(args.embeddings)
@@ -1212,11 +1201,11 @@ def cmd_mine(args) -> int:
         buckets=args.buckets,
     )
     pairs.write.mode("overwrite").parquet(args.output)
-    # bitext_margin_mine returns its result eagerly cached (so it could
+    # bitext_margin_mine returns its result retained (so it could
     # release the pair-score frame internally); this command is done
     # with it after the write — release, so repeated `lg mine` calls in
     # a long-lived session leave no pinned frames (r10 VERDICT Next #5)
-    pairs.unpersist()
+    release_retained()
     n = spark.read.parquet(args.output).count()
     print(
         json.dumps(

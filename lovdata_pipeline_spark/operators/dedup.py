@@ -23,7 +23,7 @@ from pyspark.sql.types import StructType
 from lovdata_pipeline_spark.operators.indexwrite import read_sidecar, write_sidecar
 from lovdata_pipeline_spark.operators.skew import collect_bounded, spread_if_narrow
 from lovdata_pipeline_spark.operators.textstats import _clean_split
-from lovdata_pipeline_spark.session import driver_rows
+from lovdata_pipeline_spark.session import cached, driver_rows, retain
 
 # --------------------------------------------------------------------------
 # exact
@@ -212,11 +212,10 @@ def ngram_jaccard_pairs(
     so every downstream shuffle (df counts, prefix join, verify) carries
     longs instead of n-gram strings; Jaccard over hashed sets equals
     Jaccard over the strings (64-bit collisions are ~1e-8 even at 1e6
-    distinct shingles). The result is ``cache()``d and materialized
-    eagerly so the shingle cache can be released before returning; the
-    cached result is the caller's to release (``unpersist()``, or
-    ``clearCache`` as ``bench.release_caches`` does), so each call leaves
-    exactly that one frame in executor storage.
+    distinct shingles). The result is retained (``session.retain``) and
+    materialized eagerly so the shingle cache can be released before
+    returning; the caller releases it with ``session.release_retained()``,
+    so each call leaves exactly that one frame in executor storage.
 
     ``max_df`` (r9, the minhash-LSH df-cap analog): when the SHINGLE
     SPACE saturates — a bounded vocabulary, boilerplate-heavy crawl
@@ -239,7 +238,7 @@ def ngram_jaccard_pairs(
     rule's hash tiebreak, so the graded capped row uses the md5-derived
     60-bit hash both engines compute identically.
     """
-    sh = hashed_word_shingles(docs, text_col, id_col, n, portable=portable).cache()
+    sh = hashed_word_shingles(docs, text_col, id_col, n, portable=portable)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
 
     # global canonical order: rarest shingles first (smallest posting lists
@@ -284,9 +283,9 @@ def ngram_jaccard_pairs(
     # localCheckpoint — keeps the lineage recoverable (checkpointed
     # blocks are executor-local and unrecomputable after executor loss,
     # a liability at cluster scale).
-    result = _verify_jaccard(sh, cand, threshold, id_col).cache()
-    result.count()
-    sh.unpersist()
+    with cached(sh):
+        result = retain(_verify_jaccard(sh, cand, threshold, id_col))
+        result.count()
     return result
 
 
@@ -387,83 +386,83 @@ def minhash_lsh_pairs(
 
     Shingles are xxhash64-compressed to longs first (8-byte shuffle keys;
     Jaccard is collision-immune in practice — see ngram_jaccard_pairs).
-    The (small) result is ``cache()``d and materialized by one
-    ``count()``, after which the shingle cache is released; the cached
-    result keeps its lineage, so a lost block is recomputed. Each call
-    leaves that cached result for the caller to release (``unpersist()``,
-    or ``clearCache`` as ``bench.release_caches`` does).
+    The (small) result is retained (``session.retain``) and materialized
+    by one ``count()``, after which the shingle cache is released; the
+    cached result keeps its lineage, so a lost block is recomputed. Each
+    call leaves that result for the caller to release with
+    ``session.release_retained()``.
     """
     rows_per_band = num_hashes // bands
-    sh = hashed_word_shingles(docs, text_col, id_col, n).cache()
-    sh_for_sig = sh
-    extra_cand = None
-    if df_cap is not None:
-        n_docs = docs.count()  # parquet metadata count: no scan
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > df_cap * n_docs)
-            .select("shingle")
-        )
-        rows = collect_bounded(hot)  # None past the bound: hot stays lazy
-        if rows is None or rows:
-            if rows:
-                hot = F.broadcast(driver_rows(docs.sparkSession, rows, hot.schema))
-            sh_for_sig = sh.join(hot, "shingle", "left_anti")
-            # zero-survivor recall guard: docs whose whole shingle set was
-            # hot re-enter candidacy through an exact set-hash equi-join
-            # (identical sets ⇒ Jaccard 1.0 ≥ any threshold; verify step
-            # recomputes the exact score either way).
-            survivors = sh_for_sig.select(id_col).distinct()
-            set_hash = (
-                sh.join(
-                    sh.select(id_col).distinct()
-                    .join(survivors, id_col, "left_anti"),
-                    id_col,
-                )
-                .groupBy(id_col)
-                .agg(
-                    F.xxhash64(
-                        F.array_join(
-                            F.transform(
-                                F.array_sort(F.collect_list("shingle")),
-                                lambda x: x.cast("string"),
-                            ),
-                            ",",
-                        )
-                    ).alias("set_hash")
-                )
+    sh = hashed_word_shingles(docs, text_col, id_col, n)
+    with cached(sh):
+        sh_for_sig = sh
+        extra_cand = None
+        if df_cap is not None:
+            n_docs = docs.count()  # parquet metadata count: no scan
+            hot = (
+                sh.groupBy("shingle")
+                .agg(F.count("*").alias("df"))
+                .filter(F.col("df") > df_cap * n_docs)
+                .select("shingle")
             )
-            extra_cand = (
-                set_hash.select(F.col(id_col).alias("doc_a"), "set_hash")
-                .join(
-                    set_hash.select(F.col(id_col).alias("doc_b"), "set_hash"),
-                    "set_hash",
+            rows = collect_bounded(hot)  # None past the bound: hot stays lazy
+            if rows is None or rows:
+                if rows:
+                    hot = F.broadcast(driver_rows(docs.sparkSession, rows, hot.schema))
+                sh_for_sig = sh.join(hot, "shingle", "left_anti")
+                # zero-survivor recall guard: docs whose whole shingle set was
+                # hot re-enter candidacy through an exact set-hash equi-join
+                # (identical sets ⇒ Jaccard 1.0 ≥ any threshold; verify step
+                # recomputes the exact score either way).
+                survivors = sh_for_sig.select(id_col).distinct()
+                set_hash = (
+                    sh.join(
+                        sh.select(id_col).distinct()
+                        .join(survivors, id_col, "left_anti"),
+                        id_col,
+                    )
+                    .groupBy(id_col)
+                    .agg(
+                        F.xxhash64(
+                            F.array_join(
+                                F.transform(
+                                    F.array_sort(F.collect_list("shingle")),
+                                    lambda x: x.cast("string"),
+                                ),
+                                ",",
+                            )
+                        ).alias("set_hash")
+                    )
                 )
-                .filter(F.col("doc_a") < F.col("doc_b"))
-                .select("doc_a", "doc_b")
+                extra_cand = (
+                    set_hash.select(F.col(id_col).alias("doc_a"), "set_hash")
+                    .join(
+                        set_hash.select(F.col(id_col).alias("doc_b"), "set_hash"),
+                        "set_hash",
+                    )
+                    .filter(F.col("doc_a") < F.col("doc_b"))
+                    .select("doc_a", "doc_b")
+                )
+        sig = minhash_signatures(sh_for_sig, id_col, num_hashes)
+        banded = _banded_view(sig, bands, rows_per_band, id_col)
+        cand = (
+            banded.alias("x")
+            .join(banded.alias("y"), ["band_idx", "band_hash"])
+            .filter(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
+            .select(
+                F.col(f"x.{id_col}").alias("doc_a"), F.col(f"y.{id_col}").alias("doc_b")
             )
-    sig = minhash_signatures(sh_for_sig, id_col, num_hashes)
-    banded = _banded_view(sig, bands, rows_per_band, id_col)
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band_idx", "band_hash"])
-        .filter(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
-        .select(
-            F.col(f"x.{id_col}").alias("doc_a"), F.col(f"y.{id_col}").alias("doc_b")
         )
-    )
-    if extra_cand is not None:
-        cand = cand.unionByName(extra_cand)
-    cand = cand.distinct()
+        if extra_cand is not None:
+            cand = cand.unionByName(extra_cand)
+        cand = cand.distinct()
 
-    # verify candidates with exact jaccard on the same shingle sets;
-    # same eager cache+count / release pattern as ngram_jaccard_pairs
-    # (recoverable lineage, no retained shingle storage).
-    result = _verify_jaccard(sh, cand, threshold, id_col).cache()
-    result.count()
-    sh.unpersist()
-    return result
+        # verify candidates with exact jaccard on the same shingle sets;
+        # same eager cache+count / release pattern as ngram_jaccard_pairs
+        # (recoverable lineage, no retained shingle storage).
+        result = retain(_verify_jaccard(sh, cand, threshold, id_col))
+        result.count()
+        return result
 
 
 # --------------------------------------------------------------------------
@@ -502,14 +501,12 @@ def minhash_store_write(
     # r13: the bands write and the shingles write both consume the
     # shingle frame — unpersisted, the corpus was tokenized/shingled
     # twice (guide §5: reuse-justified persist, released below)
-    sh = hashed_word_shingles(docs, text_col, id_col, n).persist()
-    try:
+    sh = hashed_word_shingles(docs, text_col, id_col, n)
+    with cached(sh):
         sig = minhash_signatures(sh, id_col, num_hashes)
         banded = _banded_view(sig, bands, num_hashes // bands, id_col)
         banded.write.mode("overwrite").parquet(f"{path}/bands")
         sh.write.mode("overwrite").parquet(f"{path}/shingles")
-    finally:
-        sh.unpersist()
     n_docs = docs.select(id_col).distinct().count()
     write_sidecar(
         path,
@@ -1138,10 +1135,11 @@ def embedding_near_duplicates(
     # max(size) is null-safe where first-row size is not. The upstream
     # plan is persisted across the gate + collect (r2 ADVICE: an
     # expensively-derived `vectors` — e.g. a real embedding provider —
-    # must not be recomputed per consumer) and released before return.
-    persisted = vectors.persist()
-    try:
-        gate = persisted.agg(
+    # must not be recomputed per consumer) and released before return;
+    # lazy consumers built below (candidate scan, verify joins) simply
+    # recompute upstream, so correctness never depends on the cache.
+    with cached(vectors):
+        gate = vectors.agg(
             F.count("*").alias("n"), F.max(F.size(vec_col)).alias("d")
         ).first()
         n, dims = int(gate["n"]), int(gate["d"] or 0)
@@ -1153,12 +1151,7 @@ def embedding_near_duplicates(
         if n == 0:  # empty corpus: the numpy matrix path needs ≥ 1 row
             id_t = vectors.schema[id_col].dataType.simpleString()
             return driver_rows(spark, [], f"doc_a {id_t}, doc_b {id_t}, cosine double")
-        pdf = persisted.select(id_col, vec_col).toPandas()
-    finally:
-        # lazy consumers built below (candidate scan, verify joins) simply
-        # recompute upstream if the caller materializes after this point;
-        # correctness never depends on the cache
-        persisted.unpersist()
+        pdf = vectors.select(id_col, vec_col).toPandas()
     ids = pdf[id_col].to_numpy()
     mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
     mat_n = mat / np.linalg.norm(mat, axis=1, keepdims=True)

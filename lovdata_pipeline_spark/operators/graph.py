@@ -26,6 +26,7 @@ from lovdata_pipeline_spark.operators.indexwrite import read_sidecar, write_arti
 from lovdata_pipeline_spark.operators.sampling import top_k_per_group
 from lovdata_pipeline_spark.operators import _vecmath
 from lovdata_pipeline_spark.operators.similarity import _as_double, _dot, _norm
+from lovdata_pipeline_spark.session import cached
 
 #: rank mass fixed-point scale: ranks are integers in units of 10⁻¹².
 RANK_SCALE = 10**12
@@ -557,30 +558,25 @@ def pagerank_quantized(
     # whole upstream edge build (for pagerank_doc_graph, the blocked
     # BLAS k-NN construction) ran TWICE: once materializing nodes, once
     # materializing ew. Persist it; nodes.count() populates the cache.
-    e_sym = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).persist()
-    # persist, not eager localCheckpoint: cache keeps the lineage
+    e_sym = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+    # cache, not eager localCheckpoint: cache keeps the lineage
     # recoverable, and the count below materializes it in the same job
     # that computes n anyway (one fewer blocking action).
     nodes = (
         e_sym.select(F.col("_s").alias("node"))
         .unionByName(e_sym.select(F.col("_d").alias("node")))
         .distinct()
-        .persist()
     )
-    try:
+    with cached(e_sym, nodes):
         n = nodes.count()
         if n == 0:
             return nodes.withColumn("rank_q", F.lit(0).cast("long"))
         base = RANK_SCALE // n
         outdeg = e_sym.groupBy("_s").agg(F.count(F.lit(1)).alias("odeg"))
-        ew = (
-            e_sym.join(outdeg, "_s")
-            .repartition(F.col("_s"))
-            .persist()
-        )
-        ew.count()  # materialize once (reads the e_sym cache, not the
-        # edge build); reused every iteration
-        try:
+        ew = e_sym.join(outdeg, "_s").repartition(F.col("_s"))
+        with cached(ew):
+            ew.count()  # materialize once (reads the e_sym cache, not the
+            # edge build); reused every iteration
             ranks = nodes.withColumn("rank_q", F.lit(base).cast("long"))
             for it in range(n_iter):
                 inbound = (
@@ -614,9 +610,4 @@ def pagerank_quantized(
             # be released before returning (lineage-truncated result —
             # the connected-components discipline)
             ranks = ranks.localCheckpoint()
-        finally:
-            ew.unpersist()
         return ranks
-    finally:
-        nodes.unpersist()
-        e_sym.unpersist()

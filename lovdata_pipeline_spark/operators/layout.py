@@ -50,6 +50,7 @@ from lovdata_pipeline_spark.operators.indexwrite import (
     write_artifact,
     write_sidecar,
 )
+from lovdata_pipeline_spark.session import cached
 
 #: interleave precision per dimension; zvalue spans 2*ZBITS bits.
 ZBITS = 16
@@ -279,28 +280,26 @@ def zorder_write_index(
     zf = zorder_frame_pinned(
         df, xcol, ycol, ranges, bits=bits, n_buckets=n_buckets,
         on_out_of_range="error",
-    ).persist()  # r13: the stats pass AND the partitioned write both
-    # consume zf — unpersisted, each re-ran the full quantize projection
-    # (and re-scanned the source) from scratch; one cached evaluation
-    # feeds both (guide §5: reuse-justified persist, released below)
-    sidecar = {
-        "version": _VERSION,
-        "xcol": xcol,
-        "ycol": ycol,
-        "bits": bits,
-        "n_buckets": n_buckets,
-        "ranges": {
-            "xlo": ranges[0], "xhi": ranges[1],
-            "ylo": ranges[2], "yhi": ranges[3],
-        },
-        "buckets": _bucket_stats(zf),
-    }
-    try:
+    )
+    # r13: the stats pass AND the partitioned write both consume zf —
+    # uncached, each re-ran the full quantize projection (and re-scanned
+    # the source) from scratch; one cached evaluation feeds both
+    with cached(zf):
+        sidecar = {
+            "version": _VERSION,
+            "xcol": xcol,
+            "ycol": ycol,
+            "bits": bits,
+            "n_buckets": n_buckets,
+            "ranges": {
+                "xlo": ranges[0], "xhi": ranges[1],
+                "ylo": ranges[2], "yhi": ranges[3],
+            },
+            "buckets": _bucket_stats(zf),
+        }
         write_artifact(
             zf.drop("zvalue"), path, "zorder", sidecar, partition_col="zbucket"
         )
-    finally:
-        zf.unpersist()
 
 
 def zorder_append(
@@ -342,10 +341,9 @@ def zorder_append(
         df, sc["xcol"], sc["ycol"], (r["xlo"], r["xhi"], r["ylo"], r["yhi"]),
         bits=bits, n_buckets=n_buckets, on_out_of_range=on_out_of_range,
     ).drop("zvalue")
-    # persisted once: the probe and the rewrite both read it (and the
+    # cached once: the probe and the rewrite both read it (and the
     # guard exprs fire in the probe, not again in the rewrite)
-    new = new.persist()
-    try:
+    with cached(new):
         # ONE probe job: the dirty buckets and the appended row count
         probe = new.groupBy("zbucket").count().collect()  # <= n_buckets rows
         dirty = sorted(row["zbucket"] for row in probe)
@@ -366,8 +364,6 @@ def zorder_append(
             .partitionBy("zbucket")
             .parquet(path)
         )
-    finally:
-        new.unpersist()
     spark.catalog.refreshByPath(path)
     # stats from the written buckets: ``merged``'s lazy ``old`` side would
     # now read the new files and count the appended rows twice

@@ -31,32 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from lovdata_pipeline_spark.operators.textstats import _clean_split
-from lovdata_pipeline_spark.session import driver_rows
-
-# Cached offsets frames retained by global_token_offsets. The cache is
-# load-bearing while a derived frame may still be acted on (see the
-# function docstring), so release is a caller decision: call
-# release_offsets_caches() after the FINAL action on anything derived
-# from a packing operator. Long-lived sessions packing many batches
-# otherwise accrete one InMemoryRelation per call.
-_RETAINED: list[DataFrame] = []
-
-
-def release_offsets_caches() -> int:
-    """Unpersist every offsets frame retained by ``global_token_offsets``
-    and return how many were released. Safe to call repeatedly; only
-    call once all actions on frames derived from packing operators have
-    run. A post-release action on a derived frame is UNSAFE, not just
-    wasteful: recomputation re-draws the range partitioning while the
-    plan still joins the driver-baked offsets of the OLD partition
-    assignment, so tok_start would silently stop being a valid prefix
-    sum. Release means "this lineage is dead" — build a fresh operator
-    call for new work."""
-    n = 0
-    while _RETAINED:
-        _RETAINED.pop().unpersist()
-        n += 1
-    return n
+from lovdata_pipeline_spark.session import cached, driver_rows, retain
 
 
 def global_token_offsets(
@@ -69,15 +44,15 @@ def global_token_offsets(
     all rows with smaller ``id_col`` — the distributed prefix sum
     described in the module docstring.
 
-    The returned frame is CACHED and eagerly materialized: the cache is
-    load-bearing, not an optimization — it pins the offsets computed
-    against the (sampling-dependent) range partitioning before
-    ``with_pid`` is released, so later actions can never recompute
-    against a re-drawn partitioning. The cost is one retained
-    (id, n_tokens, tok_start) InMemoryRelation per call: long-lived
-    sessions packing many batches should call ``release_offsets_caches()``
-    once the derived frames' final actions have run — bench and the
-    registry rely on the session's cache clearing.
+    The returned frame is retained (``session.retain``) and eagerly
+    materialized: the cache is load-bearing, not an optimization — it
+    pins the offsets computed against the (sampling-dependent) range
+    partitioning before ``with_pid`` is released, so later actions can
+    never recompute against a re-drawn partitioning. The cost is one
+    retained (id, n_tokens, tok_start) InMemoryRelation per call:
+    long-lived sessions packing many batches should call
+    ``session.release_retained()`` once the derived frames' final
+    actions have run, as ``bench.release_caches`` does between reps.
     """
     parts = df.select(id_col, token_col)
     ranged = (
@@ -92,50 +67,47 @@ def global_token_offsets(
     # exceeds the sample size. Persisting makes the first physical plan an
     # InMemoryRelation both phases (and any cache-miss recomputation) read,
     # so _pid is one consistent assignment; it also keeps the corpus scan
-    # single-pass. Released before return, same cache+count discipline as
+    # single-pass. Released on return, same cache+count discipline as
     # ngram_jaccard_pairs.
-    with_pid = ranged.withColumn("_pid", F.spark_partition_id()).persist()
+    with_pid = ranged.withColumn("_pid", F.spark_partition_id())
+    with cached(with_pid):
+        # phase 1: k subtotal rows — the ONLY driver materialization. This
+        # first action also populates the persist above (r13: a separate
+        # count() job beforehand materialized the cache the collect below
+        # would have populated anyway — one job, not two; the pinning
+        # guarantee only needs SOME first action to fill the cache).
+        # range partitioner maps ascending id ranges to ascending partition
+        # ids, so prefix-summing subtotals in _pid order gives each
+        # partition the total token mass of all ids before its range.
+        subtotals = {
+            int(r["_pid"]): int(r["t"])
+            for r in with_pid.groupBy("_pid").agg(F.sum(token_col).alias("t")).collect()
+        }
+        offsets, running = {}, 0
+        for pid in sorted(subtotals):
+            offsets[pid] = running
+            running += subtotals[pid]
 
-    # phase 1: k subtotal rows — the ONLY driver materialization. This
-    # first action also populates the persist above (r13: a separate
-    # count() job beforehand materialized the cache the collect below
-    # would have populated anyway — one job, not two; the pinning
-    # guarantee only needs SOME first action to fill the cache).
-    # range partitioner maps ascending id ranges to ascending partition
-    # ids, so prefix-summing subtotals in _pid order gives each
-    # partition the total token mass of all ids before its range.
-    subtotals = {
-        int(r["_pid"]): int(r["t"])
-        for r in with_pid.groupBy("_pid").agg(F.sum(token_col).alias("t")).collect()
-    }
-    offsets, running = {}, 0
-    for pid in sorted(subtotals):
-        offsets[pid] = running
-        running += subtotals[pid]
-
-    offset_df = driver_rows(
-        df.sparkSession, list(offsets.items()), "_pid int, _offset long"
-    )
-
-    # phase 2: partition-local running sum (window keyed by _pid never
-    # crosses partitions → no single-task funnel), plus the offset.
-    local_w = (
-        Window.partitionBy("_pid")
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum_before = F.coalesce(F.sum(token_col).over(local_w), F.lit(0)) + F.col("_offset")
-    result = (
-        with_pid.join(F.broadcast(offset_df), "_pid")
-        .select(
-            F.col(id_col),
-            F.col(token_col),
-            cum_before.cast("long").alias("tok_start"),
+        offset_df = driver_rows(
+            df.sparkSession, list(offsets.items()), "_pid int, _offset long"
         )
-    ).cache()
-    result.count()
-    with_pid.unpersist()
-    _RETAINED.append(result)
+
+        # phase 2: partition-local running sum (window keyed by _pid never
+        # crosses partitions → no single-task funnel), plus the offset.
+        local_w = (
+            Window.partitionBy("_pid")
+            .orderBy(id_col)
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        cum_before = F.coalesce(F.sum(token_col).over(local_w), F.lit(0)) + F.col("_offset")
+        result = retain(
+            with_pid.join(F.broadcast(offset_df), "_pid").select(
+                F.col(id_col),
+                F.col(token_col),
+                cum_before.cast("long").alias("tok_start"),
+            )
+        )
+        result.count()
     return result
 
 
@@ -341,8 +313,8 @@ def training_order(
     the naive plan is one join back on the 32-char hash key. md5 output
     is unique per distinct key in practice, making the order total;
     reshuffle with a new ``seed`` for a different epoch order. CACHE
-    NOTE: the rank frame is session-cached via ``_RETAINED`` — call
-    ``release_offsets_caches()`` between waves in long-lived sessions.
+    NOTE: the rank frame is retained (``session.retain``) — call
+    ``session.release_retained()`` between waves in long-lived sessions.
 
     PRECONDITION: ``key_col`` values must be unique — duplicate keys
     share one hash, so their relative order is undefined. The rank frame

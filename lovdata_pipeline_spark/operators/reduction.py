@@ -31,7 +31,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, functions as F
 
 from lovdata_pipeline_spark.operators.skew import collect_bounded
-from lovdata_pipeline_spark.session import driver_rows
+from lovdata_pipeline_spark.session import cached, driver_rows
 
 #: quantization scale: float32 embeddings in [-2, 2] map to ints < 2^22.
 SCALE = 1 << 20
@@ -352,27 +352,17 @@ def pca_rerank_topk(
     )
     # r14 (guide §4.2): vectorized, fold-order-exact −Σ(a−b)² (_vecmath)
     neg_dist = _vecmath.pair_neg_sq_l2(F.col("_qp"), F.col("_cp"))
-    persisted = False
-    if n_cells > 0:
-        # the index build materializes the projected corpus 3× (seed
-        # TakeOrdered + two Lloyd iterations) and the candidate
-        # materialization below reads it a 4th time — persist the
-        # narrow (id, k-dim) projection across ALL of them (r13: the
-        # persist used to be released before the final assignment,
-        # which re-ran the corpus pca_project mapInPandas from scratch).
-        # Released in the ``finally`` below (r14 ADVICE: an error in the
-        # centroid build / probe join / checkpoint must not leak the
-        # cached blocks for the session's lifetime). At cluster scale
-        # you write the projected corpus once instead.
-        cp = cp.persist()
-        persisted = True
-    try:
+    # with cells, the index build materializes the projected corpus 3×
+    # (seed TakeOrdered + two Lloyd iterations) and the candidate
+    # materialization below reads it a 4th time — cache the narrow
+    # (id, k-dim) projection across ALL of them (r13: the persist used
+    # to be released before the final assignment, which re-ran the
+    # corpus pca_project mapInPandas from scratch). At cluster scale you
+    # write the projected corpus once instead.
+    with cached(cp if n_cells > 0 else None):
         cand = _pca_rerank_candidates(
             qp, cp, neg_dist, pool, n_cells, n_probe, query_id, corpus_id
         )
-    finally:
-        if persisted:
-            cp.unpersist()
 
     # r14 (guide §4.2): the stage-2 rescore's norms + pair dot run as
     # Arrow-batched vectorized UDFs, fold-order exact (_vecmath).

@@ -418,12 +418,9 @@ def stratified_split(
     Output: input columns + ``split``. NULL strata group together
     (coalesced to '', mirrored in oracles).
 
-    CACHE NOTE: the prefix-sum rank frame is cached for the lifetime of
-    the session and tracked in ``packing._RETAINED`` — long-lived
-    sessions calling this repeatedly should call
-    ``packing.release_offsets_caches()`` between waves (the contract
-    was previously documented only in packing's module docstring, which
-    a sampling-API caller never reads — r10 review).
+    CACHE NOTE: the prefix-sum rank frame is retained
+    (``session.retain``) until ``session.release_retained()`` — long-lived
+    sessions calling this repeatedly should call it between waves.
     """
     from lovdata_pipeline_spark.operators.packing import global_token_offsets
 

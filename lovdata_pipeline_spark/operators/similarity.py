@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from lovdata_pipeline_spark.operators import _vecmath
 from lovdata_pipeline_spark.operators.indexwrite import read_sidecar, write_artifact
-from lovdata_pipeline_spark.session import driver_rows
+from lovdata_pipeline_spark.session import cached, driver_rows, retain
 
 
 def _as_double(col) -> Column:
@@ -1091,11 +1091,9 @@ def bitext_margin_mine(
             )
         else:
             sb = sb.withColumnRenamed("_b0", "_b")
-        scored = sb.join(tb, "_b").select(src_id, tgt_id, pair_score).persist()
+        scored = sb.join(tb, "_b").select(src_id, tgt_id, pair_score)
     else:
-        scored = (
-            s.crossJoin(F.broadcast(t)).select(src_id, tgt_id, pair_score).persist()
-        )
+        scored = s.crossJoin(F.broadcast(t)).select(src_id, tgt_id, pair_score)
     sk = (
         top_k_per_group(scored, k, src_id, "score", tgt_id)
         .groupBy(src_id)
@@ -1125,18 +1123,17 @@ def bitext_margin_mine(
         .select(src_id, tgt_id, "score", "margin")
     )
     best = top_k_per_group(m, 1, src_id, "margin", tgt_id)
-    out = best.filter(F.col("margin") >= threshold).select(
-        src_id, tgt_id, "score", "margin"
-    )
-    # materialize the (one-best-pair-per-source, 4 narrow columns)
-    # result eagerly so the pair-score frame — the expensive, corpus-
-    # squared-shaped one — can be released before returning; cache, not
-    # localCheckpoint, keeps the lineage recoverable after executor
-    # loss. Callers that are done with the result (e.g. `lg mine` after
-    # its write) unpersist it — cmd_clean's track-and-release rule.
-    out = out.cache()
-    out.count()
-    scored.unpersist()
+    with cached(scored):
+        # materialize the (one-best-pair-per-source, 4 narrow columns)
+        # result eagerly so the pair-score frame — the expensive, corpus-
+        # squared-shaped one — can be released before returning; cache, not
+        # localCheckpoint, keeps the lineage recoverable after executor
+        # loss. Callers that are done with the result (e.g. `lg mine` after
+        # its write) release it with ``session.release_retained()``.
+        out = retain(
+            best.filter(F.col("margin") >= threshold).select(src_id, tgt_id, "score", "margin")
+        )
+        out.count()
     return out
 
 

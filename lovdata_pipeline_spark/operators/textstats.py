@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from lovdata_pipeline_spark.operators.indexwrite import read_sidecar, write_artifact
 from lovdata_pipeline_spark.operators.skew import spread_if_narrow
-from lovdata_pipeline_spark.session import driver_rows
+from lovdata_pipeline_spark.session import cached, driver_rows, retain
 
 # Tiny per-language stopword anchors — enough signal for a corpus-level
 # heuristic; deliberately small so the oracle SQL stays readable.
@@ -68,25 +68,6 @@ def _clean_split(c: Column) -> Column:
 
 def _words(text_col: str) -> Column:
     return _clean_split(F.lower(F.col(text_col)))
-
-
-# Cached frames retained by vocab_drift (bounded counts) and
-# perplexity_buckets (narrow per-doc score frame). Release is a caller
-# decision — the packing-cache discipline: call release_textstats_caches()
-# after the FINAL action on anything derived from these operators.
-_RETAINED: list[DataFrame] = []
-
-
-def release_textstats_caches() -> int:
-    """Unpersist every frame retained by textstats operators and return
-    how many were released. Safe to call repeatedly; only call once all
-    actions on derived frames have run (recomputation after release is
-    correct here — the frames are deterministic — just wasteful)."""
-    n = 0
-    while _RETAINED:
-        _RETAINED.pop().unpersist()
-        n += 1
-    return n
 
 
 def token_count_col(text_col: str = "text") -> Column:
@@ -736,8 +717,8 @@ def train_text_classifier(
     # aggregate and the gradient join both key on it, so Catalyst drops
     # their exchanges in every iteration — the only remaining per-
     # iteration shuffle is the k-row per-bucket aggregate
-    X = feats.unionByName(bias).repartition(F.col(id_col)).persist()
-    try:
+    X = feats.unionByName(bias).repartition(F.col(id_col))
+    with cached(X):
         n_docs = X.select(id_col).distinct().count()
         if n_docs == 0:
             raise ValueError("train_text_classifier: empty corpus")
@@ -787,8 +768,6 @@ def train_text_classifier(
                 wq[b] -= math.floor(
                     lr * g * _CLF_WSCALE / (n_docs * _CLF_PSCALE)
                 )
-    finally:
-        X.unpersist()
     return driver_rows(
         spark,
         [(b, int(wq[b]), wq[b] / _CLF_WSCALE) for b in range(n_buckets + 1)],
@@ -1307,7 +1286,7 @@ def vocab_drift(
         .cast("long")
         % n_buckets
     )
-    counts = (
+    counts = retain(
         # NULL-group rows drop HERE, not implicitly: without the filter,
         # the grid's NULL-group row never equi-joins its own counts and
         # the output would carry a fabricated uniform-distribution KL
@@ -1319,10 +1298,8 @@ def vocab_drift(
         .select(group_col, bucket.alias("_b"))
         .groupBy(group_col, "_b")
         .agg(F.count(F.lit(1)).alias("_c"))
-        .cache()
     )
     counts.count()  # pin the bounded frame; one corpus scan total
-    _RETAINED.append(counts)
     ts = counts.groupBy(group_col).agg(F.sum("_c").alias("_t"))
     gb = counts.groupBy("_b").agg(F.sum("_c").alias("_g"))
     tot = counts.agg(F.sum("_c").alias("_ctot"))
@@ -1682,11 +1659,8 @@ def perplexity_buckets(
     # that DAG twice (10 scans measured). This is the narrowest possible
     # representation of the first pass (id, group, one 6-dp double); at
     # 100 TB it is the frame you'd WRITE between the two passes.
-    with_grp = (
-        docs.select(id_col, group_col).join(scored, id_col).persist()
-    )
+    with_grp = retain(docs.select(id_col, group_col).join(scored, id_col))
     with_grp.count()
-    _RETAINED.append(with_grp)
     cuts = (
         with_grp.groupBy(group_col)
         .agg(F.sort_array(F.collect_list("mean_surprisal")).alias("_ss"))
@@ -1781,8 +1755,7 @@ def bpe_train(
     schema = (
         "rank int, left string, right string, merged string, n_occurrences long"
     )
-    wc = wc.persist()
-    try:
+    with cached(wc):
         # size gate: estimated driver footprint of the collected vocab
         # (≤4 bytes/char UTF-8 + per-row overhead). Vocabulary-sized —
         # at 100 TB of text the distinct-word frame is still ~10⁷ rows.
@@ -1795,8 +1768,6 @@ def bpe_train(
         else:
             merges = _bpe_train_distributed(wc, n_merges, min_count)
         return driver_rows(spark, merges, schema)
-    finally:
-        wc.unpersist()
 
 
 def _bpe_train_inmemory(

@@ -71,7 +71,7 @@ from lovdata_pipeline_spark.operators.incremental import (
     identify_removed,
 )
 from lovdata_pipeline_spark.schemas import ENRICHED_CHUNKS_SCHEMA
-from lovdata_pipeline_spark.session import driver_rows
+from lovdata_pipeline_spark.session import cached, driver_rows
 from lovdata_pipeline_spark.sources.chunk_store import ChunkStore
 from lovdata_pipeline_spark.sources.state_store import StateStore
 
@@ -174,36 +174,33 @@ def run_pipeline(
             )
         )
         .repartition("doc_id")
-        .cache()
     )
-    chunked = decisions = None
-    try:
-        # --- decide: the fused stage, then ONE job for the outcome --------
-        chunked = chunk_and_embed_df(
-            pending.filter(~F.col("removed")),
-            config.chunk,
-            provider or mock_hash_provider(config.embedding_dims),
-            config.embedding_model,
-            at,
-            config.embed_batch_size,
-        ).cache()
-        per_doc = chunked.groupBy(F.col("document_id").alias("doc_id")).agg(
-            F.count(F.when(F.col("error").isNull(), 1)).alias("n_chunks"),
-            F.min("error").alias("error"),
+    # --- decide: the fused stage, then ONE job for the outcome --------
+    chunked = chunk_and_embed_df(
+        pending.filter(~F.col("removed")),
+        config.chunk,
+        provider or mock_hash_provider(config.embedding_dims),
+        config.embedding_model,
+        at,
+        config.embed_batch_size,
+    )
+    per_doc = chunked.groupBy(F.col("document_id").alias("doc_id")).agg(
+        F.count(F.when(F.col("error").isNull(), 1)).alias("n_chunks"),
+        F.min("error").alias("error"),
+    )
+    decisions = (
+        pending.select("doc_id", F.col("source_hash").alias("hash"), "removed", "stored")
+        .join(per_doc, "doc_id", "left")
+        .select(
+            "doc_id",
+            "hash",
+            F.coalesce("n_chunks", F.lit(0).cast("long")).alias("n_chunks"),
+            "error",
+            "removed",
+            "stored",
         )
-        decisions = (
-            pending.select("doc_id", F.col("source_hash").alias("hash"), "removed", "stored")
-            .join(per_doc, "doc_id", "left")
-            .select(
-                "doc_id",
-                "hash",
-                F.coalesce("n_chunks", F.lit(0).cast("long")).alias("n_chunks"),
-                "error",
-                "removed",
-                "stored",
-            )
-            .cache()
-        )
+    )
+    with cached(pending, chunked, decisions):
         is_ok = ~F.col("removed") & F.col("error").isNull()
         # One row per processed document stays distributed (on a first
         # load or a `force` run that is the whole corpus); only the counts,
@@ -248,9 +245,5 @@ def run_pipeline(
                 failed=driver_rows(spark, failed, "doc_id string, hash string, error string"),
                 removed=driver_rows(spark, [(d,) for d in gone], "doc_id string"),
             )
-    finally:
-        for df in (pending, chunked, decisions):
-            if df is not None:
-                df.unpersist()
 
     return PipelineResult(processed=n_ok, failed=len(failed), removed=len(gone))

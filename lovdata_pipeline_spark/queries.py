@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from lovdata_pipeline_spark.operators import decontam, dedup, similarity, textstats
 from lovdata_pipeline_spark.operators.skew import collect_bounded, spread_if_narrow
-from lovdata_pipeline_spark.session import driver_rows
+from lovdata_pipeline_spark.session import driver_rows, retain
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -78,6 +78,15 @@ def _staging_dir(prefix: str) -> str:
     d = os.path.join(_staging_root, f"{prefix}{next(_staging_seq)}")
     os.mkdir(d)
     return d
+
+
+def _release_staging() -> None:
+    """Remove every directory ``_staging_dir`` handed out, keeping the
+    root. Only for a caller that has run its last action on every frame
+    a registry row returned, such as a timing loop between reps."""
+    if _staging_root is not None:
+        for name in os.listdir(_staging_root):
+            shutil.rmtree(os.path.join(_staging_root, name), ignore_errors=True)
 
 
 def _link_stream_source(sf_dir: str, table: str, prefix: str) -> str:
@@ -1575,19 +1584,19 @@ def pretraining_pipeline(spark, sf_dir):
     keep = fp.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
     # surv feeds decontamination twice (the n-gram flag scan AND the
     # anti-join's left side) and everything upstream is regex-heavy;
-    # cache+count pins ONE evaluation of the ingest/PII/dedup prefix
-    # (same scoped-cache discipline as ngram_jaccard_pairs — released by
-    # the session's cache clearing, lineage recoverable). A cached frame
+    # retain+count pins ONE evaluation of the ingest/PII/dedup prefix
+    # (same discipline as ngram_jaccard_pairs — released by
+    # ``session.release_retained()``, lineage recoverable). A cached frame
     # reads no files, so the operators below cannot spread it: spread
     # here, while the frame still sees the single-file table.
-    surv = spread_if_narrow(fp.join(keep, ["fp", "doc_id"]).drop("fp")).cache()
+    surv = retain(spread_if_narrow(fp.join(keep, ["fp", "doc_id"]).drop("fp")))
     surv.count()
     decont = decontam.decontaminate(surv, bench, n=3)
     rates = {f"src{i}": (1.0 if i < 10 else 0.4) for i in range(20)}
     # mixed likewise fans out three ways (quality stats, packing input,
     # final source join); it keeps surv's spread layout (the anti-join
     # broadcasts its flag side, the mix is a filter)
-    mixed = stratified_sample(decont, rates, "source", "doc_id", seed="mix-v1").cache()
+    mixed = retain(stratified_sample(decont, rates, "source", "doc_id", seed="mix-v1"))
     stats = textstats.hashed_linear_quality(mixed).select(
         "doc_id", "n_tokens", "quality_logit"
     )

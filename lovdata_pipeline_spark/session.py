@@ -1,4 +1,7 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, plus the package's one
+constructor for driver-held frames (``driver_rows``) and its one cache
+policy (``cached`` for a reuse within one call, ``retain`` for a frame
+handed back cached).
 
 Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (single JVM); the same
 configuration is cluster-safe — every knob here is about letting Catalyst
@@ -8,6 +11,8 @@ and AQE do the planning rather than hand-scheduling.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, MapType, StructField, StructType
@@ -71,6 +76,60 @@ def driver_rows(spark: SparkSession, rows: list, schema) -> DataFrame:
     cols = [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow)]
     table = pa.Table.from_arrays(cols, schema=arrow)
     return spark.createDataFrame(table, schema).coalesce(1)
+
+
+@contextmanager
+def cached(*frames: DataFrame | None) -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """Persist ``frames`` (``None`` entries skipped) for the body of a
+    ``with`` and unpersist them on every exit path, an exception
+    included: the one scope for a frame reused within one call. The
+    ``as`` target pins one more frame into the same scope and returns
+    it, for frames built inside the body. It runs no action; the first
+    action in the body fills the cache. A frame ``retain``ed inside the
+    body keeps its blocks once an action has filled it, so it outlives
+    the frames it was computed from."""
+    pinned: list[DataFrame] = []
+
+    def pin(df: DataFrame) -> DataFrame:
+        pinned.append(df.cache())
+        return df
+
+    for df in frames:
+        if df is not None:
+            pin(df)
+    try:
+        yield pin
+    finally:
+        for df in reversed(pinned):
+            df.unpersist()
+
+
+#: frames handed back cached by the operators, until ``release_retained``
+_retained: list[DataFrame] = []
+
+
+def retain(df: DataFrame) -> DataFrame:
+    """``df`` persisted and registered for ``release_retained``: the one
+    way an operator hands back a cached frame. It runs no action, and no
+    operator releases what it retains; the caller does, after the final
+    action on anything derived from it."""
+    _retained.append(df.cache())
+    return df
+
+
+def release_retained() -> int:
+    """Unpersist every retained frame and return how many there were.
+    Safe to call repeatedly; call it only once the final action on every
+    frame derived from a retained one has run. After release, an action
+    on a frame derived from ``packing.global_token_offsets`` is unsafe,
+    not just slow: recomputation re-draws the range partitioning while
+    the plan still joins the driver-held offsets of the old assignment,
+    so ``tok_start`` stops being a prefix sum. Build a fresh operator
+    call for new work."""
+    n = len(_retained)
+    while _retained:
+        _retained.pop().unpersist()
+    return n
 
 
 def _open_structs(dt, top: bool = False):

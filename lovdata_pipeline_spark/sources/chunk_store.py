@@ -31,7 +31,7 @@ from pyspark.sql import types as T
 
 from lovdata_pipeline_spark.operators.indexwrite import write_json_atomic
 from lovdata_pipeline_spark.schemas import ENRICHED_CHUNKS_SCHEMA
-from lovdata_pipeline_spark.session import driver_rows
+from lovdata_pipeline_spark.session import cached, driver_rows
 
 _BUCKET = "bucket"
 _META = "_store_meta.json"
@@ -232,9 +232,7 @@ class ChunkStore:
         # and upstream is typically the whole chunk→embed Python path —
         # with a paid embedding provider a second evaluation is double the
         # API calls, not just double compute.
-        if incoming is not None:
-            incoming = incoming.cache()
-        try:
+        with cached(incoming):
             # ONE probe job: the buckets incoming writes to, plus the stored
             # hits of the drop ids. The layout invariant (every document
             # lives in bucket pmod(xxhash64(document_id), n_buckets)) prunes
@@ -257,9 +255,6 @@ class ChunkStore:
             rows = probe.groupBy(_BUCKET).agg(F.sum("_hit").alias("_n")).collect()
             self._replace(incoming, drop, sorted(r[_BUCKET] for r in rows))
             return sum(r["_n"] for r in rows)
-        finally:
-            if incoming is not None:
-                incoming.unpersist()
 
     def _replace(self, incoming: DataFrame | None, drop: list[str], touched: list[int]) -> None:
         """The one rewrite: each ``touched`` bucket is read once, loses the

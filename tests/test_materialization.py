@@ -86,6 +86,43 @@ def test_zorder_append_leaves_no_pin(spark, tmp_path):
     assert spark.read.parquet(idx).count() == 300
 
 
+def _fail_after(real):
+    """``real`` run for its side effects (its cache fills), then a raise:
+    a failure after a cached frame holds blocks."""
+
+    def fail(*args, **kwargs):
+        real(*args, **kwargs)
+        raise RuntimeError("injected failure")
+
+    return fail
+
+
+@pytest.mark.parametrize("site", ["ngram_jaccard_pairs", "global_token_offsets"])
+def test_failed_call_leaves_no_pin(spark, monkeypatch, site):
+    """An exception between a cache and its release leaves nothing
+    pinned: ``session.cached`` unpersists on every exit path. The
+    shingle cache of ``ngram_jaccard_pairs`` fails in the verify step,
+    ``global_token_offsets``' ``with_pid`` in the phase-1 collect."""
+    from lovdata_pipeline_spark.operators import dedup, packing
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta w{i % 4}") for i in range(12)], "doc_id long, text string"
+    )
+    if site == "ngram_jaccard_pairs":
+        monkeypatch.setattr(
+            dedup, "_verify_jaccard", _fail_after(lambda sh, *rest: sh.count())
+        )
+        call = lambda: dedup.ngram_jaccard_pairs(docs, threshold=0.5)  # noqa: E731
+    else:
+        monkeypatch.setattr(type(docs), "collect", _fail_after(type(docs).collect))
+        counts = docs.select("doc_id", F.length("text").alias("n_tokens"))
+        call = lambda: packing.global_token_offsets(counts)  # noqa: E731
+    before = _pinned_ids(spark)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        call()
+    assert not (_pinned_ids(spark) - before)
+
+
 def _hll_registers(spark):
     from lovdata_pipeline_spark.operators.sketches import hll_registers
 

@@ -241,14 +241,14 @@ def test_emit_token_sequences_handles_empty_and_null_docs(spark):
 def test_release_offsets_caches(spark):
     """Every packing call retains one offsets cache; release drops all
     of them (assertable via the JVM persistent-RDD map)."""
-    from lovdata_pipeline_spark.operators.packing import release_offsets_caches
+    from lovdata_pipeline_spark.session import release_retained
 
-    release_offsets_caches()  # clean slate from earlier tests
+    release_retained()  # clean slate from earlier tests
     docs = _docs_with_tokens(spark)
     pack_into_shards(docs, 512).count()
     pack_token_sequences(docs, 64).count()
-    assert release_offsets_caches() == 2
-    assert release_offsets_caches() == 0
+    assert release_retained() == 2
+    assert release_retained() == 0
 
 
 def test_temperature_thresholds_semantics():

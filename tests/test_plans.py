@@ -211,6 +211,34 @@ def test_local_checkpoint_only_cuts_iterative_lineage():
     assert not hits, hits
 
 
+def test_caches_have_one_owner():
+    """``session.cached`` scopes a frame reused within one call and
+    ``session.retain`` hands a frame back cached, so ``session.py`` is
+    the only module that calls ``cache``, ``persist`` or ``unpersist``.
+    The one exception is the distributed BPE loop, which swaps its
+    cached frame every merge round."""
+    import ast
+
+    pkg = Path(__file__).resolve().parents[1] / "lovdata_pipeline_spark"
+    allowed = {("operators/textstats.py", "_bpe_train_distributed")}
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "session.py":
+            continue
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("cache", "persist", "unpersist")
+                    and (rel, getattr(top, "name", None)) not in allowed
+                ):
+                    hits.append(f"{rel}:{node.lineno}")
+    assert not hits, hits
+
+
 #: the registry rows that stage files (stream sources, checkpoints,
 #: landings, persisted stores and indexes)
 STAGING_ROWS = (
@@ -303,3 +331,18 @@ def test_registry_rows_leave_nothing_in_tmp(tmp_path):
     assert sorted(os.listdir(tmpdir)) == []
     # the rows did stage under the temp directory before it was cleared
     assert f"root {tmpdir}{os.sep}" in out.stdout, out.stdout
+
+
+def test_bench_reps_release_staged_directories(spark):
+    """``bench.run_once`` releases after each rep, outside the timed
+    region: the retained frames, the caches and the directories the
+    rows staged, so a timing loop holds one rep's files, not all."""
+    import os
+
+    import bench
+    from lovdata_pipeline_spark import queries
+
+    for _ in range(2):
+        bench.run_once(spark, queries.QUERIES["hll_store_merged_counts"], "/root/testdata/sf0.001")
+        assert queries._staging_root is not None
+        assert os.listdir(queries._staging_root) == []

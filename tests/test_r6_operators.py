@@ -706,11 +706,9 @@ def test_perplexity_buckets_pins_score_frame(spark):
     downstream uses must hit the cache, and release frees it."""
     import re
 
-    from lovdata_pipeline_spark.operators.textstats import (
-        release_textstats_caches,
-    )
+    from lovdata_pipeline_spark.session import release_retained
 
-    release_textstats_caches()
+    release_retained()
     docs = spark.createDataFrame(
         [(i, f"w{i % 5} common word tail{i % 3}", f"s{i % 2}") for i in range(20)],
         "doc_id long, text string, source string",
@@ -723,7 +721,7 @@ def test_perplexity_buckets_pins_score_frame(spark):
     top = plan.split("InMemoryRelation")[0]
     assert len(re.findall(r"r6_ppl_docs", top)) == 0
     assert out.count() == 20
-    assert release_textstats_caches() >= 1
+    assert release_retained() >= 1
 
 
 class TestR6ReviewFixes:

@@ -434,8 +434,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from lovdata_pipeline_spark.operators.packing import release_offsets_caches
-    from lovdata_pipeline_spark.operators.textstats import release_textstats_caches
+    from bench import release_caches
     from lovdata_pipeline_spark.queries import QUERIES
     from lovdata_pipeline_spark.session import get_spark
 
@@ -475,9 +474,7 @@ def main() -> None:
                 t0 = time.time()
                 fn(spark, d).write.format("noop").mode("overwrite").save()
                 samples.append(time.time() - t0)
-                release_offsets_caches()
-                release_textstats_caches()
-                spark.catalog.clearCache()
+                release_caches(spark)
             samples.sort()
             per_sf[label] = round(samples[len(samples) // 2], 3)
             print(f"  {name} @ {label}: {per_sf[label]}s (n={counts[label][table]})",
